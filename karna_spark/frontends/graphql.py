@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 try:  # public graphql-core; gated so the engine imports without it
+    from graphql import GraphQLSyntaxError
     from graphql import parse as gql_parse
     from graphql.language import ast as gql_ast
 
@@ -604,7 +605,10 @@ def translate(
         raise GraphQLError("graphql-core not available in this environment")
     if rel_schema is None:
         rel_schema = REL_SCHEMA
-    doc = gql_parse(query_text)
+    try:
+        doc = gql_parse(query_text)
+    except GraphQLSyntaxError as e:
+        raise GraphQLError(str(e)) from e
     ops = [d for d in doc.definitions if isinstance(d, gql_ast.OperationDefinitionNode)]
     if len(ops) != 1 or ops[0].operation.value not in ("query", "mutation"):
         raise GraphQLError("expected exactly one query or mutation operation")

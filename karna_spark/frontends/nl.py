@@ -182,10 +182,13 @@ def vocabulary_from_session(spark: SparkSession, metastore=None) -> Vocabulary:
     session catalog (columns from plan analysis — no Spark job) and FK
     edges declared in the metastore's DatasetRecords."""
     vocab = _fixture_vocab()
-    try:
-        names = [t.name for t in spark.catalog.listTables()]
-    except Exception:
-        names = []
+    # Read the session catalog's metadata directly: the same names, in
+    # the same order, as ``spark.catalog.listTables()`` (current
+    # database, then local temp views). The public call builds a
+    # Dataset[Table] and reads it back through five Spark jobs.
+    jcat = spark._jsparkSession.sessionState().catalog()
+    idents = jcat.listTables(jcat.getCurrentDatabase())
+    names = [idents.apply(i).table() for i in range(idents.length())]
     for name in names:
         if name.lower() in vocab.table_columns:
             continue

@@ -134,7 +134,7 @@ _BATCH_TOP = 64
 
 
 def _accept_batch(
-    top: list, cutoff: int, min_pair_freq: int, budget: int
+    top: list, cutoff: int, min_pair_freq: int, budget: int, learned: set[str]
 ) -> tuple[list[tuple[str, str, int]], bool]:
     """Greedy prefix of the rank-ordered top pairs that PROVABLY
     commutes with sequential BPE (r12 verdict item 1: batch k
@@ -169,6 +169,14 @@ def _accept_batch(
     and the candidate already outranks them in the original total
     order, which is also the tie-break order.
 
+    That last claim needs the merged string to be NEW. Every multi-
+    character symbol was made by an earlier merge, so when a+b is in
+    ``learned`` (the merges applied before this batch) or was already
+    made by this batch, the merge adds occurrences of an existing
+    symbol, and old pairs next to that symbol GAIN count — e.g. with
+    'abc' live, merging ('a', 'bc') raises ('abc', ·). The scan accepts
+    such a merge and then stops.
+
     The scan stops at the first candidate that fails (its post-merge
     count is unknowable from this collect); a VALIDATED candidate
     below ``min_pair_freq`` is the true argmax at that point, so
@@ -196,6 +204,8 @@ def _accept_batch(
         if c < min_pair_freq:
             return accepted, True
         accepted.append((a, b, c))
+        if a + b in learned or a + b in merged_strs:
+            break
         lefts.add(a)
         rights.add(b)
         merged_strs.add(a + b)
@@ -283,7 +293,8 @@ def learn_bpe(
                 break
             cutoff = int(top[-1]["cnt"]) if len(top) == _BATCH_TOP else 0
             accepted, done = _accept_batch(
-                top, cutoff, min_pair_freq, num_merges - len(merges)
+                top, cutoff, min_pair_freq, num_merges - len(merges),
+                {m[3] for m in merges},
             )
             if not accepted:
                 break

@@ -613,15 +613,12 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     classical way (unnest → count → row_number). Cross-row sums are
     integer (round(x*1e4) BIGINT) so the hash is partition-order
     independent."""
-    from karna_spark.operators.sizing import spread_scan
     from karna_spark.operators.text import repetition_features
 
-    # r13 (verdict item 8): the per-doc sorted-word fold is the
-    # compute; a single-row-group fixture scan ran it on one core
-    # (8-core/32-core ratio was 1.28 — no parallelism at all).
-    # Project to the two used columns first so the spread exchange
-    # moves only what the fold needs (guide §2.3).
-    d = spread_scan(table(spark, sf_dir, "documents").select("lang", "text"))
+    # No spread_scan: spreading the single-row-group fixture scan saved
+    # only 0.68 → 0.56 s and adds a second Exchange to a plan whose one
+    # shuffle is the language rollup (test_repetition_filter_single_shuffle).
+    d = table(spark, sf_dir, "documents")
     f = repetition_features(F.col("text"))
     feat = d.select(
         "lang",

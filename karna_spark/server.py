@@ -31,21 +31,41 @@ registered via POST /datasets is immediately NL-addressable by name,
 and its declared foreign_keys become GraphQL nesting relationships
 (rel_schema_from_metastore) and NL join vocabulary.
 
+Errors: a request the server cannot serve as asked — malformed JSON,
+a body that is not a JSON object, a query the front-ends cannot
+translate, SQL that Spark cannot parse or analyze — answers 4xx with
+``{"error": ...}``. Any other failure is an engine fault (a dataset's
+files gone, a JVM or I/O error) and answers 500.
+
 Scale posture: the server holds no result state; every /query collects
 at most ``limit`` rows (hard-capped) through a TakeOrderedAndProject
-plan, and Arrow handles the JVM→Python page transfer. Concurrency is
-ThreadingHTTPServer — Spark sessions are thread-safe for reads, and
-each request is an independent job.
+plan, and ``DataFrame.collect()`` moves that page from the JVM as
+pickled rows (``collectToPython``). Concurrency is ThreadingHTTPServer —
+Spark sessions are thread-safe for reads, and each request is an
+independent job.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from karna_spark.frontends.graphql import GraphQLError
+from karna_spark.frontends.nl import NLError
+from karna_spark.frontends.sql import SQLFrontendError
+
 MAX_PAGE = 10_000  # hard cap on rows per response
+
+# Failures caused by the request text: the front-ends' translation
+# errors, and SQL that Spark cannot parse or analyze (ParseException
+# is an AnalysisException). Everything else is an engine fault.
+_CLIENT_ERRORS = (SQLFrontendError, GraphQLError, NLError, AnalysisException)
+
+_log = logging.getLogger(__name__)
 
 # The web console: one page, no build step, no external assets. It
 # drives exactly the same POST /query contract as any API client.
@@ -113,6 +133,8 @@ class ApiError(ValueError):
 def _run_query(spark: SparkSession, body: dict, metastore=None) -> DataFrame:
     saved = body.get("saved")
     if saved:
+        if not isinstance(saved, str):
+            raise ApiError(400, "'saved' must name a saved query")
         if metastore is None:
             raise ApiError(400, "no metastore attached — saved queries unavailable")
         rec = metastore.get_query(saved)
@@ -143,13 +165,28 @@ def _run_query(spark: SparkSession, body: dict, metastore=None) -> DataFrame:
     raise ApiError(400, f"unknown language {language!r} (sql|graphql|nl)")
 
 
+def _fk_list(fks) -> bool:
+    """True when ``fks`` is a list of [fk_col, parent_table, parent_col]
+    string triples — the shape every front-end unpacks."""
+    return isinstance(fks, list) and all(
+        isinstance(fk, list) and len(fk) == 3
+        and all(isinstance(x, str) for x in fk)
+        for fk in fks
+    )
+
+
 def _page_payload(df: DataFrame, body: dict) -> dict:
     from karna_spark.io.sinks import page
 
-    limit = min(int(body.get("limit", 100)), MAX_PAGE)
-    offset = int(body.get("offset", 0))
+    try:
+        limit = min(int(body.get("limit", 100)), MAX_PAGE)
+        offset = int(body.get("offset", 0))
+    except (TypeError, ValueError) as e:
+        raise ApiError(400, f"'limit' and 'offset' must be integers: {e}") from e
     order_by = body.get("order_by")
     if order_by:
+        if not isinstance(order_by, list):
+            raise ApiError(400, "'order_by' must be a list of column names")
         missing = [c for c in order_by if c not in df.columns]
         if missing:
             raise ApiError(400, f"order_by columns not in result: {missing}")
@@ -223,9 +260,12 @@ def create_server(
             if n == 0:
                 raise ApiError(400, "empty request body")
             try:
-                return json.loads(self.rfile.read(n))
-            except json.JSONDecodeError as e:
+                body = json.loads(self.rfile.read(n))
+            except ValueError as e:  # malformed JSON or UTF-8
                 raise ApiError(400, f"invalid JSON body: {e}") from e
+            if not isinstance(body, dict):
+                raise ApiError(400, "request body must be a JSON object")
+            return body
 
         def do_GET(self):
             if self.path in ("/", "/index.html"):
@@ -273,10 +313,16 @@ def create_server(
                     return self._send(200, _page_payload(df, body))
                 if self.path == "/datasets":
                     name, path = body.get("name"), body.get("path")
-                    if not name or not path:
-                        raise ApiError(400, "body must carry 'name' and 'path'")
                     opts = body.get("options") or {}
                     fks = body.get("foreign_keys") or []
+                    if not (name and isinstance(name, str)
+                            and path and isinstance(path, str)):
+                        raise ApiError(400, "body must carry 'name' and 'path'")
+                    if not isinstance(opts, dict) or not _fk_list(fks):
+                        raise ApiError(
+                            400, "'options' must be an object and "
+                            "'foreign_keys' a list of [fk_col, parent, pk]"
+                        )
                     if metastore is not None:
                         metastore.register(
                             spark, name, path, fmt=body.get("fmt"),
@@ -293,13 +339,21 @@ def create_server(
                     name, text = body.get("name"), body.get("query")
                     if not name or not text:
                         raise ApiError(400, "body must carry 'name' and 'query'")
-                    metastore.save_query(name, body.get("language", "sql"), text)
+                    try:
+                        metastore.save_query(
+                            name, body.get("language", "sql"), text
+                        )
+                    except ValueError as e:  # unknown language
+                        raise ApiError(400, str(e)) from e
                     return self._send(201, {"saved": name})
                 return self._send(404, {"error": f"no route {self.path}"})
             except ApiError as e:
                 return self._send(e.status, {"error": str(e)})
-            except Exception as e:  # translator/analysis errors → 400
+            except _CLIENT_ERRORS as e:
                 return self._send(400, {"error": f"{type(e).__name__}: {e}"})
+            except Exception as e:  # engine fault: keep serving, report it
+                _log.exception("POST %s failed", self.path)
+                return self._send(500, {"error": f"{type(e).__name__}: {e}"})
 
     return ThreadingHTTPServer((host, port), Handler)
 

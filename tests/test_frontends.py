@@ -347,6 +347,47 @@ def test_nl_over_registered_dataset(fixtures, tmp_path):
         fixtures.catalog.dropTempView("taxi_rides")
 
 
+def _jobs_seen(spark) -> int:
+    """Jobs in Spark's in-process status store, once every event
+    already posted has reached it (the listener bus is asynchronous)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).size()
+
+
+def test_nl_ask_runs_no_spark_job(fixtures):
+    """Translating a question reads only catalog metadata and plan
+    analysis: ``ask`` returns a lazy DataFrame without starting a job
+    (listing tables through ``spark.catalog.listTables()`` cost five)."""
+    from karna_spark.frontends.nl import ask
+
+    before = _jobs_seen(fixtures)
+    df = ask(fixtures, "total quantity by nation name in lineitem")
+    assert _jobs_seen(fixtures) == before
+    assert df.columns == ["n_name", "sum_l_quantity"]
+
+
+def test_nl_vocabulary_lists_same_tables_as_catalog(fixtures):
+    """The vocabulary's table listing names exactly what the public
+    catalog API lists — temp views and persistent tables alike."""
+    from karna_spark.frontends.nl import TABLE_COLUMNS, vocabulary_from_session
+
+    fixtures.range(3).createOrReplaceTempView("nl_extra_view")
+    fixtures.sql("DROP TABLE IF EXISTS nl_extra_table")
+    fixtures.range(3).write.saveAsTable("nl_extra_table")
+    try:
+        listed = {t.name for t in fixtures.catalog.listTables()}
+        assert {"nl_extra_view", "nl_extra_table"} <= listed
+        vocab = vocabulary_from_session(fixtures)
+        assert set(vocab.table_columns) == set(TABLE_COLUMNS) | {
+            n.lower() for n in listed
+        }
+        assert vocab.table_columns["nl_extra_table"] == ("id",)
+    finally:
+        fixtures.catalog.dropTempView("nl_extra_view")
+        fixtures.sql("DROP TABLE IF EXISTS nl_extra_table")
+
+
 def test_frontends_over_metastore_fk_edges(fixtures, tmp_path):
     """Datasets registered with declared FK edges join via NL and nest
     via GraphQL — the reference promises all three surfaces over

@@ -1396,7 +1396,8 @@ def test_bpe_batched_merges_replay_sequential_reference():
                 break
             cutoff = top[-1]["cnt"] if len(top) == _BATCH_TOP else 0
             accepted, done = _accept_batch(
-                top, cutoff, min_pair_freq, num_merges - len(merges)
+                top, cutoff, min_pair_freq, num_merges - len(merges),
+                {m[3] for m in merges},
             )
             if not accepted:
                 break
@@ -1446,9 +1447,9 @@ def test_bpe_accept_batch_budget_and_done():
         {"a": "c", "b": "d", "cnt": 50},
         {"a": "e", "b": "f", "cnt": 1},
     ]
-    acc, done = _accept_batch(top, 0, 2, budget=1)
+    acc, done = _accept_batch(top, 0, 2, budget=1, learned=set())
     assert acc == [("a", "b", 100)] and not done
-    acc, done = _accept_batch(top, 0, 2, budget=10)
+    acc, done = _accept_batch(top, 0, 2, budget=10, learned=set())
     # ('e','f') is disjoint and beats the (·,a)/(b,·)/(·,c)/(d,·)
     # bounds (none collected, cutoff 0) — a validated argmax below
     # min_pair_freq, so learning is DONE
@@ -1458,8 +1459,33 @@ def test_bpe_accept_batch_budget_and_done():
         {"a": "a", "b": "b", "cnt": 100},
         {"a": "ab", "b": "c", "cnt": 90},
     ]
-    acc, done = _accept_batch(top2, 0, 2, budget=10)
+    acc, done = _accept_batch(top2, 0, 2, budget=10, learned=set())
     assert acc == [("a", "b", 100)] and not done
+
+
+def test_bpe_accept_batch_stops_at_existing_symbol():
+    """A merge whose result is an EXISTING symbol adds occurrences of
+    it, so old pairs next to that symbol gain count and the batch's
+    count-only-falls argument no longer holds: the batch ends after
+    such a merge. With 'abc' learned, ('a', 'bc') re-makes 'abc';
+    sequential BPE can then rank a pair next to 'abc' above ('e', 'b')."""
+    from karna_spark.operators.bpe import _accept_batch
+
+    top = [
+        {"a": "a", "b": "bc", "cnt": 33},
+        {"a": "e", "b": "b", "cnt": 31},
+    ]
+    acc, done = _accept_batch(top, 0, 2, budget=10, learned={"abc"})
+    assert acc == [("a", "bc", 33)] and not done
+    # within one batch: ('ab', 'c') makes 'abc', then ('a', 'bc')
+    # re-makes it and ends the batch
+    top3 = [
+        {"a": "ab", "b": "c", "cnt": 40},
+        {"a": "a", "b": "bc", "cnt": 33},
+        {"a": "e", "b": "f", "cnt": 31},
+    ]
+    acc, done = _accept_batch(top3, 0, 2, budget=10, learned=set())
+    assert acc == [("ab", "c", 40), ("a", "bc", 33)] and not done
 
 
 def test_bpe_sql_fold_escapes_symbols(spark):

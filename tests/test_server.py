@@ -186,6 +186,44 @@ def test_errors_are_json(server):
     assert status == 400 and "order_by" in body["error"]
     status, body = _post(server, "/nope", {"x": 1})
     assert status == 404
+    status, body = _post(server, "/query", ["SELECT 1"])
+    assert status == 400 and "JSON object" in body["error"]
+    status, body = _post(
+        server, "/query", {"language": "graphql", "query": "query { region {"}
+    )
+    assert status == 400 and body["error"].startswith("GraphQLError")
+    status, body = _post(server, "/query", {"query": "SELECT nope FROM region"})
+    assert status == 400 and "AnalysisException" in body["error"]
+    status, body = _post(server, "/query", {"query": "SELEC 1"})
+    assert status == 400 and "ParseException" in body["error"]
+    status, body = _post(server, "/query", {"query": "SELECT 1", "limit": "x"})
+    assert status == 400 and "limit" in body["error"]
+    status, body = _post(
+        server,
+        "/datasets",
+        {"name": "bad_fk", "path": SF_SMOKE, "foreign_keys": [["only_col"]]},
+    )
+    assert status == 400 and "foreign_keys" in body["error"]
+
+
+def test_engine_fault_is_500(server, spark, tmp_path):
+    """A failure that is not the request's fault — here a registered
+    dataset whose file was deleted after registration — answers 500,
+    not 400."""
+    path = tmp_path / "vanishing.csv"
+    path.write_text("k,v\n1,a\n2,b\n")
+    status, _ = _post(
+        server, "/datasets", {"name": "vanishing", "path": str(path)}
+    )
+    assert status == 201
+    path.unlink()
+    try:
+        status, body = _post(
+            server, "/query", {"query": "SELECT * FROM vanishing"}
+        )
+        assert status == 500 and "FILE_NOT_EXIST" in body["error"]
+    finally:
+        spark.catalog.dropTempView("vanishing")
 
 
 def test_index_serves_console(server):

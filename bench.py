@@ -190,12 +190,12 @@ def pyloop_probe(n: int = 4_000_000) -> float:
 
 def run_bpe_anchor(spark, sf_dir: str) -> tuple[float, dict]:
     """Tokenizer-depth BPE anchor: request 200 merges from the sf
-    corpus (the r7 query runs a toy 20). Each merge is one distributed
-    pair-count aggregate over the |vocab| frame + a 1-row argmax
-    collect, so this measures per-iteration cost at real tokenizer
-    scale. Timed once (no cold/warm split: the first merges ARE the
-    warmup; a second 200-job pass would double bench wall-clock for no
-    signal).
+    corpus (the registry query learns 8). One distributed word count
+    feeds one Arrow task that learns every merge with incrementally
+    maintained pair counts, so this measures the whole learner at
+    real tokenizer depth: the count job, the Python worker and the
+    per-merge update cost. Timed once (no cold/warm split, so a cold
+    call also pays the Python worker start).
 
     The corpus may EXHAUST before 200 merges (sf0.1 runs dry at ~107 —
     every remaining pair is unique), so total seconds alone is not

@@ -974,16 +974,14 @@ class SnapshotStore:
         3 extra delta-source passes at 100 TB. Returns
         ``(df, release)``; ``release()`` unpersists only what this
         call persisted (an already-persisted caller frame is left
-        alone, storage decisions stay with the caller)."""
+        alone, storage decisions stay with the caller). A persist
+        failure fails the verb."""
         from pyspark.storagelevel import StorageLevel
 
-        try:
-            lvl = df.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                return df, (lambda: None)
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        except Exception:
+        lvl = df.storageLevel
+        if lvl.useMemory or lvl.useDisk:
             return df, (lambda: None)
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
         return df, (lambda: df.unpersist())
 
     @staticmethod

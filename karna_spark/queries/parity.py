@@ -96,9 +96,3 @@ def sql_davg(expr: str, alias: str, ndigits: int = 4) -> str:
         f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
         f" / COUNT({expr}), {ndigits}) AS {alias}"
     )
-
-
-# literal_frame moved to karna_spark.functions.local_frame (a layer
-# operators may import without inverting the queries->operators
-# direction — r12 ADVICE); re-exported here for existing call sites.
-from karna_spark.functions.local_frame import literal_frame  # noqa: F401,E402

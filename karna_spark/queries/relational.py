@@ -17,8 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from karna_spark.functions.local_frame import literal_frame
 from karna_spark.queries.parity import (
-    davg, dec, dsum, literal_frame, sql_davg, sql_dsum,
+    davg, dec, dsum, sql_davg, sql_dsum,
 )
 from karna_spark.queries.registry import register_query, table
 

@@ -5,8 +5,6 @@ F9, §2.8 U1-U3).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +25,7 @@ from karna_spark.operators.text import (
     token_counts,
 )
 from karna_spark.operators.sizing import spread_scan
-from karna_spark.queries.parity import literal_frame
+from karna_spark.functions.local_frame import literal_frame
 from karna_spark.queries.registry import register_query, table
 
 
@@ -1178,15 +1176,6 @@ def text_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_merge_count() -> int:
-    """Merge-count knob for the BPE queries: 20 keeps the per-round
-    driver/pytest passes fast; production training and the 200-merge
-    bench anchor raise it via KARNA_BPE_MERGES (each merge costs one
-    distributed aggregate over the |vocab| frame + a 1-row collect,
-    so the knob scales cost linearly and nothing else changes)."""
-    return int(os.environ.get("KARNA_BPE_MERGES", "20"))
-
-
 def _bpe_cte_oracle(k: int) -> str:
     """DuckDB chained-CTE replay of ``learn_bpe`` at ``k`` merges: the
     same word-frequency table, the same deterministic argmax
@@ -1265,126 +1254,38 @@ _BPE_EXACT_K = 8
     tags="F9 F22",
 )
 def text_bpe_merges_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F22, hash-certified (r10 — upgrades the retired rows-only
-    text_bpe_merges/text_bpe_token_stats pair): byte-pair-encoding
-    merge learning (Sennrich 2016) at k=8 merges, certified against a
-    DuckDB chained-CTE replay that re-derives every merge
-    independently — pair counts, the deterministic argmax (count desc
-    then lexicographic), the greedy left-to-right fold, AND the
-    applied tokenization (total_words / total_bpe_tokens after all 8
-    merges ride on every row), so a wrong fold, tie-break, or count
-    anywhere in the loop breaks the hash. Engine shape (operators/
-    bpe.py:learn_bpe): one corpus pass builds the (word, freq) frame;
-    each merge is ONE distributed pair-count aggregate over the
-    |vocab| frame plus a 1-row argmax collect; the merge is a JVM-side
-    F.aggregate fold — |vocab|-scale forever, corpus-scale once,
-    unchanged at 100 TB. k is a literal (not the env knob): the oracle
-    text must replay exactly this many merges."""
-    from karna_spark.operators.bpe import learn_bpe, word_frequencies
+    """F22, hash-certified: byte-pair-encoding merge learning
+    (Sennrich 2016) at k=8 merges, certified against a DuckDB
+    chained-CTE replay that re-derives every merge independently —
+    pair counts, the deterministic argmax (count desc then
+    lexicographic), the greedy left-to-right fold, AND the applied
+    tokenization (total_words / total_bpe_tokens after all 8 merges
+    ride on every row), so a wrong fold, tie-break, or count anywhere
+    in the loop breaks the hash. Engine shape (operators/bpe.py:
+    learn_bpe): one distributed corpus pass builds the (word, freq)
+    frame, ONE Arrow task over that |vocab|-scale frame learns all k
+    merges exactly with incrementally maintained pair counts, and the
+    totals come from replaying the merges over the vocabulary in one
+    narrow Arrow map — corpus-scale once, |vocab|-scale after. k is a
+    literal: the oracle text must replay exactly this many merges."""
+    from karna_spark.operators.bpe import (
+        MERGES_SCHEMA,
+        learn_bpe,
+        word_frequencies,
+    )
 
     wf = word_frequencies(table(spark, sf_dir, "documents"))
     merges, syms = learn_bpe(
         wf, num_merges=_BPE_EXACT_K, return_symbols=True
     )
-    mdf = literal_frame(
-        spark,
-        merges,
-        "merge_idx int, left_sym string, right_sym string, "
-        "merged string, pair_freq bigint",
-    )
+    mdf = literal_frame(spark, merges, MERGES_SCHEMA)
     stats = syms.agg(
         F.sum("freq").cast("bigint").alias("total_words"),
         F.sum(F.col("freq") * F.size("syms"))
         .cast("bigint")
         .alias("total_bpe_tokens"),
     )
-    out = mdf.crossJoin(F.broadcast(stats))
-    out._karna_persisted = getattr(syms, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
-
-
-def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): was
-    rows-only; superseded by the HASH-CERTIFIED ``text_bpe_merges_exact``
-    (k=8 chained-CTE oracle replay). Builder stays for pytest
-    differential + env-knob production use.
-
-    F22: REAL byte-pair-encoding merge learning over the corpus
-    (Sennrich 2016) — one corpus pass builds the word-frequency table,
-    then each merge is one distributed pair-count aggregate over the
-    |vocab| frame plus a 1-row argmax collect; the merge itself is a
-    JVM-side greedy fold (operators/bpe.py). Deterministic at any
-    parallelism (count-desc + lexicographic tie-break), so the merge
-    table is stable output. Iterative and therefore not
-    SQL-expressible — rows-only driver check; the differential gate is
-    tests/test_operators.py::test_learn_bpe_matches_reference (exact
-    match against an independent pure-Python implementation, the CC
-    vs union-find pattern)."""
-    from karna_spark.operators.bpe import learn_bpe, word_frequencies
-
-    wf = word_frequencies(table(spark, sf_dir, "documents"))
-    merges = learn_bpe(wf, num_merges=_bpe_merge_count())
-    return literal_frame(
-        spark,
-        merges,
-        "merge_idx int, left_sym string, right_sym string, "
-        "merged string, pair_freq bigint",
-    )
-
-
-def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): was
-    rows-only; the applied-tokenization totals are hash-certified
-    inside ``text_bpe_merges_exact`` now. Builder stays for tests.
-
-    F22 applied: tokenize the corpus with the LEARNED BPE merges —
-    the word→token-count lookup is the trainer's final symbol frame
-    (every vocabulary word's tokenization falls out of training for
-    free), so corpus tokenization is one (lang, word) aggregate joined
-    to the |vocab| lookup: no per-document merge replay, no Python in
-    the path. Emits per-language totals and tokens-per-word — the
-    fertility metric tokenizer work optimizes. Deterministic (the
-    merge table is), rows-only like the trainer."""
-    from karna_spark.operators.bpe import learn_bpe, word_frequencies
-    from karna_spark.operators.text import words
-
-    docs = table(spark, sf_dir, "documents")
-    _, syms = learn_bpe(
-        word_frequencies(docs), num_merges=_bpe_merge_count(),
-        return_symbols=True,
-    )
-    tok_map = syms.select("w", F.size("syms").alias("n_tokens"))
-    per_lang = (
-        docs.select(
-            "lang",
-            F.explode(words(F.lower(F.trim(F.col("text"))))).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    out = (
-        per_lang.join(tok_map, "w")
-        .groupBy("lang")
-        .agg(
-            F.sum("c").cast("bigint").alias("total_words"),
-            F.sum(F.col("c") * F.col("n_tokens"))
-            .cast("bigint")
-            .alias("total_bpe_tokens"),
-        )
-        .select(
-            "lang",
-            "total_words",
-            "total_bpe_tokens",
-            F.round(
-                F.col("total_bpe_tokens").cast("double")
-                / F.col("total_words"),
-                6,
-            ).alias("avg_tokens_per_word"),
-        )
-    )
-    out._karna_persisted = getattr(syms, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
+    return mdf.crossJoin(F.broadcast(stats))
 
 
 @register_query(

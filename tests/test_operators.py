@@ -719,9 +719,9 @@ def test_semdedup_assign_is_argmax(spark):
 
 # ------------------------------------------------------------- BPE
 def test_learn_bpe_matches_reference(spark):
-    """Distributed BPE merge learning == the pure-Python reference on
-    the same word-frequency table (the union-find-vs-CC differential
-    pattern): identical merge order, pairs, and counts."""
+    """learn_bpe (one word count, one learner task) == the pure-Python
+    reference on the same word-frequency table (the union-find-vs-CC
+    differential pattern): identical merge order, pairs, and counts."""
     from karna_spark.operators.bpe import (
         learn_bpe,
         reference_bpe,
@@ -742,7 +742,8 @@ def test_learn_bpe_matches_reference_deep(spark):
     """r8 depth: the differential must stay EXACT at tokenizer-scale
     merge counts (the bench anchor runs 200; 60 here keeps the pure-
     Python replay fast) — late merges exercise long-chain symbols,
-    checkpoint boundaries, and tie-breaks the first dozen never hit."""
+    long runs of incremental count updates, and tie-breaks the first
+    dozen never hit."""
     from karna_spark.operators.bpe import (
         learn_bpe,
         reference_bpe,
@@ -756,7 +757,7 @@ def test_learn_bpe_matches_reference_deep(spark):
     expected = reference_bpe(freqs, num_merges=60)
     got = learn_bpe(wf, num_merges=60)
     assert got == expected
-    assert len(got) >= 40  # deep enough to cross checkpoint boundaries
+    assert len(got) >= 40  # deep enough for long-chain symbols
 
 
 def test_mixture_sampling_matches_independent_python(spark):
@@ -1356,68 +1357,20 @@ def test_sign_sketch_words_bit_exact(spark):
     assert (row.w0, row.w1) == (w0, w1)
 
 
-def test_bpe_batched_merges_replay_sequential_reference():
-    """r13 optimization: learn_bpe applies a BATCH of provably-
-    commuting merges per distributed count (see _accept_batch). This
-    pure-Python twin of the batched loop — same counts, same top-K,
-    same _accept_batch, same greedy application — must reproduce
-    reference_bpe EXACTLY on adversarial random corpora: tiny
-    alphabets force overlapping/chained/self-pairs ((a,a)), count
-    ties exercise the lexicographic tie-break, and string-colliding
-    merges (('a','bc') vs ('ab','c')) exercise the touched-symbol
-    guard. No Spark involved: this certifies the batching MATH; the
-    Spark differentials above certify the fold application."""
+def test_bpe_incremental_learner_matches_reference():
+    """learn_bpe's learner keeps pair counts up to date incrementally
+    (only the words holding the winning pair are re-counted). It must
+    reproduce reference_bpe EXACTLY on adversarial random corpora:
+    tiny alphabets force overlapping/chained/self-pairs ((a,a)) and
+    stale index entries, and count ties exercise the lexicographic
+    tie-break. No Spark involved: this certifies the learner; the
+    Spark differentials certify the task wiring around it."""
     import random
 
-    from karna_spark.operators.bpe import (
-        _BATCH_TOP,
-        END,
-        _accept_batch,
-        reference_bpe,
-    )
-
-    def py_batched(freqs, num_merges, min_pair_freq=2):
-        vocab = {tuple(list(w) + [END]): f for w, f in freqs.items()}
-        merges = []
-        done = False
-        while len(merges) < num_merges and not done:
-            counts: dict[tuple[str, str], int] = {}
-            for syms, f in vocab.items():
-                for i in range(len(syms) - 1):
-                    p = (syms[i], syms[i + 1])
-                    counts[p] = counts.get(p, 0) + f
-            if not counts:
-                break
-            ranked = sorted(
-                counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:_BATCH_TOP]
-            top = [{"a": a, "b": b, "cnt": c} for (a, b), c in ranked]
-            if top[0]["cnt"] < min_pair_freq:
-                break
-            cutoff = top[-1]["cnt"] if len(top) == _BATCH_TOP else 0
-            accepted, done = _accept_batch(
-                top, cutoff, min_pair_freq, num_merges - len(merges),
-                {m[3] for m in merges},
-            )
-            if not accepted:
-                break
-            for a, b, c in accepted:
-                merges.append((len(merges), a, b, a + b, c))
-                new_vocab: dict[tuple[str, ...], int] = {}
-                for syms, f in vocab.items():
-                    out: list[str] = []
-                    for x in syms:
-                        if out and out[-1] == a and x == b:
-                            out[-1] = a + b
-                        else:
-                            out.append(x)
-                    key = tuple(out)
-                    new_vocab[key] = new_vocab.get(key, 0) + f
-                vocab = new_vocab
-        return merges
+    from karna_spark.operators.bpe import learn_merges, reference_bpe
 
     rng = random.Random(20260818)
-    n_batched_gt1 = 0
+    n_multi = 0
     for trial in range(150):
         alpha = "abcde"[: rng.randint(2, 5)]
         words = {
@@ -1426,74 +1379,105 @@ def test_bpe_batched_merges_replay_sequential_reference():
             ): rng.randint(1, 9)
             for _ in range(rng.randint(10, 80))
         }
-        want = reference_bpe(words, num_merges=30)
-        got = py_batched(words, num_merges=30)
-        assert got == want, f"trial {trial} diverged: {got} != {want}"
-        if len(got) > 1:
-            n_batched_gt1 += 1
+        for min_pair_freq in (1, 2):
+            want = reference_bpe(
+                words, num_merges=30, min_pair_freq=min_pair_freq
+            )
+            got = learn_merges(words.items(), 30, min_pair_freq)
+            assert got == want, f"trial {trial} diverged: {got} != {want}"
+            if len(got) > 1:
+                n_multi += 1
     # the generator must actually exercise multi-merge learning
-    assert n_batched_gt1 > 100
+    assert n_multi > 200
 
 
-def test_bpe_accept_batch_budget_and_done():
-    """_accept_batch caps accepted merges at the remaining budget and
-    reports done=True only when a VALIDATED argmax falls below
-    min_pair_freq."""
-    from karna_spark.operators.bpe import _accept_batch
+def _bpe_corpus_wf(spark, n_docs):
+    from karna_spark.operators.bpe import word_frequencies
+    from karna_spark.queries.registry import table
+    from tests.conftest import SF_SMOKE
 
-    # two independent pairs, far apart, no interaction
-    top = [
-        {"a": "a", "b": "b", "cnt": 100},
-        {"a": "c", "b": "d", "cnt": 50},
-        {"a": "e", "b": "f", "cnt": 1},
-    ]
-    acc, done = _accept_batch(top, 0, 2, budget=1, learned=set())
-    assert acc == [("a", "b", 100)] and not done
-    acc, done = _accept_batch(top, 0, 2, budget=10, learned=set())
-    # ('e','f') is disjoint and beats the (·,a)/(b,·)/(·,c)/(d,·)
-    # bounds (none collected, cutoff 0) — a validated argmax below
-    # min_pair_freq, so learning is DONE
-    assert acc == [("a", "b", 100), ("c", "d", 50)] and done
-    # an interacting second pair stops the batch without done
-    top2 = [
-        {"a": "a", "b": "b", "cnt": 100},
-        {"a": "ab", "b": "c", "cnt": 90},
-    ]
-    acc, done = _accept_batch(top2, 0, 2, budget=10, learned=set())
-    assert acc == [("a", "b", 100)] and not done
+    docs = table(spark, SF_SMOKE, "documents").limit(n_docs)
+    return word_frequencies(docs)
 
 
-def test_bpe_accept_batch_stops_at_existing_symbol():
-    """A merge whose result is an EXISTING symbol adds occurrences of
-    it, so old pairs next to that symbol gain count and the batch's
-    count-only-falls argument no longer holds: the batch ends after
-    such a merge. With 'abc' learned, ('a', 'bc') re-makes 'abc';
-    sequential BPE can then rank a pair next to 'abc' above ('e', 'b')."""
-    from karna_spark.operators.bpe import _accept_batch
+def test_learn_bpe_partitioning_invariant(spark):
+    """The learner sees the whole vocabulary in ONE task (coalesce(1)):
+    a vocabulary spread over 8 partitions yields the same merges."""
+    from karna_spark.operators.bpe import learn_bpe, reference_bpe
 
-    top = [
-        {"a": "a", "b": "bc", "cnt": 33},
-        {"a": "e", "b": "b", "cnt": 31},
-    ]
-    acc, done = _accept_batch(top, 0, 2, budget=10, learned={"abc"})
-    assert acc == [("a", "bc", 33)] and not done
-    # within one batch: ('ab', 'c') makes 'abc', then ('a', 'bc')
-    # re-makes it and ends the batch
-    top3 = [
-        {"a": "ab", "b": "c", "cnt": 40},
-        {"a": "a", "b": "bc", "cnt": 33},
-        {"a": "e", "b": "f", "cnt": 31},
-    ]
-    acc, done = _accept_batch(top3, 0, 2, budget=10, learned=set())
-    assert acc == [("ab", "c", 40), ("a", "bc", 33)] and not done
+    wf = _bpe_corpus_wf(spark, 120)
+    freqs = {r["w"]: r["freq"] for r in wf.collect()}
+    got = learn_bpe(wf.repartition(8), num_merges=12)
+    assert got == reference_bpe(freqs, num_merges=12)
+    assert len(got) > 0
+
+
+def test_learn_bpe_empty_vocabulary(spark):
+    from karna_spark.operators.bpe import learn_bpe
+
+    wf = spark.createDataFrame([], "w string, freq bigint")
+    assert learn_bpe(wf, num_merges=5) == []
+    merges, syms = learn_bpe(wf, num_merges=5, return_symbols=True)
+    assert merges == [] and syms.collect() == []
+
+
+def _run_in_job_group(spark, group: str, fn):
+    """``fn()`` run under Spark job group ``group``: (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_learn_bpe_job_count_independent_of_merges(spark):
+    """Learning is one task, not one job per merge (batch): 60 merges
+    cost exactly the Spark jobs 12 merges cost."""
+    from karna_spark.operators.bpe import learn_bpe
+
+    wf = _bpe_corpus_wf(spark, 300)
+    m12, jobs12 = _run_in_job_group(
+        spark, "bpe-jobs-12", lambda: learn_bpe(wf, num_merges=12)
+    )
+    m60, jobs60 = _run_in_job_group(
+        spark, "bpe-jobs-60", lambda: learn_bpe(wf, num_merges=60)
+    )
+    assert len(m12) == 12 and len(m60) >= 40
+    assert jobs12 == jobs60 > 0
+
+
+def test_learn_bpe_leaves_no_cached_rdds(spark):
+    """Cache-leak witness: learn_bpe — plain, with return_symbols plus
+    release_intermediates, and failing inside the learner — leaves the
+    persistent-RDD count where it found it."""
+    from karna_spark.operators.bpe import learn_bpe
+    from karna_spark.operators.dedup import release_intermediates
+
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    wf = _bpe_corpus_wf(spark, 300)
+    assert len(learn_bpe(wf, num_merges=60)) >= 40
+    assert jsc.getPersistentRDDs().size() == start
+    merges, syms = learn_bpe(wf, num_merges=12, return_symbols=True)
+    assert syms.count() > 0
+    release_intermediates(syms)
+    assert jsc.getPersistentRDDs().size() == start
+    # a NULL word is not iterable: the learner task raises
+    bad = spark.createDataFrame([("ab", 3), (None, 2)], "w string, freq bigint")
+    with pytest.raises(Exception):
+        learn_bpe(bad, num_merges=5)
+    assert jsc.getPersistentRDDs().size() == start
 
 
 def test_bpe_sql_fold_escapes_symbols(spark):
-    """learn_bpe builds its merge fold as a SQL string (r13 —
-    _merge_sql, one py4j call per batch instead of ~40 Column calls);
-    symbols carrying SQL-literal metacharacters (quotes, backslashes)
-    must round-trip the escaping exactly. Differential vs the pure-
-    Python reference on a corpus built from exactly those words."""
+    """Symbols carrying SQL-literal metacharacters (quotes,
+    backslashes) must round-trip the word count, the Arrow hand-off
+    to the learner task and the merge table exactly. Differential vs
+    the pure-Python reference on a corpus built from exactly those
+    words."""
     from karna_spark.operators.bpe import (
         learn_bpe,
         reference_bpe,

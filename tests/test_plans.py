@@ -193,7 +193,7 @@ _SLOW_BUILDERS = {
     "dedup_cluster_keep_best",  # iterative CC fixpoint at build
     # posting-gram cache barrier (one count) pins the shared explosion
     "dedup_shared_ngrams", "dedup_containment",
-    "text_bpe_merges_exact",  # trains 8 merges (1 job each) at build
+    "text_bpe_merges_exact",  # learns 8 merges (1 collect) at build
     "snapshot_schema_evolution",  # commits + DDL-evolves a store at build
     # r11: store-lifecycle builders (commit + delete/upsert/merge at
     # build) and the GD trainer (6 iterations, 1 collect each)

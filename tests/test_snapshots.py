@@ -122,6 +122,49 @@ def test_cdc_delete_all_rows_of_partition_drops_pointer(spark, tmp_path):
     assert _rows(store.read(spark, 1)) == [(1, "a", 10), (2, "a", 20), (3, "b", 30)]
 
 
+def test_pin_persist_failure_fails_the_verb(spark, tmp_path, monkeypatch):
+    """A verb input that cannot be cached fails the verb instead of
+    silently running uncached."""
+    import pytest
+
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10), (3, "b", 30)]))
+    delta = _mk(spark, [(1, "a", 11)])
+
+    def refuse(self, *args, **kwargs):
+        raise RuntimeError("persist refused")
+
+    monkeypatch.setattr(type(delta), "persist", refuse)
+    with pytest.raises(RuntimeError, match="persist refused"):
+        store.upsert(spark, delta, ["k"])
+
+
+def test_pin_release_restores_persistent_rdds(spark, tmp_path):
+    """``_pin``'s release drops exactly what it persisted; an input the
+    caller already persisted is left alone."""
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    pinned, release = SnapshotStore._pin(_mk(spark, [(1, "a", 10)]))
+    assert pinned.count() == 1
+    assert jsc.getPersistentRDDs().size() == start + 1
+    release()
+    assert jsc.getPersistentRDDs().size() == start
+
+    mine = _mk(spark, [(2, "b", 20)]).persist()
+    mine.count()
+    pinned, release = SnapshotStore._pin(mine)
+    assert pinned is mine
+    release()
+    assert mine.storageLevel.useMemory
+    assert jsc.getPersistentRDDs().size() == start + 1
+    mine.unpersist()
+
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10)]))
+    store.upsert(spark, _mk(spark, [(1, "a", 11)]), ["k"])
+    assert jsc.getPersistentRDDs().size() == start
+
+
 def test_upsert_validate_keys_raises_on_partition_move(spark, tmp_path):
     import pytest
 

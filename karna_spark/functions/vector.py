@@ -40,12 +40,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(n > 0, d / n)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance."""
-    diff = F.zip_with(_as_double(a), _as_double(b), lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def scale(a: Column, s: Column | float) -> Column:
     s = F.lit(s) if not isinstance(s, Column) else s
     return F.transform(_as_double(a), lambda x: x * s)

@@ -33,17 +33,6 @@ def page(
     return out.limit(limit)
 
 
-def fetch_page(
-    df: DataFrame,
-    order_by: list[Column | str],
-    limit: int = 100,
-    offset: int = 0,
-) -> list[dict]:
-    """S7: page → list of dict rows for a JSON API response. The only
-    collect in the serving path, bounded by ``limit``."""
-    return [r.asDict(recursive=True) for r in page(df, order_by, limit, offset).collect()]
-
-
 def write_table(
     df: DataFrame,
     path: str,

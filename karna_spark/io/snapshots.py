@@ -79,6 +79,21 @@ def _no_partition_inference(spark: "SparkSession"):
             spark.conf.set(key, old)
 
 
+@contextmanager
+def local_checkpoint(df: DataFrame):
+    """``df.localCheckpoint(eager=True)`` for the enclosed block, then
+    released, on an exception too. The checkpoint's blocks outlive
+    the frame — ``DataFrame.unpersist()`` does not reach them (the
+    checkpoint is not in the cache manager) and dropping the frame
+    does not free them — so the exit unpersists the RDD under the
+    checkpointed plan directly."""
+    ckpt = df.localCheckpoint(eager=True)
+    try:
+        yield ckpt
+    finally:
+        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 class ConcurrentWriteError(RuntimeError):
     """A concurrent commit published between this writer's manifest
     read and its publish attempt; the write was NOT published (its
@@ -966,12 +981,13 @@ class SnapshotStore:
     @staticmethod
     def _pin(df: DataFrame):
         """Persist a multi-consumer verb input for the verb's duration
-        (r13, guide §5): an upsert/CDC delta is consumed 3-4 times per
+        (r13, guide §5): a change feed is consumed 3-4 times per
         commit — the affected-values collect, the anti-join key set,
         the union into the write, and (spec-evolved) the merge-on-read
         key probe — and without a cache every consumer re-runs the
         caller's upstream plan, a per-commit fixed cost locally and
-        3 extra delta-source passes at 100 TB. Returns
+        3 extra delta-source passes at 100 TB; a position-delete
+        match set is consumed twice (touched partitions, file). Returns
         ``(df, release)``; ``release()`` unpersists only what this
         call persisted (an already-persisted caller frame is left
         alone, storage decisions stay with the caller). A persist
@@ -985,9 +1001,21 @@ class SnapshotStore:
         return df, (lambda: df.unpersist())
 
     @staticmethod
-    def _affected_values(delta: DataFrame, pc: str) -> list[str]:
-        vals = [r[0] for r in delta.select(pc).distinct().collect()]
-        if any(v is None for v in vals):
+    def _affected_values(changes: DataFrame, pc: str, op_col: str) -> list[str]:
+        """Sorted partition values a change feed touches. The same
+        collect validates the feed: an op outside 'I'/'U'/'D' raises
+        (the rewrite treats every op but 'D' as an upsert and a NULL
+        op as a delete, so a bad value would silently do one of the
+        two), as does a NULL partition value."""
+        rows = changes.select(pc, op_col).distinct().collect()
+        bad = sorted({repr(r[1]) for r in rows if r[1] not in ("I", "U", "D")})
+        if bad:
+            raise ValueError(
+                f"invalid change op {', '.join(bad)} in column {op_col!r}; "
+                "expected 'I', 'U' or 'D'"
+            )
+        vals = {r[0] for r in rows}
+        if None in vals:
             raise ValueError(
                 f"NULL partition value in delta ({pc}); the snapshot "
                 "store requires non-null partition values"
@@ -1066,123 +1094,91 @@ class SnapshotStore:
         key_cols: list[str],
         validate_keys: bool = False,
     ) -> int:
-        """Partition-scoped merge producing a new snapshot. Rows whose
-        ``key_cols`` match a delta row are replaced; only partitions
-        the delta touches are rewritten (copy-on-write), everything
-        else is inherited by manifest pointer.
-
-        INVARIANT — partition immutability: a key lives in one
-        partition for its lifetime. The anti-join that retires old row
-        versions only scans the partitions the delta names, so a delta
-        row that moves an existing key to a DIFFERENT partition value
-        would leave the old copy in place and duplicate the key across
-        two partitions (the same contract Hive-style partitioned
-        MERGE has). Pass ``validate_keys=True`` to detect moves with a
-        full-snapshot key join and raise instead — O(|table|) per
-        upsert, so it is opt-in.
-
-        SPEC-EVOLVED tables (S30): partitions still under an OLD spec
-        cannot be partition-pruned by the delta's current-spec values,
-        and rewriting one in place would redistribute its rows into
-        current-spec directories that collide with inherited pointers.
-        Matching rows there are retired through a MERGE-ON-READ delete
-        entry instead (one scan of the un-migrated partitions, a
-        KB-scale delete file, no rewrite) — the Iceberg merge-on-read
-        MERGE shape. The scan cost shrinks to zero as :meth:`compact`
-        migrates the table to the current spec."""
-        # READ the base BEFORE claiming the version number (every
-        # writer's ordering): claiming first opens a window where a
-        # racer can claim+publish a HIGHER number, after which this
-        # write would base on the racer's head yet publish a LOWER
-        # version — passing the CAS pre-check (latest == base) and the
-        # post-check (which scans only w > base), landing durable but
-        # never served: a silently lost update no retry loop catches.
-        # Base-first, the racer's publish makes the CAS check fail
-        # loudly and with_commit_retries does its job.
-        prev_v = self.latest_version()
-        prev_doc = self._manifest_doc(prev_v)
-        v = self._claim_version()
-        prev = prev_doc["partitions"]
-        cur_spec = self._doc_specs(prev_doc)[-1]
-        cur = cur_spec["col"]
-        # the delta feeds 3-4 consumers below — pin it (see _pin)
-        delta, _release = self._pin(delta)
+        """Replace-by-key merge producing a new snapshot: rows whose
+        ``key_cols`` match a delta row are replaced, the rest of the
+        delta is inserted. An upsert is :meth:`apply_changes` over a
+        feed whose every op is 'U'; its copy-on-write,
+        partition-immutability and spec-evolved merge-on-read
+        contracts are documented there. ``validate_keys=True`` checks
+        partition immutability first with a full-snapshot key join —
+        O(|table|) per upsert, so it is opt-in — and raises instead of
+        duplicating a key the delta moves to another partition."""
+        # the op rides a column name the delta does not use (Spark
+        # resolves names case-insensitively), so a data column named
+        # 'op' or '__merge_op' stays data
+        taken = {c.lower() for c in delta.columns}
+        op_col = "__upsert_op"
+        while op_col in taken:
+            op_col = "_" + op_col
+        feed = delta.withColumn(op_col, F.lit("U"))
+        if not validate_keys:
+            return self.apply_changes(
+                spark, feed, key_cols, op_col=op_col, _op="upsert"
+            )
+        # the check and the rewrite must see the same rows: pin the
+        # feed here (apply_changes leaves an already-pinned frame alone)
+        feed, release = self._pin(feed)
         try:
-            return self._upsert_pinned(
-                spark, delta, key_cols, validate_keys,
-                prev_v, prev_doc, v, prev, cur_spec, cur,
+            base = self.latest_version()
+            doc = self._manifest_doc(base)
+            if doc["partitions"]:
+                dl, pc_l = self._with_spec_col(feed, doc, logical=True)
+                prev_df, _ = self._with_spec_col(
+                    self.read(spark, version=base), doc, logical=True
+                )
+                moved = (
+                    prev_df
+                    .withColumnRenamed(pc_l, "_prev_pc")
+                    .select(*key_cols, "_prev_pc")
+                    .join(dl.select(*key_cols, pc_l).distinct(), key_cols)
+                    .filter(
+                        F.col("_prev_pc").cast("string")
+                        != F.col(pc_l).cast("string")
+                    )
+                    .limit(1)
+                    .collect()
+                )
+                if moved:
+                    raise ValueError(
+                        f"upsert moves key {[moved[0][k] for k in key_cols]} "
+                        f"across partitions ({moved[0]['_prev_pc']!r} -> "
+                        f"{moved[0][pc_l]!r}); partition values are "
+                        "immutable per key"
+                    )
+            # checked against ``base``: a publish racing the check must
+            # fail the apply loudly, not slip a moved key past it
+            return self.apply_changes(
+                spark, feed, key_cols, op_col=op_col, _op="upsert",
+                _expect_base=base,
             )
         finally:
-            _release()
+            release()
 
-    def _upsert_pinned(
-        self, spark, delta, key_cols, validate_keys,
-        prev_v, prev_doc, v, prev, cur_spec, cur,
-    ) -> int:
-        # S30b: under a composite spec the partition value is DERIVED
-        # (one string column computed from the spec's source fields) —
-        # the delta gains it here for affected-value discovery, and
-        # the physical write frame gains it again below from physical
-        # names. Single-column specs pass through unchanged.
-        dl, pc_l = self._with_spec_col(delta, prev_doc, logical=True)
-        affected = self._affected_values(dl, pc_l)
-        affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
-        if validate_keys and prev:
-            prev_df, _ = self._with_spec_col(
-                self.read(spark, version=prev_v), prev_doc, logical=True
+    def _write_position_deletes(self, matched: DataFrame, v: int) -> dict | None:
+        """Write version ``v``'s position-delete file from ``matched``
+        — ``(_pval, _rv, _rid)`` rows, ``_pval`` the raw manifest key
+        of the row's partition — and return its manifest entry, or
+        None when nothing matched (then no file is written). The
+        matched set is pinned, so the touched-partition list and the
+        file come from one scan."""
+        matched, release = self._pin(matched)
+        try:
+            touched = sorted(
+                r["_pval"] for r in matched.select("_pval").distinct().collect()
             )
-            moved = (
-                prev_df
-                .withColumnRenamed(pc_l, "_prev_pc")
-                .select(*key_cols, "_prev_pc")
-                .join(dl.select(*key_cols, pc_l).distinct(), key_cols)
-                .filter(F.col("_prev_pc").cast("string") != F.col(pc_l).cast("string"))
-                .limit(1)
-                .collect()
-            )
-            if moved:
-                raise ValueError(
-                    f"upsert moves key {[moved[0][k] for k in key_cols]} "
-                    f"across partitions ({moved[0]['_prev_pc']!r} -> "
-                    f"{moved[0][pc_l]!r}); partition values are "
-                    "immutable per key"
-                )
-        existing = self.read(
-            spark,
-            version=prev_v,
-            partition_values=[k for k in sorted(affected_keys) if k in prev],
-        )
-        keep = existing.join(delta.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = keep.unionByName(delta)
-        cm = prev_doc.get("colmap")
-        wdf = self._to_physical(merged, cm)
-        if cur_spec.get("fields"):
-            wdf = wdf.withColumn(
-                cur, self._spec_expr(prev_doc, cur_spec, logical=False)
-            )
-        written = self._write(wdf, v, spec_col=cur)
-        manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
-        manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
-        deletes = self._carry_deletes(prev_doc, affected_keys) or []
-        mor = self._retire_old_spec_rows(
-            spark, prev_v, prev_doc, delta.select(*key_cols).distinct(),
-            key_cols, v,
-        )
-        if mor:
-            deletes.append(mor)
-        self._publish(
-            v,
-            manifest,
-            schema_json=merged.schema.json(),
-            base_version=prev_v,
-            stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=deletes or None,
-            colmap=cm,
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op="upsert",
-        )
-        return v
+            if not touched:
+                return None
+            ddir = self._ddir(v)
+            matched.coalesce(1).write.mode("overwrite").parquet(ddir)
+        finally:
+            release()
+        return {
+            "id": v,
+            "partitions": touched,
+            # recorded once at write time: readers use it for the
+            # broadcast-threshold decision with zero per-read I/O
+            "bytes": self._delete_bytes([ddir]),
+        }
 
     def _retire_old_spec_rows(
         self,
@@ -1193,15 +1189,14 @@ class SnapshotStore:
         key_cols: list[str],
         v: int,
     ) -> dict | None:
-        """S30 merge-on-read retirement for :meth:`upsert` /
-        :meth:`apply_changes` on a spec-evolved table: rows in
-        OLD-spec partitions whose ``key_cols`` match the incoming
-        delta are recorded in a delete file (same mechanism as
-        :meth:`delete_where`) — they cannot be rewritten in place
-        because their rows would redistribute into current-spec
-        directories and collide with pointers this write inherits.
-        Returns the delete entry to append, or None (no old-spec
-        partitions, or no matches)."""
+        """S30 merge-on-read retirement for :meth:`apply_changes` on a
+        spec-evolved table: rows in OLD-spec partitions whose
+        ``key_cols`` match the incoming feed are recorded in a
+        position-delete file (as :meth:`delete_where` does) — they
+        cannot be rewritten in place because their rows would
+        redistribute into current-spec directories and collide with
+        pointers this write inherits. Returns the delete entry to
+        append, or None (no old-spec partitions, or no matches)."""
         cur = self._cur_spec(prev_doc)
         old_keys = [
             k
@@ -1239,31 +1234,7 @@ class SnapshotStore:
             .join(F.broadcast(keys), key_cols, "left_semi")
             .select(F.col("_pkey").alias("_pval"), "_rv", "_rid")
         )
-        # r13: pin the matched set and take the touched-partition list
-        # from the CACHE, then write the delete file from the same
-        # cache — the old shape wrote first and re-read the parquet for
-        # the distinct, paying the old-spec scan twice plus a
-        # write+read round-trip even when NOTHING matched (the common
-        # steady-state on a mostly-migrated table).
-        from pyspark.storagelevel import StorageLevel
-
-        matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            touched = sorted(
-                r["_pval"]
-                for r in matched.select("_pval").distinct().collect()
-            )
-            if not touched:
-                return None
-            ddir = self._ddir(v)
-            matched.coalesce(1).write.mode("overwrite").parquet(ddir)
-        finally:
-            matched.unpersist()
-        return {
-            "id": v,
-            "partitions": touched,
-            "bytes": self._delete_bytes([ddir]),
-        }
+        return self._write_position_deletes(matched, v)
 
     def apply_changes(
         self,
@@ -1275,23 +1246,43 @@ class SnapshotStore:
         _expect_base: int | None = None,
     ) -> int:
         """CDC apply: merge a change feed carrying an op column
-        ('I'/'U' upsert, 'D' delete) into a new snapshot. Rows whose
-        keys match ANY change row are removed from the affected
-        partitions; non-delete change rows are then re-inserted —
-        i.e. I/U are last-writer upserts and D is a tombstone-free
-        hard delete (the row simply doesn't appear in the new
-        version; prior versions still serve it, which IS the retention
-        story). Change rows must carry the partition column: deletes
-        prune to their partition like any other change, so a feed
-        touching k partitions rewrites exactly k partitions. A feed
-        that deletes EVERY remaining row of a partition empties it:
-        the write produces no ``v=<N>`` directory for it, and the new
-        manifest simply drops the partition (it reads as zero rows
-        from this version on — no dangling pointer). Partition values
-        are immutable per key, as in :meth:`upsert` — and on a
-        spec-evolved table, change rows whose keys live in OLD-spec
-        partitions (including 'D' rows) are retired through a
-        merge-on-read delete entry exactly as :meth:`upsert` does."""
+        ('I'/'U' upsert, 'D' delete) into a new snapshot. This is the
+        store's one copy-on-write rewrite: :meth:`upsert` and
+        :meth:`merge` reduce to it. Rows whose keys match ANY change
+        row are removed from the affected partitions; non-delete
+        change rows are then re-inserted — i.e. I/U are last-writer
+        upserts and D is a tombstone-free hard delete (the row simply
+        doesn't appear in the new version; prior versions still serve
+        it, which IS the retention story). Any other op value, NULL
+        included, raises ``ValueError``. Only partitions the feed
+        touches are rewritten; everything else is inherited by
+        manifest pointer. Change rows must carry the partition column:
+        deletes prune to their partition like any other change, so a
+        feed touching k partitions rewrites exactly k partitions. A
+        feed that deletes EVERY remaining row of a partition empties
+        it: the write produces no ``v=<N>`` directory for it, and the
+        new manifest simply drops the partition (it reads as zero rows
+        from this version on — no dangling pointer).
+
+        INVARIANT — partition immutability: a key lives in one
+        partition for its lifetime. The anti-join that retires old row
+        versions only scans the partitions the feed names, so a change
+        row that moves an existing key to a DIFFERENT partition value
+        would leave the old copy in place and duplicate the key across
+        two partitions (the same contract Hive-style partitioned
+        MERGE has). ``upsert(validate_keys=True)`` detects moves and
+        raises instead.
+
+        SPEC-EVOLVED tables (S30): partitions still under an OLD spec
+        cannot be partition-pruned by the feed's current-spec values,
+        and rewriting one in place would redistribute its rows into
+        current-spec directories that collide with inherited pointers.
+        Rows there whose keys match any change row ('D' rows included)
+        are retired through a MERGE-ON-READ delete entry instead (one
+        scan of the un-migrated partitions, a KB-scale delete file, no
+        rewrite) — the Iceberg merge-on-read MERGE shape. The scan cost
+        shrinks to zero as :meth:`compact` migrates the table to the
+        current spec."""
         # READ the base BEFORE claiming the version number (every
         # writer's ordering): claiming first opens a window where a
         # racer can claim+publish a HIGHER number, after which this
@@ -1303,46 +1294,49 @@ class SnapshotStore:
         # loudly and with_commit_retries does its job.
         prev_v = self.latest_version()
         if _expect_base is not None and prev_v != _expect_base:
-            # a composite verb (merge) derived this feed against an
-            # EARLIER head: basing the apply on the racer's newer head
-            # would pass CAS while carrying clause decisions made
-            # against stale rows — the same lost-update class as the
-            # claim-before-read race, one level up. Fail loudly; the
-            # caller re-derives its feed from the new head and
-            # retries.
+            # a composite verb (merge, a validated upsert) derived or
+            # checked this feed against an EARLIER head: basing the
+            # apply on the racer's newer head would pass CAS while
+            # carrying decisions made against stale rows — the same
+            # lost-update class as the claim-before-read race, one
+            # level up. Fail loudly; the caller re-derives its feed
+            # from the new head and retries.
             raise ConcurrentWriteError(
                 f"base moved under the change feed: derived against "
                 f"v{_expect_base}, head is now v{prev_v}"
             )
         prev_doc = self._manifest_doc(prev_v)
         v = self._claim_version()
-        prev = prev_doc["partitions"]
-        cur_spec = self._doc_specs(prev_doc)[-1]
-        cur = cur_spec["col"]
         # the change feed feeds 3-4 consumers below — pin it (_pin)
         changes, _release = self._pin(changes)
         try:
             return self._apply_changes_pinned(
-                spark, changes, key_cols, op_col, _op,
-                prev_v, prev_doc, v, prev, cur_spec, cur,
+                spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
             )
         finally:
             _release()
 
     def _apply_changes_pinned(
-        self, spark, changes, key_cols, op_col, _op,
-        prev_v, prev_doc, v, prev, cur_spec, cur,
+        self, spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
     ) -> int:
-        # S30b: composite specs derive the partition value (see upsert)
+        prev = prev_doc["partitions"]
+        cur_spec = self._doc_specs(prev_doc)[-1]
+        cur = cur_spec["col"]
+        # S30b: under a composite spec the partition value is DERIVED
+        # (one string column computed from the spec's source fields) —
+        # the feed gains it here for affected-value discovery, and
+        # the physical write frame gains it again below from physical
+        # names. Single-column specs pass through unchanged.
         ch, pc_l = self._with_spec_col(changes, prev_doc, logical=True)
-        affected = self._affected_values(ch, pc_l)
+        affected = self._affected_values(ch, pc_l, op_col)
         affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
         existing = self.read(
             spark,
             version=prev_v,
             partition_values=[k for k in sorted(affected_keys) if k in prev],
         )
-        keep = existing.join(changes.select(*key_cols).distinct(), key_cols, "left_anti")
+        keys = changes.select(*key_cols).distinct()
+        keep = existing.join(keys, key_cols, "left_anti")
         upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
         merged = keep.unionByName(upserts)
         cm = prev_doc.get("colmap")
@@ -1356,8 +1350,7 @@ class SnapshotStore:
         manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
         deletes = self._carry_deletes(prev_doc, affected_keys) or []
         mor = self._retire_old_spec_rows(
-            spark, prev_v, prev_doc,
-            changes.select(*key_cols).distinct(), key_cols, v,
+            spark, prev_v, prev_doc, keys, key_cols, v
         )
         if mor:
             deletes.append(mor)
@@ -1509,141 +1502,142 @@ class SnapshotStore:
         # duplicate keys into the feed — silently poisoning exactly
         # the determinism the check exists to protect. localCheckpoint
         # truncates lineage, so both reads see the same rows; merge
-        # sources are delta-scale, so materializing is cheap.
-        source = source.localCheckpoint(eager=True)
-        dup = (
-            source.groupBy(*key_cols)
-            # counting literal 1 under a reserved alias — .count()
-            # would collide with a source column literally named
-            # 'count' and break the filter below
-            .agg(F.count(F.lit(1)).alias("__k_count"))
-            .filter(F.col("__k_count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "multiple source rows matched the same key; "
-                "pre-aggregate the source to one row per key"
+        # sources are delta-scale, so materializing is cheap. The
+        # checkpoint is released when the merge returns or raises.
+        with local_checkpoint(source) as source:
+            dup = (
+                source.groupBy(*key_cols)
+                # counting literal 1 under a reserved alias — .count()
+                # would collide with a source column literally named
+                # 'count' and break the filter below
+                .agg(F.count(F.lit(1)).alias("__k_count"))
+                .filter(F.col("__k_count") > 1)
+                .limit(1)
+                .count()
             )
-        cols = source.columns
-        tgt = self.read(spark, version=prev_v)
-        s = source.select(
-            *[F.col(c).alias(f"__s_{c}") for c in cols],
-            F.lit(True).alias("__s_present"),
-        )
-        t = tgt.select(
-            *[F.col(c).alias(f"__t_{c}") for c in cols],
-            F.lit(True).alias("__t_present"),
-        )
-        cond = None
-        for k in key_cols:
-            c = F.col(f"__s_{k}") == F.col(f"__t_{k}")
-            cond = c if cond is None else (cond & c)
-        # an NMBS clause must SEE source-missing target rows, so the
-        # join widens to full-outer; without one the left join keeps
-        # the delta-scale bound (unmatched target rows never leave the
-        # manifest-pruned scan)
-        j = s.join(t, cond, "full_outer" if nmbs else "left_outer")
-        # expose s.* / t.* for the user's clause conditions
-        j = j.select(
-            "*",
-            F.struct(
-                *[F.col(f"__s_{c}").alias(c) for c in cols]
-            ).alias("s"),
-            F.struct(
-                *[F.col(f"__t_{c}").alias(c) for c in cols]
-            ).alias("t"),
-        )
-        t_present = F.col("__t_present").isNotNull()
-        s_present = F.col("__s_present").isNotNull()
-        matched = s_present & t_present
-        delete_c = (
-            F.expr(matched_delete_cond)
-            if matched_delete_cond is not None
-            else F.lit(False)
-        )
-        update_c = (
-            F.expr(matched_update_cond)
-            if matched_update_cond is not None
-            else F.lit(True)
-        )
-        insert_c = (
-            F.expr(not_matched_insert_cond)
-            if not_matched_insert_cond is not None
-            else F.lit(True)
-        )
-        nmbs_delete_c = (
-            F.lit(True)
-            if not_matched_by_source_delete is True
-            else F.expr(not_matched_by_source_delete)
-            if not_matched_by_source_delete
-            else F.lit(False)
-        )
-        nmbs_update_c = (
-            F.lit(False)
-            if nmbs_set is None
-            else F.expr(not_matched_by_source_update_cond)
-            if not_matched_by_source_update_cond is not None
-            else F.lit(True)
-        )
-        # 'S' is an internal marker for a source-missing UPDATE: it
-        # needs the TARGET image with the SET expressions applied —
-        # neither the D branch (plain target image) nor the default
-        # branch (source image, all-NULL here) — and is folded back
-        # to 'U' once the image is built.
-        op = (
-            F.when(matched & delete_c, F.lit("D"))
-            .when(matched & update_c, F.lit("U"))
-            .when(~t_present & s_present & insert_c, F.lit("I"))
-            .when(t_present & ~s_present & nmbs_delete_c, F.lit("D"))
-            .when(t_present & ~s_present & nmbs_update_c, F.lit("S"))
-        )
-        # the CDC op rides a RESERVED name — a source column literally
-        # named 'op' would otherwise collide with the feed's op column
-        # and make every reference ambiguous (the same hazard the
-        # dup-check guards for 'count')
-        t_types = dict(tgt.dtypes)
+            if dup:
+                raise ValueError(
+                    "multiple source rows matched the same key; "
+                    "pre-aggregate the source to one row per key"
+                )
+            cols = source.columns
+            tgt = self.read(spark, version=prev_v)
+            s = source.select(
+                *[F.col(c).alias(f"__s_{c}") for c in cols],
+                F.lit(True).alias("__s_present"),
+            )
+            t = tgt.select(
+                *[F.col(c).alias(f"__t_{c}") for c in cols],
+                F.lit(True).alias("__t_present"),
+            )
+            cond = None
+            for k in key_cols:
+                c = F.col(f"__s_{k}") == F.col(f"__t_{k}")
+                cond = c if cond is None else (cond & c)
+            # an NMBS clause must SEE source-missing target rows, so the
+            # join widens to full-outer; without one the left join keeps
+            # the delta-scale bound (unmatched target rows never leave the
+            # manifest-pruned scan)
+            j = s.join(t, cond, "full_outer" if nmbs else "left_outer")
+            # expose s.* / t.* for the user's clause conditions
+            j = j.select(
+                "*",
+                F.struct(
+                    *[F.col(f"__s_{c}").alias(c) for c in cols]
+                ).alias("s"),
+                F.struct(
+                    *[F.col(f"__t_{c}").alias(c) for c in cols]
+                ).alias("t"),
+            )
+            t_present = F.col("__t_present").isNotNull()
+            s_present = F.col("__s_present").isNotNull()
+            matched = s_present & t_present
+            delete_c = (
+                F.expr(matched_delete_cond)
+                if matched_delete_cond is not None
+                else F.lit(False)
+            )
+            update_c = (
+                F.expr(matched_update_cond)
+                if matched_update_cond is not None
+                else F.lit(True)
+            )
+            insert_c = (
+                F.expr(not_matched_insert_cond)
+                if not_matched_insert_cond is not None
+                else F.lit(True)
+            )
+            nmbs_delete_c = (
+                F.lit(True)
+                if not_matched_by_source_delete is True
+                else F.expr(not_matched_by_source_delete)
+                if not_matched_by_source_delete
+                else F.lit(False)
+            )
+            nmbs_update_c = (
+                F.lit(False)
+                if nmbs_set is None
+                else F.expr(not_matched_by_source_update_cond)
+                if not_matched_by_source_update_cond is not None
+                else F.lit(True)
+            )
+            # 'S' is an internal marker for a source-missing UPDATE: it
+            # needs the TARGET image with the SET expressions applied —
+            # neither the D branch (plain target image) nor the default
+            # branch (source image, all-NULL here) — and is folded back
+            # to 'U' once the image is built.
+            op = (
+                F.when(matched & delete_c, F.lit("D"))
+                .when(matched & update_c, F.lit("U"))
+                .when(~t_present & s_present & insert_c, F.lit("I"))
+                .when(t_present & ~s_present & nmbs_delete_c, F.lit("D"))
+                .when(t_present & ~s_present & nmbs_update_c, F.lit("S"))
+            )
+            # the CDC op rides a RESERVED name — a source column literally
+            # named 'op' would otherwise collide with the feed's op column
+            # and make every reference ambiguous (the same hazard the
+            # dup-check guards for 'count')
+            t_types = dict(tgt.dtypes)
 
-        def _img(c: str):
-            timg = F.col(f"__t_{c}")
-            simg = F.col(f"__s_{c}")
-            if nmbs_set and c in nmbs_set:
-                # cast back to the target column's type: a SET
-                # expression must not silently widen the column (the
-                # union with kept rows would otherwise diverge by
-                # shuffle order of whichever image unionByName saw
-                # first)
-                uimg = F.expr(nmbs_set[c]).cast(t_types[c])
-            else:
-                uimg = timg
-            return (
-                F.when(F.col("__merge_op") == "D", timg)
-                .when(F.col("__merge_op") == "S", uimg)
-                .otherwise(simg)
-                .alias(c)
-            )
+            def _img(c: str):
+                timg = F.col(f"__t_{c}")
+                simg = F.col(f"__s_{c}")
+                if nmbs_set and c in nmbs_set:
+                    # cast back to the target column's type: a SET
+                    # expression must not silently widen the column (the
+                    # union with kept rows would otherwise diverge by
+                    # shuffle order of whichever image unionByName saw
+                    # first)
+                    uimg = F.expr(nmbs_set[c]).cast(t_types[c])
+                else:
+                    uimg = timg
+                return (
+                    F.when(F.col("__merge_op") == "D", timg)
+                    .when(F.col("__merge_op") == "S", uimg)
+                    .otherwise(simg)
+                    .alias(c)
+                )
 
-        feed = (
-            j.withColumn("__merge_op", op)
-            .filter(F.col("__merge_op").isNotNull())
-            # D rows carry the TARGET image (it holds the live
-            # partition value apply_changes prunes by); S rows the
-            # target image with SET applied; I/U the source image
-            .select(
-                F.when(F.col("__merge_op") == "S", F.lit("U"))
-                .otherwise(F.col("__merge_op"))
-                .alias("__merge_op"),
-                *[_img(c) for c in cols],
+            feed = (
+                j.withColumn("__merge_op", op)
+                .filter(F.col("__merge_op").isNotNull())
+                # D rows carry the TARGET image (it holds the live
+                # partition value apply_changes prunes by); S rows the
+                # target image with SET applied; I/U the source image
+                .select(
+                    F.when(F.col("__merge_op") == "S", F.lit("U"))
+                    .otherwise(F.col("__merge_op"))
+                    .alias("__merge_op"),
+                    *[_img(c) for c in cols],
+                )
             )
-        )
-        return self.apply_changes(
-            spark, feed, key_cols, op_col="__merge_op", _op="merge",
-            # the feed's clause decisions were evaluated against
-            # prev_v's rows; a racer publishing in between must fail
-            # the apply loudly, not be silently overwritten
-            _expect_base=prev_v,
-        )
+            return self.apply_changes(
+                spark, feed, key_cols, op_col="__merge_op", _op="merge",
+                # the feed's clause decisions were evaluated against
+                # prev_v's rows; a racer publishing in between must fail
+                # the apply loudly, not be silently overwritten
+                _expect_base=prev_v,
+            )
 
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Merge-on-read row delete (S27 — Iceberg v2 position
@@ -1694,27 +1688,10 @@ class SnapshotStore:
             .filter(condition)
             .select(F.col("_pkey").alias("_pval"), "_rv", "_rid")
         )
-        ddir = self._ddir(v)
-        matched.coalesce(1).write.mode("overwrite").parquet(ddir)
-        touched = sorted(
-            r["_pval"]
-            for r in spark.read.parquet(ddir).select("_pval").distinct().collect()
-        )
-        deletes = [
-            dict(e) for e in prev_doc.get("deletes", [])
-        ]
-        if touched:
-            deletes.append({
-                "id": v,
-                "partitions": touched,
-                # recorded once at write time: readers use it for the
-                # broadcast-threshold decision with zero per-read I/O
-                "bytes": self._delete_bytes([ddir]),
-            })
-        else:
-            import shutil
-
-            shutil.rmtree(ddir, ignore_errors=True)
+        deletes = [dict(e) for e in prev_doc.get("deletes", [])]
+        entry = self._write_position_deletes(matched, v)
+        if entry:
+            deletes.append(entry)
         self._publish(
             v,
             dict(prev_doc["partitions"]),

@@ -36,13 +36,6 @@ from karna_spark.functions.vector import cosine
 # ------------------------------------------------------------------ exact
 
 
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Keep one row per distinct value of ``cols`` (all columns if
-    None). dropDuplicates = hash-shuffle on the key, first-seen row
-    survives per partition — deterministic when cols covers the row."""
-    return df.dropDuplicates(cols)
-
-
 def exact_dedup_summary(df: DataFrame, key: Column, id_col: str) -> DataFrame:
     """One row per distinct ``key`` value: the deterministic survivor
     (min id — the keep-rule a curation audit trail can replay) and the
@@ -51,15 +44,6 @@ def exact_dedup_summary(df: DataFrame, key: Column, id_col: str) -> DataFrame:
     width digest, not the (possibly megabyte) payload itself."""
     return df.groupBy(key.alias("fp")).agg(
         F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies")
-    )
-
-
-def dup_report(df: DataFrame, key: Column, id_col: str) -> DataFrame:
-    """Groups with >1 row for ``key``: (key, n_dups, min id kept)."""
-    return (
-        df.groupBy(key.alias("dup_key"))
-        .agg(F.count("*").alias("n_rows"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_rows") > 1)
     )
 
 

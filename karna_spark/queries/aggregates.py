@@ -19,23 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from karna_spark.queries.parity import dec, r4, sql_dsum
+from karna_spark.queries.parity import r4, sql_dsum
 from karna_spark.queries.registry import register_query, table
-
-
-# ---------------------------------------------------------------- A3
-def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by q16_supplier_relation_count + union_all_vs_distinct (A3 exact count-distinct in anchored query shapes). The builder stays for plan/bench/test surfaces.
-
-    A3: distinct aggregates. Spark expands multiple DISTINCTs via
-    the Expand operator (one shuffle, n× row multiplication) — the
-    scalable plan for multi-distinct."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.count_distinct("l_suppkey").alias("n_supp"),
-        F.count_distinct("l_partkey").alias("n_part"),
-        F.sum_distinct(dec("l_quantity")).cast("double").alias("sum_distinct_qty"),
-    )
 
 
 # ---------------------------------------------------------------- A5
@@ -100,46 +85,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         r4(F.percentile("o_totalprice", F.lit(0.75)), "p75"),
         r4(F.median("o_totalprice"), "med"),
         ((F.abs(approx_med - exact_med) / exact_med) < 0.05).alias("approx_median_ok"),
-    )
-
-
-# ---------------------------------------------------------------- A7
-def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by q11_important_parts / q18_large_volume_customers (A7 HAVING inside certified TPC-H shapes). The builder stays for plan/bench/test surfaces.
-
-    A7: HAVING = filter over the aggregate output."""
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_suppkey")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("supp_revenue"),
-        )
-        .filter(F.col("n_items") > 500)
-    )
-
-
-# ---------------------------------------------------------------- A8
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by agg_grouping_sets (ROLLUP is the GROUPING SETS shorthand; same Expand plan, superset semantics). The builder stays for plan/bench/test surfaces.
-
-    A8: ROLLUP hierarchy (status, priority) → (status) → (); Spark's
-    Expand produces all granularities in one shuffle."""
-    orders = table(spark, sf_dir, "orders")
-    return orders.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        F.grouping_id().alias("gid"),
-    )
-
-
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by agg_grouping_sets (CUBE is the GROUPING SETS shorthand; same Expand plan, superset semantics). The builder stays for plan/bench/test surfaces.
-
-    A8: CUBE — all four granularities."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-        F.grouping_id().alias("gid"),
     )
 
 

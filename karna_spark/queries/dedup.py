@@ -24,7 +24,6 @@ from karna_spark.operators.dedup import (
     embedding_near_dup_pairs,
     minhash_lsh_incremental_pairs,
     minhash_lsh_pairs,
-    simhash_near_dup_pairs,
 )
 from karna_spark.operators.sizing import spread_scan
 from karna_spark.operators.text import fingerprint_md5
@@ -161,17 +160,6 @@ def dedup_ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return blocked_jaccard_pairs(
         docs, "doc_id", "text", ["lang"], threshold=0.15, shingle_n=2
     )
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 8 of 64 bits, 16-bit slice
-    buckets). RETIRED from the driver registry in r8 (was rows-only —
-    blake2b bit math has no cheap SQL twin); the pigeonhole pipeline is
-    hash-certified by its driver twin ``dedup_simhash_md5_pairs``
-    below, and recall against planted dups stays unit-tested in
-    tests/test_operators.py."""
-    docs = table(spark, sf_dir, "documents")
-    return simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8)
 
 
 # ------------------------------------------- oracle-replayable SimHash

@@ -168,7 +168,6 @@ _NL_AGG = "total quantity by return flag in lineitem with discount under 0.05"
 # (l_quantity is whole-valued in the fixtures — SUM of whole doubles is
 # exact integer arithmetic below 2^53, order-independent.)
 
-_NL_COUNT = "count of orders by order status"
 _NL_TOPN = "top 15 customers by acctbal"
 
 
@@ -214,16 +213,6 @@ def frontend_nl_join_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _fixtures(spark, sf_dir)
     return ask(spark, _NL_JOIN_AGG)
-
-
-def frontend_nl_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by frontend_nl_aggregate (the count intent is a strict subset of its translation path). The builder stays for plan/bench/test surfaces.
-
-    NL front-end, count form ('count of T by Y')."""
-    from karna_spark.frontends.nl import ask
-
-    _fixtures(spark, sf_dir)
-    return ask(spark, _NL_COUNT)
 
 
 def frontend_nl_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,19 +273,6 @@ def frontend_graphql_nested_list(spark: SparkSession, sf_dir: str) -> DataFrame:
             "|", F.sort_array(F.filter(names, lambda x: x.isNotNull()))
         ).alias("customer_names"),
     )
-
-
-def frontend_nl_docs_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by frontend_nl_aggregate + frontend_nl_dynamic_view (NL) and profile_table_stats (A19 profiling). The builder stays for plan/bench/test surfaces.
-
-    NL front-end over the corpus table: 'average n_chars by source
-    in documents' — shows the translator is table-generic (the grammar
-    resolves any registered table's vocabulary, not just TPC-H).
-    Integer sums divide exactly, so the avg is cross-engine stable."""
-    from karna_spark.frontends.nl import ask
-
-    _fixtures(spark, sf_dir)
-    return ask(spark, "average n_chars by source in documents")
 
 
 # ------------------------------------- dynamic (runtime-registered) schemas

@@ -200,21 +200,6 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- O2
-def limit_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by sink_result_page (O2 keyset + offset pagination against a sink, superset) + q3 (O2). The builder stays for plan/bench/test surfaces.
-
-    O2: pagination (the web-UI idiom, reference README.md:2 "web
-    interface"). Ordered by unique key so the page is stable."""
-    return (
-        table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-        .offset(100)
-        .limit(50)
-    )
-
-
 # ---------------------------------------------------------------- O4
 @register_query(
     "union_all_vs_distinct",

@@ -12,14 +12,11 @@ from pyspark.sql import functions as F
 from karna_spark.operators.multimodal import (
     attach_media_metadata,
     decode_media,
-    sample_frames,
     synthesize_media_df,
 )
 from karna_spark.operators.text import (
     LANG_MARKERS,
     STOPWORDS,
-    fingerprint_md5,
-    fingerprint_winnow,
     lang_id,
     quality_features,
     token_counts,
@@ -114,21 +111,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-
-
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by text_duplicate_span_scrub / text_intradoc_span_dedup (rolling-hash fingerprints at span grain, superset machinery). The builder stays for plan/bench/test surfaces.
-
-    F9/F7: document fingerprints — exact (normalized md5) and
-    edit-robust (min-5 shingle-hash winnowing)."""
-    docs = table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        fingerprint_md5(F.col("text")).alias("fp_exact"),
-        fingerprint_winnow(F.col("text"), shingle_n=3, keep=5).alias("fp_winnow"),
-    )
-
-
 # ------------------------------------------------------------ multimodal
 @register_query(
     "multimodal_metadata",
@@ -201,19 +183,6 @@ def multimodal_decode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_channels",
         "mean_intensity",
     )
-
-
-def multimodal_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by multimodal_video_frames (V9 real container frame extraction) + multimodal_decode_pipeline (U2/U3). The builder stays for plan/bench/test surfaces.
-
-    Multimodal: 1→N frame-sampling expansion (posexplode of stride
-    offsets) — the row-shape video pipelines need, fully JVM-side. The
-    oracle regenerates the same stride offsets from the payload length."""
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    media = docs.select(
-        F.col("doc_id").alias("item_id"), F.encode(F.col("text"), "UTF-8").alias("media")
-    )
-    return sample_frames(media, every_n_bytes=64, max_frames=4)
 
 
 # ------------------------------------------------------------ UDF surface

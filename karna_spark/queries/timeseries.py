@@ -18,31 +18,6 @@ from karna_spark.queries.parity import ts_str
 from karna_spark.queries.registry import register_query, table
 
 
-# ---------------------------------------------------------------- T1
-def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by sliding_window_agg (tumbling = sliding with slide == width) + events_incremental_rollup (T1). The builder stays for plan/bench/test surfaces.
-
-    T1: 1-hour tumbling windows — `F.window` (the same operator
-    Structured Streaming uses) grouped with event_type. Plain hash
-    aggregation: partial per partition, one shuffle on (window, type)."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 4).alias(
-                "total_value"
-            ),
-        )
-        .select(
-            ts_str(F.col("w.start"), "window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 # ---------------------------------------------------------------- T2
 @register_query(
     "sliding_window_agg",

@@ -580,54 +580,6 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_bruteforce(emb, queries, ann, k=10)
 
 
-def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN, IVF path: a k-means coarse quantizer (8 cells,
-    3 Lloyd iterations — all shuffles bounded by k·dim, not corpus
-    size) partitions the corpus into inverted lists; each query probes
-    its 2 nearest cells and exact-ranks only those lists. At 100 TB
-    the corpus assignment is one broadcast join and the probe cost is
-    nprobe/k of the data per query. Rows-only for the driver (Lloyd
-    iteration is not SQL-expressible); recall vs the brute-force
-    baseline is unit-tested in tests/test_operators.py. RETIRED from
-    the driver registry in r8: the IVF pipeline is hash-certified by
-    its driver twin ``similarity_ivf_recall``; this builder stays as a
-    plan-test surface."""
-    from karna_spark.operators.similarity import ann_ivf_topk, train_kmeans
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    cents = train_kmeans(emb, "embedding", k=8, iters=3)
-    res = ann_ivf_topk(emb, queries, cents, "vec_id", "vec_id", "embedding", k=5, nprobe=2)
-    return res.select(
-        "query_id", "neighbor_id", F.round(F.col("cos"), 4).alias("cos"), "rank"
-    )
-
-
-def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate ANN, product-quantization path: 8 subspaces × 16
-    centroids compress each 64-dim float vector to 8 small codes
-    (32× smaller than float32 at scale, stored binary in production);
-    queries score corpus rows by asymmetric distance — m table lookups
-    per row, no float vectors moving after the encode pass. Codebooks
-    train on a bounded hash-sample (FAISS practice), so the driver cost
-    is capped at any corpus size. Rows-only for the driver (Lloyd
-    training is not SQL-expressible); lossless-construction exactness
-    and top-k agreement with brute force are unit-tested in
-    tests/test_operators.py. RETIRED from the driver registry in r8:
-    the PQ pipeline is hash-certified by its driver twin
-    ``similarity_pq_recall``; this builder stays as a plan-test
-    surface."""
-    from karna_spark.operators.similarity import ann_pq_topk, train_pq
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    codebooks = train_pq(emb, "embedding", m=8, ksub=16, iters=6)
-    res = ann_pq_topk(emb, queries, codebooks, "vec_id", "vec_id", "embedding", k=5)
-    return res.select(
-        "query_id", "neighbor_id", F.round(F.col("adc"), 4).alias("adc"), "rank"
-    )
-
-
 # ----------------------------------------------------------- F28 k-means
 
 _KM_K, _KM_ITERS, _KM_SCALE, _KM_OFF = 8, 3, 1024, 2048

@@ -508,7 +508,7 @@ def foreachbatch_snapshot_rollup(
     final version; merge is exact (integer cents) so the final
     snapshot hash-matches the batch recompute regardless of how the
     stream was split or ordered."""
-    from karna_spark.io.snapshots import SnapshotStore
+    from karna_spark.io.snapshots import SnapshotStore, local_checkpoint
     from karna_spark.operators.rollup import merge_rollups, rollup_slice
 
     store = SnapshotStore(store_root, "event_type")
@@ -530,9 +530,8 @@ def foreachbatch_snapshot_rollup(
             merged = delta
         # merged carries every row for the affected partitions, so the
         # keyed upsert (replace-by-key) publishes exact merged state.
-        store.upsert(
-            spark, merged.localCheckpoint(eager=True), key_cols=["bucket_ts", "event_type"]
-        )
+        with local_checkpoint(merged) as merged:
+            store.upsert(spark, merged, key_cols=["bucket_ts", "event_type"])
 
     stream = events_stream(spark, landing_dir)
     q = (
@@ -615,6 +614,7 @@ def foreachbatch_incremental_dedup(
     exactly as Spark's docs prescribe for foreachBatch sinks; the
     single-process fixture run cannot redeliver, so the plain append
     keeps the job readable here."""
+    from karna_spark.io.snapshots import local_checkpoint
     from karna_spark.operators.dedup import (
         minhash_lsh_incremental_pairs,
         minhash_signature_table,
@@ -626,32 +626,32 @@ def foreachbatch_incremental_dedup(
     pairs_dir = os.path.join(state_root, "pairs")
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        have_state = os.path.isdir(sig_dir)
-        if have_state:
-            sigs = spark.read.parquet(sig_dir)
-            corpus = spark.read.parquet(corpus_dir).select("doc_id", "text")
-            pairs = minhash_lsh_incremental_pairs(
-                corpus, batch_df, "doc_id", "text", base_signatures=sigs
+        with local_checkpoint(batch_df) as batch_df:
+            have_state = os.path.isdir(sig_dir)
+            if have_state:
+                sigs = spark.read.parquet(sig_dir)
+                corpus = spark.read.parquet(corpus_dir).select("doc_id", "text")
+                pairs = minhash_lsh_incremental_pairs(
+                    corpus, batch_df, "doc_id", "text", base_signatures=sigs
+                )
+            else:
+                pairs = minhash_lsh_incremental_pairs(
+                    batch_df.limit(0), batch_df, "doc_id", "text"
+                )
+            (
+                pairs.withColumn("batch_id", F.lit(batch_id).cast("int"))
+                .write.mode("append")
+                .parquet(pairs_dir)
             )
-        else:
-            pairs = minhash_lsh_incremental_pairs(
-                batch_df.limit(0), batch_df, "doc_id", "text"
+            release_intermediates(pairs)
+            (
+                minhash_signature_table(batch_df, "doc_id", "text")
+                .write.mode("append")
+                .parquet(sig_dir)
             )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id).cast("int"))
-            .write.mode("append")
-            .parquet(pairs_dir)
-        )
-        release_intermediates(pairs)
-        (
-            minhash_signature_table(batch_df, "doc_id", "text")
-            .write.mode("append")
-            .parquet(sig_dir)
-        )
-        batch_df.select("doc_id", "text").write.mode("append").parquet(
-            corpus_dir
-        )
+            batch_df.select("doc_id", "text").write.mode("append").parquet(
+                corpus_dir
+            )
 
     stream = documents_stream(spark, landing_dir)
     q = (

@@ -165,6 +165,60 @@ def test_pin_release_restores_persistent_rdds(spark, tmp_path):
     assert jsc.getPersistentRDDs().size() == start
 
 
+def test_merge_leaves_no_cached_rdds(spark, tmp_path):
+    """``merge``'s local checkpoint of the source is released after a
+    merge that publishes and after one refused for duplicate keys."""
+    import pytest
+
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10), (3, "b", 30)]))
+    store.merge(spark, _mk(spark, [(1, "a", 11), (2, "a", 20)]), ["k"])
+    assert _rows(store.read(spark)) == [(1, "a", 11), (2, "a", 20), (3, "b", 30)]
+    assert jsc.getPersistentRDDs().size() == start
+    with pytest.raises(ValueError, match="multiple source rows"):
+        store.merge(spark, _mk(spark, [(1, "a", 1), (1, "a", 2)]), ["k"])
+    assert jsc.getPersistentRDDs().size() == start
+
+
+def test_cdc_rejects_invalid_op_values(spark, tmp_path):
+    """An op other than 'I'/'U'/'D' fails the apply and names the
+    value: a NULL op used to delete its key and 'd'/'X' to upsert."""
+    import pytest
+
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10), (2, "a", 20), (3, "b", 30)]))
+    for bad, shown in ((None, "None"), ("d", "'d'"), ("X", "'X'")):
+        changes = spark.createDataFrame(
+            [Row(k=1, p="a", val=11, op="U"), Row(k=3, p="b", val=31, op=bad)],
+            "k long, p string, val long, op string",
+        )
+        with pytest.raises(ValueError, match=f"invalid change op {shown}"):
+            store.apply_changes(spark, changes, ["k"])
+    assert store.latest_version() == 1
+    assert _rows(store.read(spark)) == [(1, "a", 10), (2, "a", 20), (3, "b", 30)]
+
+
+def test_upsert_keeps_data_columns_named_like_op_columns(spark, tmp_path):
+    """upsert hands apply_changes a feed with its own op column; a
+    delta column named 'op' or '__merge_op' stays data, unchanged."""
+    for name in ("op", "__merge_op"):
+        store = SnapshotStore(str(tmp_path / name), "p")
+        store.commit(spark.createDataFrame(
+            [Row(k=1, p="a", val=10), Row(k=2, p="b", val=20)]
+        ).withColumn(name, F.lit("D")))
+        delta = spark.createDataFrame(
+            [Row(k=1, p="a", val=11), Row(k=3, p="b", val=30)]
+        ).withColumn(name, F.when(F.col("k") == 1, "D").otherwise("x"))
+        store.upsert(spark, delta, ["k"])
+        got = sorted(
+            (r["k"], r["p"], r["val"], r[name]) for r in store.read(spark).collect()
+        )
+        assert got == [(1, "a", 11, "D"), (2, "b", 20, "D"), (3, "b", 30, "x")]
+        assert store.read(spark).columns == store.read(spark, 1).columns
+
+
 def test_upsert_validate_keys_raises_on_partition_move(spark, tmp_path):
     import pytest
 
@@ -176,6 +230,27 @@ def test_upsert_validate_keys_raises_on_partition_move(spark, tmp_path):
     # Same-partition updates pass validation.
     v = store.upsert(spark, _mk(spark, [(1, "a", 11)]), ["k"], validate_keys=True)
     assert _rows(store.read(spark, v)) == [(1, "a", 11), (3, "b", 30)]
+
+
+def test_upsert_validate_keys_fails_when_base_moves_after_check(spark, tmp_path):
+    """The key-move check ran against one head; a publish landing
+    before the apply reads the base must fail the upsert loudly."""
+    import pytest
+
+    root = str(tmp_path / "t")
+    store = SnapshotStore(root, "p")
+    store.commit(_mk(spark, [(1, "a", 10)]))
+    orig_read = store.read
+
+    def read_then_race(*args, **kwargs):
+        store.read = orig_read
+        SnapshotStore(root, "p").upsert(spark, _mk(spark, [(2, "a", 20)]), ["k"])
+        return orig_read(*args, **kwargs)
+
+    store.read = read_then_race  # the check's scan is the first read
+    with pytest.raises(ConcurrentWriteError):
+        store.upsert(spark, _mk(spark, [(1, "a", 11)]), ["k"], validate_keys=True)
+    assert _rows(store.read(spark)) == [(1, "a", 10), (2, "a", 20)]
 
 
 def test_crashed_commit_version_is_never_reused(spark, tmp_path):
@@ -1203,6 +1278,17 @@ def test_mor_delete_zero_matches_is_noop_version(spark, tmp_path):
     assert "deletes" not in store._manifest_doc(v2)
     assert _rows(store.read(spark)) == [(1, "a", 10)]
     assert not os.path.isdir(store._ddir(v2))
+
+
+def test_mor_delete_zero_matches_keeps_base_deletes(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10), (2, "b", 20)]))
+    v2 = store.delete_where(spark, "val = 10")
+    v3 = store.delete_where(spark, "val > 99")
+    assert store._manifest_doc(v3)["deletes"] == store._manifest_doc(v2)["deletes"]
+    assert store._manifest_doc(v3)["op"] == "delete"
+    assert not os.path.isdir(store._ddir(v3))
+    assert _rows(store.read(spark)) == [(2, "b", 20)]
 
 
 def test_mor_carry_forward_prunes_to_inherited_partitions(spark, tmp_path):

@@ -250,24 +250,6 @@ def synthesize_media_df(df: DataFrame, id_col: str) -> DataFrame:
     return df.select(id_col).mapInPandas(synth, "item_id bigint, media binary")
 
 
-def sample_frames(df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled "frame"
-    (byte offset stride stands in for time stride — the real kernel
-    would seek keyframes). Demonstrates the 1→N row expansion shape
-    (posexplode of a generated offsets array) that video pipelines
-    need, entirely JVM-side."""
-    offsets = F.slice(
-        F.sequence(F.lit(0), F.greatest(F.length("media") - 1, F.lit(0)), F.lit(every_n_bytes)),
-        1,
-        max_frames,
-    )
-    return df.select(
-        "item_id",
-        F.length("media").cast("bigint").alias("n_bytes"),
-        F.posexplode(offsets).alias("frame_idx", "byte_offset"),
-    )
-
-
 def encode_wav_tone(
     n_frames: int, bin_idx: int, amplitude: int = 8000, rate: int = 8000
 ) -> bytes:

@@ -109,29 +109,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")))
 
 
-def fingerprint_winnow(text: Column, shingle_n: int = 3, keep: int = 5) -> Column:
-    """Near-dup-stable fingerprint (winnowing flavor): md5 of the
-    ``keep`` smallest word-``shingle_n``-gram md5s. Documents differing
-    in a few words usually share the minimum shingle hashes, so the
-    fingerprint is robust to small edits while staying one short
-    string per doc."""
-    w = words(text)
-    idx = F.sequence(F.lit(0), F.size(w) - shingle_n)
-    shingles = F.when(
-        F.size(w) >= shingle_n,
-        F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, i + j + 1) for j in range(shingle_n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array(text))  # short doc: the text itself is the shingle
-    hashes = F.array_sort(F.transform(shingles, lambda s: F.md5(s)))
-    return F.md5(F.concat_ws("", F.slice(hashes, 1, keep)))
-
-
 def word_ngrams(text: Column, n: int) -> Column:
     """All word ``n``-grams of ``text`` as space-joined strings (with
     repeats — callers dedupe when set semantics are wanted). Empty

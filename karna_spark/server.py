@@ -37,19 +37,46 @@ translate, SQL that Spark cannot parse or analyze — answers 4xx with
 ``{"error": ...}``. Any other failure is an engine fault (a dataset's
 files gone, a JVM or I/O error) and answers 500.
 
-Scale posture: the server holds no result state; every /query collects
-at most ``limit`` rows (hard-capped) through a TakeOrderedAndProject
-plan, and ``DataFrame.collect()`` moves that page from the JVM as
-pickled rows (``collectToPython``). Concurrency is ThreadingHTTPServer —
-Spark sessions are thread-safe for reads, and each request is an
-independent job.
+Scale posture: every /query collects at most ``limit`` rows
+(hard-capped) through a TakeOrderedAndProject plan, and
+``DataFrame.collect()`` moves that page from the JVM as pickled rows
+(``collectToPython``). Concurrency is ThreadingHTTPServer — Spark
+sessions are thread-safe for reads, and each request is an independent
+job.
+
+Page cache: the server keeps the pages it served, JSON-encoded, in an
+LRU (``PageCache``) bounded by ``_PAGE_CACHE_ENTRIES`` entries and
+``_PAGE_CACHE_BYTES`` bytes. An entry costs its encoded page plus what
+its stored plan keeps alive in the JVM: the request body that built it
+and the estimated size of its LocalRelation rows (inline ``VALUES``).
+A page's key is the canonicalized *optimized* plan of the page
+DataFrame — where Catalyst has already folded ``current_timestamp()``,
+``current_user()`` and the like into literals — plus the output column
+names (canonicalization erases aliases) and ``(path, size, mtime_ns)``
+of every file that plan reads. A hit answers without running a Spark
+job; the front-ends and the optimizer still run on every request. Only
+plans whose result is a function of that key are cached: deterministic,
+and every leaf a ``file:`` HadoopFsRelation, a LocalRelation,
+OneRowRelation or Range. Anything else (``rand()``, persisted
+intermediates, RDDs, DSv2, Hive, remote filesystems, a file that cannot
+be stat-ed) bypasses the cache. A temp view's file listing is frozen
+when it is registered, so those files are exactly what Spark would
+read; re-registering a name builds a new relation and misses. Every
+page /query serves carries the header ``X-Karna-Cache:
+hit|miss|bypass``. Not measured: a constant the optimizer expands from
+short text (``sequence(1, n)`` folded into an array literal) is held by
+the stored plan but costs only the request's bytes.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import os
+import threading
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import unquote, urlsplit
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +86,21 @@ from karna_spark.frontends.nl import NLError
 from karna_spark.frontends.sql import SQLFrontendError
 
 MAX_PAGE = 10_000  # hard cap on rows per response
+
+# Page cache bounds: stored pages, and their bytes (encoded page plus
+# the request text and LocalRelation rows its stored plan holds).
+_PAGE_CACHE_ENTRIES = 256
+_PAGE_CACHE_BYTES = 16 << 20
+
+# Plan leaves whose rows are fixed by the plan itself; a LocalRelation
+# holds them, so its rows count against the cache's byte budget.
+_LOCAL_RELATION = "org.apache.spark.sql.catalyst.plans.logical.LocalRelation"
+_SELF_CONTAINED_LEAVES = frozenset({
+    "org.apache.spark.sql.catalyst.plans.logical.OneRowRelation",
+    "org.apache.spark.sql.catalyst.plans.logical.Range",
+})
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 
 # Failures caused by the request text: the front-ends' translation
 # errors, and SQL that Spark cannot parse or analyze (ParseException
@@ -175,7 +217,99 @@ def _fk_list(fks) -> bool:
     )
 
 
-def _page_payload(df: DataFrame, body: dict) -> dict:
+class _Page(dict):
+    """A /query response body. ``data`` is its JSON encoding, which is
+    what the handler sends; ``cache`` says how it was served (``hit``,
+    ``miss`` or ``bypass``) for the X-Karna-Cache header."""
+
+    def __init__(self, body: dict, data: bytes | None = None, cache: str = "bypass"):
+        super().__init__(body)
+        self.data = json.dumps(body).encode("utf-8") if data is None else data
+        self.cache = cache
+
+
+class PageCache:
+    """LRU of served pages, bounded by ``_PAGE_CACHE_ENTRIES`` entries
+    and ``_PAGE_CACHE_BYTES`` bytes. An entry costs its encoded page
+    plus what its stored plan holds: the request that built it and the
+    rows of its LocalRelation leaves. Keys come from ``_page_key``; a
+    key match counts as a hit only when the stored canonical plan also
+    equals the request's."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._pages: OrderedDict = OrderedDict()  # key -> (plan, data, nbytes)
+        self._bytes = 0
+
+    def get(self, key, plan) -> bytes | None:
+        with self._lock:
+            entry = self._pages.get(key)
+            if entry is None or not entry[0].equals(plan):
+                return None
+            self._pages.move_to_end(key)
+            return entry[1]
+
+    def put(self, key, plan, data: bytes, held: int) -> None:
+        nbytes = len(data) + held
+        with self._lock:
+            old = self._pages.pop(key, None)
+            if old is not None:
+                self._bytes -= old[2]
+            if nbytes > _PAGE_CACHE_BYTES:
+                return
+            self._pages[key] = (plan, data, nbytes)
+            self._bytes += nbytes
+            while (self._bytes > _PAGE_CACHE_BYTES
+                   or len(self._pages) > _PAGE_CACHE_ENTRIES):
+                _, (_, _, n) = self._pages.popitem(last=False)
+                self._bytes -= n
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _page_key(out: DataFrame):
+    """``(key, canonical plan, held bytes)`` of the page frame ``out``,
+    or None when its rows are not a function of the key (see the module
+    docstring). The key is the optimized plan's semantic hash, the
+    output column names (canonicalization erases them) and the input
+    files' versions; held bytes are the LocalRelation rows the plan
+    keeps alive."""
+    plan = out._jdf.queryExecution().optimizedPlan()
+    files, held = set(), 0
+    for p in [plan, *_seq(plan.subqueriesAll())]:
+        if not p.deterministic():
+            return None
+        for leaf in _seq(p.collectLeaves()):
+            kind = leaf.getClass().getName()
+            if kind == _LOCAL_RELATION:
+                held += leaf.stats().sizeInBytes()
+                continue
+            if kind in _SELF_CONTAINED_LEAVES:
+                continue
+            if kind != _LOGICAL_RELATION:
+                return None
+            rel = leaf.relation()
+            if rel.getClass().getName() != _FS_RELATION:
+                return None
+            files.update(rel.inputFiles())
+    versions = []
+    for uri in sorted(files):
+        parts = urlsplit(uri)
+        if parts.scheme != "file":
+            return None
+        try:
+            st = os.stat(unquote(parts.path))
+        except OSError:  # gone: let the collect report it
+            return None
+        versions.append((uri, st.st_size, st.st_mtime_ns))
+    key = (plan.semanticHash(), tuple(out.columns), tuple(versions))
+    return key, plan.canonicalized(), held
+
+
+def _page_frame(df: DataFrame, body: dict) -> DataFrame:
+    """The DataFrame of the page ``body`` asks for."""
     from karna_spark.io.sinks import page
 
     try:
@@ -190,23 +324,44 @@ def _page_payload(df: DataFrame, body: dict) -> dict:
         missing = [c for c in order_by if c not in df.columns]
         if missing:
             raise ApiError(400, f"order_by columns not in result: {missing}")
-        out = page(df, order_by, limit=limit, offset=offset)
-    elif offset:
+        return page(df, order_by, limit=limit, offset=offset)
+    if offset:
         # offset without an ordering is nondeterministic — refuse.
         raise ApiError(400, "offset requires order_by for a stable page")
-    else:
-        out = df.limit(limit)
+    return df.limit(limit)
+
+
+def _page_payload(
+    df: DataFrame, body: dict, cache: PageCache | None = None, request_bytes: int = 0
+) -> _Page:
+    """The page of ``df`` that ``body`` asks for, from ``cache`` when it
+    holds one under the same key, else collected (and stored, at a cost
+    that counts the ``request_bytes`` that built it)."""
+    from karna_spark.operators.dedup import release_intermediates
+
     try:
-        rows = out.collect()
+        out = _page_frame(df, body)
+        keyed = _page_key(out) if cache is not None else None
+        if keyed is None:
+            return _Page(_collect_page(out))
+        key, plan, held = keyed
+        data = cache.get(key, plan)
+        if data is not None:
+            return _Page(json.loads(data), data, "hit")
+        served = _Page(_collect_page(out), cache="miss")
+        cache.put(key, plan, served.data, held + request_bytes)
+        return served
     finally:
         # Operators that persist intermediates for their own
         # multi-consumer plans (posting-gram dedup, MinHash, CC) hang
         # the cache handles on the result; a long-lived server must
-        # drop those blocks once the page is materialized or they
+        # drop those blocks once the page is served or they
         # accumulate across requests.
-        from karna_spark.operators.dedup import release_intermediates
-
         release_intermediates(df)
+
+
+def _collect_page(out: DataFrame) -> dict:
+    rows = out.collect()
     return {
         "columns": out.columns,
         "rows": [[_json_cell(v) for v in r] for r in rows],
@@ -240,6 +395,7 @@ def create_server(
     metastore's datasets first when one is given."""
     if metastore is not None:
         metastore.attach(spark)
+    pages = PageCache()
 
     class Handler(BaseHTTPRequestHandler):
         server_version = "karna-spark"
@@ -247,16 +403,26 @@ def create_server(
         def log_message(self, *args):  # keep pytest output clean
             pass
 
-        def _send(self, status: int, payload) -> None:
-            data = json.dumps(payload).encode("utf-8")
+        def _send(self, status: int, payload, headers: dict | None = None) -> None:
+            if isinstance(payload, _Page):
+                data = payload.data
+            else:
+                data = json.dumps(payload).encode("utf-8")
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
+            for name, value in (headers or {}).items():
+                self.send_header(name, value)
             self.end_headers()
             self.wfile.write(data)
 
         def _body(self) -> dict:
-            n = int(self.headers.get("Content-Length", 0) or 0)
+            try:
+                n = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                n = -1
+            if n < 0:
+                raise ApiError(400, "Content-Length must be a byte count")
             if n == 0:
                 raise ApiError(400, "empty request body")
             try:
@@ -310,7 +476,10 @@ def create_server(
                 body = self._body()
                 if self.path == "/query":
                     df = _run_query(spark, body, metastore)
-                    return self._send(200, _page_payload(df, body))
+                    served = _page_payload(
+                        df, body, pages, int(self.headers["Content-Length"])
+                    )
+                    return self._send(200, served, {"X-Karna-Cache": served.cache})
                 if self.path == "/datasets":
                     name, path = body.get("name"), body.get("path")
                     opts = body.get("options") or {}

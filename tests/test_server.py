@@ -248,3 +248,286 @@ def test_page_payload_releases_persisted_intermediates(spark):
     payload = _page_payload(df, {"limit": 5})
     assert payload["row_count"] == 5
     assert cached.storageLevel.useMemory is False  # unpersisted
+
+
+def _query(base: str, body: dict) -> tuple[int, dict, str | None]:
+    """POST /query: (status, JSON body, X-Karna-Cache header)."""
+    req = urllib.request.Request(
+        base + "/query",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            return resp.status, json.loads(resp.read()), resp.headers["X-Karna-Cache"]
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read()), e.headers["X-Karna-Cache"]
+
+
+def _last_job_id(spark) -> int:
+    """Highest job ID in Spark's status store once every posted event
+    reached it (the listener bus is asynchronous)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _register(base: str, name: str, path) -> None:
+    status, _ = _post(base, "/datasets", {"name": name, "path": str(path)})
+    assert status == 201
+
+
+@pytest.mark.parametrize("header", ["abc", "-1"])
+def test_malformed_content_length_is_400(server, header):
+    """A Content-Length that is not a byte count answers 400 at once —
+    it used to answer 500 (``abc``) or block reading the body (``-1``)."""
+    import socket
+    from urllib.parse import urlsplit
+
+    url = urlsplit(server)
+    with socket.create_connection((url.hostname, url.port), timeout=10) as sock:
+        sock.sendall(
+            b"POST /query HTTP/1.1\r\nHost: localhost\r\n"
+            b"Content-Type: application/json\r\n"
+            b"Content-Length: " + header.encode() + b"\r\n\r\n"
+        )
+        status_line = sock.makefile("rb").readline()
+    assert status_line.split()[1] == b"400"
+
+
+def test_repeated_query_is_a_cache_hit(server, spark):
+    """The same request twice: the second is served from the page cache
+    with an identical body and without starting a Spark job."""
+    body = {
+        "query": "SELECT n_nationkey, n_name FROM nation WHERE n_regionkey = 3",
+        "order_by": ["n_nationkey"],
+    }
+    before = _last_job_id(spark)
+    status, first, cache = _query(server, body)
+    assert (status, cache) == (200, "miss") and first["row_count"] == 5
+    after_miss = _last_job_id(spark)
+    assert after_miss > before
+    status, second, cache = _query(server, body)
+    assert (status, cache) == (200, "hit")
+    assert second == first
+    assert _last_job_id(spark) == after_miss
+
+
+def test_touched_input_file_misses(server, spark, tmp_path):
+    """A changed mtime on an input file is a new key."""
+    import os
+    import shutil
+
+    path = tmp_path / "region_touch.parquet"
+    shutil.copy(os.path.join(SF_SMOKE, "region.parquet"), path)
+    _register(server, "region_touch", path)
+    body = {"query": "SELECT COUNT(*) AS n FROM region_touch"}
+    try:
+        assert _query(server, body)[2] == "miss"
+        assert _query(server, body)[2] == "hit"
+        st = path.stat()
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        status, out, cache = _query(server, body)
+        assert (status, cache, out["rows"]) == (200, "miss", [[5]])
+    finally:
+        spark.catalog.dropTempView("region_touch")
+
+
+def test_reregistered_name_serves_new_rows(server, spark, tmp_path):
+    old, new = tmp_path / "old.csv", tmp_path / "new.csv"
+    old.write_text("k,v\n1,a\n2,b\n")
+    new.write_text("k,v\n7,x\n8,y\n9,z\n")
+    body = {"query": "SELECT k, v FROM swapped", "order_by": ["k"]}
+    try:
+        _register(server, "swapped", old)
+        assert _query(server, body)[1]["rows"] == [[1, "a"], [2, "b"]]
+        _register(server, "swapped", new)
+        status, out, cache = _query(server, body)
+        assert (status, cache) == (200, "miss")
+        assert out["rows"] == [[7, "x"], [8, "y"], [9, "z"]]
+    finally:
+        spark.catalog.dropTempView("swapped")
+
+
+def test_deleted_cached_file_is_500(server, spark, tmp_path):
+    """A page cached over a file that is then deleted is not served:
+    the request runs and fails as an engine fault."""
+    path = tmp_path / "cached_then_gone.csv"
+    path.write_text("k,v\n1,a\n")
+    _register(server, "cached_then_gone", path)
+    body = {"query": "SELECT * FROM cached_then_gone"}
+    try:
+        assert _query(server, body)[2] == "miss"
+        assert _query(server, body)[2] == "hit"
+        path.unlink()
+        status, out, _ = _query(server, body)
+        assert status == 500 and "FILE_NOT_EXIST" in out["error"]
+    finally:
+        spark.catalog.dropTempView("cached_then_gone")
+
+
+def test_nondeterministic_and_cached_plans_bypass(server, spark):
+    from karna_spark.server import PageCache, _page_payload
+
+    body = {"query": "SELECT r_regionkey, rand() AS r FROM region"}
+    states = [_query(server, body)[2] for _ in range(2)]
+    assert states == ["bypass", "bypass"]
+    cached = spark.range(10).persist()
+    try:
+        page = _page_payload(cached.selectExpr("id * 2 AS x"), {}, PageCache())
+        assert page.cache == "bypass" and page["row_count"] == 10
+    finally:
+        cached.unpersist()
+
+
+def test_output_names_are_part_of_the_key(server):
+    """Canonical plans erase alias names: two requests that differ only
+    in them share a plan, but each gets its own column names."""
+    sql = "SELECT COUNT(*) AS {} FROM region WHERE r_regionkey < 3"
+    first = _query(server, {"query": sql.format("n")})
+    second = _query(server, {"query": sql.format("total")})
+    assert (first[0], first[2], first[1]["columns"]) == (200, "miss", ["n"])
+    assert (second[0], second[2], second[1]["columns"]) == (200, "miss", ["total"])
+    again = _query(server, {"query": sql.format("total")})
+    assert (again[2], again[1]) == ("hit", second[1])
+
+
+def test_large_request_plans_do_not_stay_resident(server, monkeypatch):
+    """A stored plan keeps what the request built alive in the JVM, so
+    an entry costs the request's bytes and its LocalRelation rows: a
+    large inline VALUES or IN list is served but not stored, while a
+    small page under the same budget is."""
+    import karna_spark.server as server_mod
+
+    monkeypatch.setattr(server_mod, "_PAGE_CACHE_BYTES", 32 << 10)
+    values = ", ".join(f"({i})" for i in range(3000))
+    in_list = ", ".join(str(i) for i in range(6000))
+    large = [
+        f"SELECT SUM(x) AS s FROM VALUES {values} AS t(x)",
+        f"SELECT COUNT(*) AS n FROM region WHERE r_regionkey IN ({in_list})",
+    ]
+    for sql in large:
+        assert len(sql) > 16 << 10
+        states = [_query(server, {"query": sql})[2] for _ in range(2)]
+        assert states == ["miss", "miss"]
+    small = "SELECT SUM(x) AS s FROM VALUES (1), (2) AS t(x)"
+    states = [_query(server, {"query": small})[2] for _ in range(2)]
+    assert states == ["miss", "hit"]
+
+
+def test_current_timestamp_is_never_stale(server):
+    import time
+
+    body = {"query": "SELECT current_timestamp() AS t"}
+    first = _query(server, body)
+    time.sleep(0.01)
+    second = _query(server, body)
+    assert first[0] == second[0] == 200
+    assert first[1]["rows"] != second[1]["rows"]
+
+
+def test_page_shape_is_part_of_the_key(server):
+    """limit, offset and order_by each select their own entry."""
+    sql = "SELECT r_regionkey, r_name FROM region"
+    shapes = [
+        {"limit": 2, "order_by": ["r_regionkey"]},
+        {"limit": 3, "order_by": ["r_regionkey"]},
+        {"limit": 2, "offset": 1, "order_by": ["r_regionkey"]},
+        {"limit": 2, "order_by": ["r_name"]},
+    ]
+    pages = []
+    for shape in shapes:
+        status, out, cache = _query(server, {"query": sql, **shape})
+        assert (status, cache) == (200, "miss")
+        pages.append(out["rows"])
+    assert pages == [
+        [[0, "AFRICA"], [1, "AMERICA"]],
+        [[0, "AFRICA"], [1, "AMERICA"], [2, "ASIA"]],
+        [[1, "AMERICA"], [2, "ASIA"]],
+        [[0, "AFRICA"], [1, "AMERICA"]],
+    ]
+    status, out, cache = _query(server, {"query": sql, **shapes[2]})
+    assert (cache, out["rows"]) == ("hit", pages[2])
+
+
+@pytest.mark.parametrize("bound", ["bytes", "entries"])
+def test_cache_evicts_least_recently_used(spark, monkeypatch, bound):
+    import karna_spark.server as server_mod
+    from karna_spark.server import PageCache, _page_payload
+
+    def serve(letter):
+        df = spark.sql(f"SELECT '{letter}' AS x")
+        return _page_payload(df, {}, cache).cache
+
+    cache = PageCache()
+    one_page = len(_page_payload(spark.sql("SELECT 'a' AS x"), {}).data)
+    if bound == "bytes":
+        monkeypatch.setattr(server_mod, "_PAGE_CACHE_BYTES", 2 * one_page)
+    else:
+        monkeypatch.setattr(server_mod, "_PAGE_CACHE_ENTRIES", 2)
+    assert [serve(c) for c in "abc"] == ["miss", "miss", "miss"]
+    assert serve("b") == "hit"  # b and c fit; a, the oldest, went
+    assert serve("a") == "miss"  # and evicts c, now the oldest
+    assert [serve("b"), serve("c")] == ["hit", "miss"]
+
+
+def test_cache_hit_releases_persisted_intermediates(spark):
+    """Served from the cache or not, the page path drops the operator
+    cache handles hung on the result."""
+    from karna_spark.server import PageCache, _page_payload
+
+    cache = PageCache()
+    states = []
+    for _ in range(2):
+        pinned = spark.range(10).persist()
+        pinned.count()
+        df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").select("r_name")
+        df._karna_persisted = [pinned]
+        states.append(_page_payload(df, {"limit": 2}, cache).cache)
+        assert pinned.storageLevel.useMemory is False
+    assert states == ["miss", "hit"]
+
+
+def test_page_cache_bounds_hold_under_concurrent_use(monkeypatch):
+    """Handler threads share one PageCache: its byte count and entry cap
+    stay exact, and every hit is the page stored under that key."""
+    import sys
+
+    import karna_spark.server as server_mod
+
+    class Plan:  # stands in for a canonical JVM plan
+        def __init__(self, k):
+            self.k = k
+
+        def equals(self, other):
+            return self.k == other.k
+
+    monkeypatch.setattr(server_mod, "_PAGE_CACHE_ENTRIES", 8)
+    cache = server_mod.PageCache()
+    wrong = []
+
+    def work(t):
+        for i in range(300):
+            k = (t * 7 + i) % 20
+            page = json.dumps({"rows": [[k]] * (k + 1)}).encode()
+            hit = cache.get(k, Plan(k))
+            if hit is None:
+                cache.put(k, Plan(k), page, k)
+            elif hit != page:
+                wrong.append(k)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == []
+    assert len(cache._pages) <= 8
+    assert cache._bytes == sum(n for _, _, n in cache._pages.values())

@@ -203,14 +203,15 @@ def run_bpe_anchor(spark, sf_dir: str) -> tuple[float, dict]:
     therefore records merges_requested / merges_learned / s_per_merge
     alongside the total; **s_per_merge is the tracked metric** (r8
     verdict item 7)."""
+    from karna_spark import intermediates
     from karna_spark.operators.bpe import learn_bpe, word_frequencies
     from karna_spark.queries.registry import table
 
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    wf = word_frequencies(table(spark, sf_dir, "documents"))
-    merges = learn_bpe(wf, num_merges=200)
-    sec = round(time.perf_counter() - t0, 3)
+    with intermediates.scope():
+        t0 = time.perf_counter()
+        wf = word_frequencies(table(spark, sf_dir, "documents"))
+        merges = learn_bpe(wf, num_merges=200)
+        sec = round(time.perf_counter() - t0, 3)
     detail = {
         "merges_requested": 200,
         "merges_learned": len(merges),
@@ -327,6 +328,7 @@ def main() -> None:
     # load-gated" — inviting inverted adjudication.)
     load_contended = load_ambient[0] >= 1.0
 
+    from karna_spark import intermediates
     from karna_spark.queries import REGISTRY
     from karna_spark.session import get_spark
 
@@ -343,20 +345,20 @@ def main() -> None:
     names = [n for n in HEADLINE if n in REGISTRY or n in unregistered]
 
     def run(name: str) -> float:
-        # Each query is timed standalone: persisted intermediates from
-        # the PREVIOUS query (operators cache sources/candidates for
-        # their own multi-consumer plans) are dropped first, so one
-        # query's cache pressure can't evict/spill into the next
-        # query's measurement — without this, later anchors in the
-        # pass degrade as leaked blocks accumulate.
-        spark.catalog.clearCache()
+        # Each query is timed standalone: what it persisted or
+        # checkpointed (operators cache sources/candidates for their
+        # own multi-consumer plans) is released by its scope after the
+        # timed window, so one query's cache pressure can't
+        # evict/spill into the next query's measurement.
         build = (
             REGISTRY[name].builder if name in REGISTRY else unregistered[name]
         )
-        t0 = time.perf_counter()
-        df = build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        with intermediates.scope():
+            t0 = time.perf_counter()
+            df = build(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            sec = round(time.perf_counter() - t0, 3)
+        return sec
 
     # MID-RUN CONTENTION GATING (r11 verdict item 1): the guest load
     # gate above cannot see host-level waves, so every warm anchor
@@ -407,8 +409,8 @@ def main() -> None:
     # long single-run anchors (skew, BPE) are probe-BRACKETED, not
     # retried: a retry would double bench wall-clock, so a contended
     # bracket just marks them.
-    spark.catalog.clearCache()
-    skew_sec = run_skew_anchor(spark, sf_dir)
+    with intermediates.scope():
+        skew_sec = run_skew_anchor(spark, sf_dir)
     p = pyloop_probe()
     probes["skew_join_aqe"] = [round(p, 3)]
     if p > probe_thresh:

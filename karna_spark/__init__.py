@@ -19,6 +19,7 @@ Layout
 - ``queries``    : the driver-checked query registry (SURVEY.md §2 rows)
 - ``frontends``  : SQL passthrough, GraphQL → DataFrame, NL → SQL
 - ``streaming``  : Structured Streaming variants of the windowed ops
+- ``intermediates``: scopes that own every persist and local checkpoint
 
 Everything here is public-API PySpark: DataFrame/SQL first, Catalyst
 does the optimizing, Pandas UDFs only where built-ins genuinely cannot

@@ -73,6 +73,7 @@ def main(argv: list[str] | None = None) -> int:
         print("error: no query given (see --help)", file=sys.stderr)
         return 2
 
+    from karna_spark import intermediates
     from karna_spark.catalog import load_fixture_tables, register
     from karna_spark.session import get_spark
 
@@ -93,54 +94,50 @@ def main(argv: list[str] | None = None) -> int:
         else:
             register(spark, name, path)
 
-    try:
-        if args.graphql:
-            from karna_spark.frontends.graphql import (
-                rel_schema_from_metastore,
-                translate,
-            )
+    # What the front-end persists to build the result is released once
+    # it is printed (karna_spark.intermediates).
+    with intermediates.scope():
+        try:
+            if args.graphql:
+                from karna_spark.frontends.graphql import (
+                    rel_schema_from_metastore,
+                    translate,
+                )
 
-            # --metastore rides along: mutations are durable and FK
-            # edges nest, matching the HTTP route's behavior
-            df = translate(
-                spark,
-                args.query,
-                rel_schema=(
-                    rel_schema_from_metastore(ms) if ms else None
-                ),
-                metastore=ms,
-            )
-        elif args.nl:
-            from karna_spark.frontends.nl import ask
+                # --metastore rides along: mutations are durable and FK
+                # edges nest, matching the HTTP route's behavior
+                df = translate(
+                    spark,
+                    args.query,
+                    rel_schema=(
+                        rel_schema_from_metastore(ms) if ms else None
+                    ),
+                    metastore=ms,
+                )
+            elif args.nl:
+                from karna_spark.frontends.nl import ask
 
-            df = ask(spark, args.query)
-        else:
-            from karna_spark.frontends.sql import execute
+                df = ask(spark, args.query)
+            else:
+                from karna_spark.frontends.sql import execute
 
-            df = execute(spark, args.query)
-    except Exception as e:  # translator/parse errors are user errors
-        print(f"error: {e}", file=sys.stderr)
-        return 1
+                df = execute(spark, args.query)
+        except Exception as e:  # translator/parse errors are user errors
+            print(f"error: {e}", file=sys.stderr)
+            return 1
 
-    if args.explain:
-        print(df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        ))
-        return 0
+        if args.explain:
+            print(df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            ))
+            return 0
 
-    from karna_spark.operators.dedup import release_intermediates
-
-    try:
         if args.fmt == "table":
             df.show(args.limit, truncate=False)
             return 0
         for row in df.limit(args.limit).collect():
             print(json.dumps(row.asDict(recursive=True), default=str, sort_keys=True))
         return 0
-    finally:
-        # Drop any operator-persisted intermediates now that the
-        # result is materialized (see operators/dedup.py).
-        release_intermediates(df)
 
 
 if __name__ == "__main__":

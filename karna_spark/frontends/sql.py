@@ -194,7 +194,7 @@ def execute(
                 )
             return max(cands)
 
-        def _pin(name: str, v: int, alias: "str | None") -> str:
+        def _version_view(name: str, v: int, alias: "str | None") -> str:
             if name not in snapshots:
                 raise SQLFrontendError(
                     f"time travel on unregistered snapshot table {name!r}"
@@ -204,7 +204,7 @@ def execute(
             return f"{view} AS {alias or name}"
 
         def _pin_version(m: "re.Match") -> str:
-            return _pin(m.group(1), int(m.group(2)), m.group(3))
+            return _version_view(m.group(1), int(m.group(2)), m.group(3))
 
         masked, lits = _mask_literals(sql_text)
 
@@ -216,7 +216,7 @@ def execute(
                 )
             # unwrap the masked literal ('' is the escaped quote)
             ts = lits[int(m.group(2))][1:-1].replace("''", "'")
-            return _pin(name, _resolve_ts_version(snapshots[name], ts), alias)
+            return _version_view(name, _resolve_ts_version(snapshots[name], ts), alias)
 
         masked = _VERSION_RE.sub(_pin_version, masked)
         masked = _TS_RE.sub(_pin_ts, masked)

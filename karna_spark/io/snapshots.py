@@ -46,6 +46,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 from contextlib import contextmanager
 
 from pyspark.sql.types import (
@@ -55,6 +56,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from karna_spark import intermediates
 
 
 @contextmanager
@@ -77,21 +80,6 @@ def _no_partition_inference(spark: "SparkSession"):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-@contextmanager
-def local_checkpoint(df: DataFrame):
-    """``df.localCheckpoint(eager=True)`` for the enclosed block, then
-    released, on an exception too. The checkpoint's blocks outlive
-    the frame — ``DataFrame.unpersist()`` does not reach them (the
-    checkpoint is not in the cache manager) and dropping the frame
-    does not free them — so the exit unpersists the RDD under the
-    checkpointed plan directly."""
-    ckpt = df.localCheckpoint(eager=True)
-    try:
-        yield ckpt
-    finally:
-        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -979,28 +967,6 @@ class SnapshotStore:
         )
 
     @staticmethod
-    def _pin(df: DataFrame):
-        """Persist a multi-consumer verb input for the verb's duration
-        (r13, guide §5): a change feed is consumed 3-4 times per
-        commit — the affected-values collect, the anti-join key set,
-        the union into the write, and (spec-evolved) the merge-on-read
-        key probe — and without a cache every consumer re-runs the
-        caller's upstream plan, a per-commit fixed cost locally and
-        3 extra delta-source passes at 100 TB; a position-delete
-        match set is consumed twice (touched partitions, file). Returns
-        ``(df, release)``; ``release()`` unpersists only what this
-        call persisted (an already-persisted caller frame is left
-        alone, storage decisions stay with the caller). A persist
-        failure fails the verb."""
-        from pyspark.storagelevel import StorageLevel
-
-        lvl = df.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return df, (lambda: None)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df, (lambda: df.unpersist())
-
-    @staticmethod
     def _affected_values(changes: DataFrame, pc: str, op_col: str) -> list[str]:
         """Sorted partition values a change feed touches. The same
         collect validates the feed: an op outside 'I'/'U'/'D' raises
@@ -1117,8 +1083,8 @@ class SnapshotStore:
             )
         # the check and the rewrite must see the same rows: pin the
         # feed here (apply_changes leaves an already-pinned frame alone)
-        feed, release = self._pin(feed)
-        try:
+        with intermediates.scope():
+            feed = intermediates.persist(feed, StorageLevel.MEMORY_AND_DISK)
             base = self.latest_version()
             doc = self._manifest_doc(base)
             if doc["partitions"]:
@@ -1151,8 +1117,6 @@ class SnapshotStore:
                 spark, feed, key_cols, op_col=op_col, _op="upsert",
                 _expect_base=base,
             )
-        finally:
-            release()
 
     def _write_position_deletes(self, matched: DataFrame, v: int) -> dict | None:
         """Write version ``v``'s position-delete file from ``matched``
@@ -1161,8 +1125,8 @@ class SnapshotStore:
         None when nothing matched (then no file is written). The
         matched set is pinned, so the touched-partition list and the
         file come from one scan."""
-        matched, release = self._pin(matched)
-        try:
+        with intermediates.scope():
+            matched = intermediates.persist(matched, StorageLevel.MEMORY_AND_DISK)
             touched = sorted(
                 r["_pval"] for r in matched.select("_pval").distinct().collect()
             )
@@ -1170,8 +1134,6 @@ class SnapshotStore:
                 return None
             ddir = self._ddir(v)
             matched.coalesce(1).write.mode("overwrite").parquet(ddir)
-        finally:
-            release()
         return {
             "id": v,
             "partitions": touched,
@@ -1307,14 +1269,14 @@ class SnapshotStore:
             )
         prev_doc = self._manifest_doc(prev_v)
         v = self._claim_version()
-        # the change feed feeds 3-4 consumers below — pin it (_pin)
-        changes, _release = self._pin(changes)
-        try:
+        # Pin the feed: the affected-values collect, the anti-join key
+        # set, the write and (spec-evolved) the merge-on-read key probe
+        # would each re-run the caller's upstream plan.
+        with intermediates.scope():
+            changes = intermediates.persist(changes, StorageLevel.MEMORY_AND_DISK)
             return self._apply_changes_pinned(
                 spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
             )
-        finally:
-            _release()
 
     def _apply_changes_pinned(
         self, spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
@@ -1504,7 +1466,8 @@ class SnapshotStore:
         # truncates lineage, so both reads see the same rows; merge
         # sources are delta-scale, so materializing is cheap. The
         # checkpoint is released when the merge returns or raises.
-        with local_checkpoint(source) as source:
+        with intermediates.scope():
+            source = intermediates.checkpoint(source, eager=True)
             dup = (
                 source.groupBy(*key_cols)
                 # counting literal 1 under a reserved alias — .count()

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
+
 
 def upsert_partitioned(
     spark: SparkSession,
@@ -53,13 +55,13 @@ def upsert_partitioned(
     keep = existing.join(
         delta.select(*key_cols).distinct(), key_cols, "left_anti"
     )
-    merged = keep.unionByName(delta).localCheckpoint(eager=True)
-
     conf_key = "spark.sql.sources.partitionOverwriteMode"
-    original = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set(conf_key, original)
+    with intermediates.scope():
+        merged = intermediates.checkpoint(keep.unionByName(delta), eager=True)
+        original = spark.conf.get(conf_key, "static")
+        spark.conf.set(conf_key, "dynamic")
+        try:
+            merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        finally:
+            spark.conf.set(conf_key, original)
     return affected

@@ -14,10 +14,12 @@ the loop runs 2-4 times in practice. Each round is one equi-join
 doc id, nothing quadratic. The driver-side loop holds only a changed-
 row COUNT per round (a scalar), never data; labels persist across
 rounds and the previous round's cache is released as soon as the next
-materializes. Every few rounds the label frame is ``localCheckpoint``ed
-so plan lineage stays O(1) instead of growing two joins per round —
-on a deep graph the un-truncated tree re-plans quadratically and can
-overflow executor stacks. If the loop exits without reaching the
+materializes (by hand: a scope cannot release one round early); the
+other caches ride the caller's ``intermediates`` scope. Every few
+rounds the label frame is ``localCheckpoint``ed so plan lineage stays
+O(1) instead of growing two joins per round — on a deep graph the
+un-truncated tree re-plans quadratically and can overflow executor
+stacks. If the loop exits without reaching the
 fixpoint the result would be silently wrong (one component split into
 several), so that raises instead of returning. For adversarially deep
 graphs (long chains) the large-star/small-star variant halves diameter
@@ -30,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from karna_spark import intermediates
 
 
 def connected_components(
@@ -52,7 +56,7 @@ def connected_components(
     # usually unpersisted) upstream pair detection once per branch;
     # explode duplicates each row into both directions inside a single
     # pass instead.
-    edges = (
+    edges = intermediates.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -66,8 +70,8 @@ def connected_components(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # Seed with propagation round 0 FUSED IN: label(v) = min(v, min
     # neighbor). The symmetrized edge list contains every (v, neighbor)
@@ -81,33 +85,31 @@ def connected_components(
         .select("id", F.least("id", "mn").alias("label"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ONE action pins BOTH caches: the label seed reads edges through a
-    # single branch, so evaluating it fills the edges cache blocks as a
-    # side effect (no fan-out race — that needs 2+ branches over the
-    # unpinned frame inside one action) and then the labels cache. The
-    # loop's first join reads edges from cache. One scheduler round
-    # saved per call vs separate count barriers.
-    labels.count()
     # ``cached`` is the persisted handle for the current label frame;
     # ``labels`` may be a projection over it (unpersist must target the
     # frame persist() was called on, or it is a silent no-op and every
     # round's cache leaks).
     cached = labels
-    # Size-adaptive parallelism for the propagation rounds (see
-    # operators/sizing.py): both caches are materialized, so their
-    # real sizes are known. Near-dup label/edge frames are
-    # vertex-scale, orders of magnitude below the corpus — at fixture
-    # scale both collapse to ONE partition and every round's
-    # join+aggregate runs as a single exchange-free task; web-scale
-    # graphs keep size-proportional parallelism. ``edges_pinned``
-    # stays the unpersist handle (coalesce returns a derived frame —
-    # unpersisting that would be a silent no-op).
-    from karna_spark.operators.sizing import coalesce_to_size
-
-    edges_pinned = edges
-    edges = coalesce_to_size(edges, edges)
-    labels = coalesce_to_size(labels, labels)
     try:
+        # ONE action pins BOTH caches: the label seed reads edges
+        # through a single branch, so evaluating it fills the edges
+        # cache blocks as a side effect (no fan-out race — that needs
+        # 2+ branches over the unpinned frame inside one action) and
+        # then the labels cache. The loop's first join reads edges from
+        # cache. One scheduler round saved per call vs separate count
+        # barriers.
+        labels.count()
+        # Size-adaptive parallelism for the propagation rounds (see
+        # operators/sizing.py): both caches are materialized, so their
+        # real sizes are known. Near-dup label/edge frames are
+        # vertex-scale, orders of magnitude below the corpus — at
+        # fixture scale both collapse to ONE partition and every
+        # round's join+aggregate runs as a single exchange-free task;
+        # web-scale graphs keep size-proportional parallelism.
+        from karna_spark.operators.sizing import coalesce_to_size
+
+        edges = coalesce_to_size(edges, edges)
+        labels = coalesce_to_size(labels, labels)
         changed = -1
         for it in range(max_iter):
             neigh = (
@@ -136,16 +138,14 @@ def connected_components(
             # Truncate lineage periodically: without a barrier the plan
             # grows two joins per round and re-planning cost compounds.
             if (it + 1) % checkpoint_every == 0:
-                new_labels = new_labels.localCheckpoint(eager=False)
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-            changed = new_labels.filter(F.col("label") < F.col("old")).count()
-            cached.unpersist()
-            cached = new_labels
-            labels = new_labels.select("id", "label")
+                new_labels = intermediates.checkpoint(new_labels, eager=False)
+            prev, cached = cached, new_labels.persist(StorageLevel.MEMORY_AND_DISK)
+            changed = cached.filter(F.col("label") < F.col("old")).count()
+            prev.unpersist()
+            labels = cached.select("id", "label")
             if changed == 0:
                 break
         if changed != 0:
-            cached.unpersist()
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} "
                 f"rounds ({changed} labels still changing); component "
@@ -153,14 +153,12 @@ def connected_components(
                 "star-contraction variant"
             )
         # Materialize once so the returned frame doesn't depend on the
-        # loop's cache, then release it — callers get a lineage-free,
-        # unpersisted result (no cached partitions leak past the call).
-        out = labels.select("id", F.col("label").alias("cluster_id"))
-        out = out.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
+        # loop's cache, which is released on the way out.
+        return intermediates.checkpoint(
+            labels.select("id", F.col("label").alias("cluster_id")), eager=True
+        )
     finally:
-        edges_pinned.unpersist()
+        cached.unpersist()
 
 
 def cluster_representatives(
@@ -171,12 +169,4 @@ def cluster_representatives(
     """Dedup keep/drop decision: (id, cluster_id, keep) where exactly
     the minimum id of each cluster is kept."""
     cc = connected_components(pairs, src_col, dst_col)
-    # connected_components returned an eagerly-materialized frame, so
-    # any caches the pair-detection pipeline registered on ``pairs``
-    # (e.g. minhash_lsh_pairs' src/candidate frames) are dead weight
-    # from here on — release them instead of leaking them for the
-    # session's lifetime. No-op for plain pair frames.
-    from karna_spark.operators.dedup import release_intermediates
-
-    release_intermediates(pairs)
     return cc.withColumn("keep", F.col("id") == F.col("cluster_id"))

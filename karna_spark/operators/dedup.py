@@ -31,7 +31,10 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.functions.vector import cosine
+# benchmark scripts import the implicit-scope release from here
+from karna_spark.intermediates import release_intermediates  # noqa: F401
 
 # ------------------------------------------------------------------ exact
 
@@ -338,7 +341,7 @@ def minhash_lsh_pairs(
     # without persistence the source is scanned + repartitioned twice
     # per run. MEMORY_AND_DISK: the id+text projection is far smaller
     # than the source rows, and spilling beats a second corpus scan.
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
+    src = intermediates.persist(src, StorageLevel.MEMORY_AND_DISK)
     # Arrow-vectorized text → signature (see minhash_signature_text_udf:
     # one numpy sweep instead of num_perm interpreted passes per row).
     sig_udf = minhash_signature_text_udf(num_perm, shingle_n)
@@ -360,7 +363,8 @@ def minhash_lsh_pairs(
         F.posexplode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias(
             "band", "band_hash"
         ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    banded = intermediates.persist(banded, StorageLevel.MEMORY_AND_DISK)
     left = banded.select("band", "band_hash", F.col("id").alias("id_a"))
     right = banded.select("band", "band_hash", F.col("id").alias("id_b"))
     cands = (
@@ -377,8 +381,7 @@ def minhash_lsh_pairs(
     # over all three consumers would race them into evaluating the
     # signature+band-join pipeline once each before the cache blocks
     # exist — the pipeline's dominant cost, paid up to 3×.
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    cands_persisted = cands
+    cands = intermediates.persist(cands, StorageLevel.MEMORY_AND_DISK)
     cands.count()
     # Exact-Jaccard verify, computed ONLY for docs that appear in a
     # candidate pair: semi-join the corpus down first, then shingle.
@@ -392,25 +395,22 @@ def minhash_lsh_pairs(
     # frame — uncached, the shingle fold over the candidate docs ran
     # twice (profiled as two ~20 task-second jobs). Bounded by
     # |candidate docs|, never the corpus.
-    sh = (
+    sh = intermediates.persist(
         src.join(need, "id", "left_semi")
-        .select("id", word_ngrams(F.col("text"), shingle_n).alias("shingles"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        .select("id", word_ngrams(F.col("text"), shingle_n).alias("shingles")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     cands = (
         cands.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
     )
-    out = (
+    # The four caches are released by the caller's scope once it has
+    # read the result (karna_spark.intermediates).
+    return (
         cands.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    # Long-lived sessions (server, CLI REPL) must be able to release
-    # the cached blocks once the result is materialized; Spark's
-    # ContextCleaner only reclaims them on GC. Handles ride on the
-    # result; see release_intermediates().
-    out._karna_persisted = [cands_persisted, src, banded, sh]  # type: ignore[attr-defined]
-    return out
 
 
 def minhash_signature_table(
@@ -495,7 +495,7 @@ def minhash_lsh_incremental_pairs(
         if src.rdd.getNumPartitions() < sc.defaultParallelism:
             src = src.repartition(sc.defaultParallelism, "id")
         # Two consumers (signatures, verify re-shingle) — persist once.
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        src = intermediates.persist(src, StorageLevel.MEMORY_AND_DISK)
         sig = src.select(
             "id", "is_new", sig_udf(F.col("text")).alias("sig")
         ).filter(F.col("sig").isNotNull())
@@ -510,7 +510,7 @@ def minhash_lsh_incremental_pairs(
         src = delta_rows.filter(~too_short)
         if src.rdd.getNumPartitions() < sc.defaultParallelism:
             src = src.repartition(sc.defaultParallelism, "id")
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        src = intermediates.persist(src, StorageLevel.MEMORY_AND_DISK)
         sig = (
             base_signatures.select(
                 "id", F.lit(False).alias("is_new"), "sig"
@@ -547,8 +547,7 @@ def minhash_lsh_incremental_pairs(
         .select("new_id", "match_id")
         .dropDuplicates(["new_id", "match_id"])
     )
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    cands_persisted = cands
+    cands = intermediates.persist(cands, StorageLevel.MEMORY_AND_DISK)
     cands.count()  # cache barrier before the three consumers below
     need = (
         cands.select(F.col("new_id").alias("id"))
@@ -558,10 +557,13 @@ def minhash_lsh_incremental_pairs(
     # PERSISTED (r13): both verify joins consume sh — uncached, the
     # candidate-doc shingle fold ran twice (same double-compute the
     # batch pipeline had; bounded by |candidate docs|).
-    sh = verify_text.join(need, "id", "left_semi").select(
-        "id", word_ngrams(F.col("text"), shingle_n).alias("shingles")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    verified = (
+    sh = intermediates.persist(
+        verify_text.join(need, "id", "left_semi").select(
+            "id", word_ngrams(F.col("text"), shingle_n).alias("shingles")
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    return (
         cands.join(
             sh.select(F.col("id").alias("new_id"), F.col("shingles").alias("sh_a")),
             "new_id",
@@ -576,20 +578,6 @@ def minhash_lsh_incremental_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "match_id", "jaccard")
     )
-    verified._karna_persisted = [cands_persisted, src, sh]  # type: ignore[attr-defined]
-    return verified
-
-
-def release_intermediates(result: DataFrame, blocking: bool = False) -> None:
-    """Unpersist the cached intermediates of an operator result.
-
-    Call after the returned DataFrame has been fully materialized
-    (collected / written). No-op for results without cached handles."""
-    for cached in getattr(result, "_karna_persisted", []):
-        try:
-            cached.unpersist(blocking)
-        except Exception:
-            pass
 
 
 # -------------------------------------------------------------- SimHash

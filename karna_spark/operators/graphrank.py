@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
+
 TOTAL = 10**12
 
 
@@ -63,16 +65,17 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     # The pair list feeds degree counting (twice, via the endpoint
     # union) and the orientation join; the degree frame feeds both
     # endpoint attachments and the final left join. Materialize each
-    # once (lazy localCheckpoint — released with the frame by the
-    # ContextCleaner, the pagerank/bm25 pattern) so the upstream
-    # edge-building scans run a single time.
-    pairs = pairs.localCheckpoint(eager=False)
+    # once (lazy localCheckpoint, released by the caller's scope — the
+    # pagerank/bm25 pattern) so the upstream edge-building scans run a
+    # single time.
+    pairs = intermediates.checkpoint(pairs, eager=False)
     deg = (
         pairs.select(F.col("a").alias("id"))
         .unionAll(pairs.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count("*").cast("bigint").alias("deg"))
-    ).localCheckpoint(eager=False)
+    )
+    deg = intermediates.checkpoint(deg, eager=False)
     da = deg.select(F.col("id").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("id").alias("b"), F.col("deg").alias("db"))
     keyed = pairs.join(da, "a").join(db, "b")
@@ -85,9 +88,9 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
     )
     # Oriented edges feed the wedge join twice and the closing join
-    # once — materialize once (lazy localCheckpoint: released with the
-    # frame by the ContextCleaner, the pagerank/bm25 pattern).
-    oriented = oriented.localCheckpoint(eager=False)
+    # once — materialize once (lazy localCheckpoint, released by the
+    # caller's scope: the pagerank/bm25 pattern).
+    oriented = intermediates.checkpoint(oriented, eager=False)
     w1 = oriented.select(
         F.col("src").alias("u"), F.col("dst").alias("v"),
         F.col("ddeg").alias("vdeg"),
@@ -132,9 +135,9 @@ def pagerank_exact(
     nodes = src_ids.union(dst_ids).distinct()
     outd = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # Edge list + out-degrees is consumed once per iteration: a lazy
-    # localCheckpoint materializes it at first action and lets the
-    # ContextCleaner release it with the frame (the bm25 pattern).
-    edges_d = edges.join(outd, "src").localCheckpoint(eager=False)
+    # localCheckpoint materializes it at first action; the caller's
+    # scope releases it (the bm25 pattern).
+    edges_d = intermediates.checkpoint(edges.join(outd, "src"), eager=False)
 
     stats = nodes.agg(F.count("*").alias("n_nodes"))
     base_frame = nodes.crossJoin(F.broadcast(stats)).select(

@@ -37,6 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from karna_spark import intermediates
 
 
 def quantize_vectors(
@@ -121,12 +124,12 @@ def kmeans_lloyd_exact(
     driver (centroid literals for the next pass); the final update
     stays engine-side so the returned frame is Spark-computed. The
     quantized input is persisted once for the ``iters`` passes and
-    released via the ``_karna_persisted`` contract (the server/CLI
-    result paths and tests unpersist it after materialization).
+    released by the caller's scope (``karna_spark.intermediates``).
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    e = quantize_vectors(df, id_col, vec_col, scale, offset).persist()
+    e = quantize_vectors(df, id_col, vec_col, scale, offset)
+    e = intermediates.persist(e, StorageLevel.MEMORY_AND_DISK_DESER)
 
     init_rows = e.orderBy("vec_id").limit(k).collect()  # TakeOrdered: k rows
     cents = [(i, [int(v) for v in r["xq"]]) for i, r in enumerate(init_rows)]
@@ -144,7 +147,7 @@ def kmeans_lloyd_exact(
         "cid int, dim int, c long",
     )
     s_final = _cluster_sums(_assign(e, cents))
-    out = (
+    return (
         prev_df
         .join(F.broadcast(s_final), ["cid", "dim"], "left")
         .select(
@@ -156,5 +159,3 @@ def kmeans_lloyd_exact(
             F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_points"),
         )
     )
-    out._karna_persisted = [e]  # type: ignore[attr-defined]
-    return out

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from karna_spark import intermediates
+
 E6 = 1_000_000
 
 
@@ -65,17 +67,16 @@ def train_bigram_model(
     explode runs exactly once no matter how many consumers (tot /
     vocab / V / model / floors) hang off it — unpersisted, Catalyst
     re-executes the corpus pass per consumer, a 4× scan at 100 TB.
-    The handle rides on the returned frames (``_karna_persisted``,
-    the repo's release contract).
+    The caller's scope releases it (``karna_spark.intermediates``).
     """
-    cnt = (
+    cnt = intermediates.persist(
         train.select(
             F.col(lang_col).alias("lang"),
             F.explode(char_bigrams(F.col(text_col))).alias("bg"),
         )
         .groupBy("lang", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.count(F.lit(1)).alias("c")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("tot"))
     vocab = cnt.select("bg").distinct()
@@ -105,8 +106,6 @@ def train_bigram_model(
             .alias("lp_e6"),
         )
     )
-    model._karna_persisted = [cnt]  # type: ignore[attr-defined]
-    floors._karna_persisted = [cnt]  # type: ignore[attr-defined]
     return model, floors
 
 

@@ -42,6 +42,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from karna_spark import intermediates
 
 MICRO = 1_000_000
 HALF = MICRO // 2
@@ -121,42 +124,40 @@ def train_hard_sigmoid_logreg(
     # scale with the co-partitioning kept.
     from karna_spark.operators.sizing import cached_partition_target
 
-    raw = feats.persist()
-    n = raw.select("doc_id").distinct().count()
-    w = {
-        r["b"]: 0
-        for r in raw.select("b").distinct().collect()
-    }
-    target = cached_partition_target(raw)
-    feats = (
-        raw.repartition(target, "doc_id")
-        if target is not None
-        else raw.repartition("doc_id")
-    ).persist()
-    for _ in range(iters):
-        z = _z_frame(feats, w)
-        p = z.select("doc_id", "y", _p_expr("z").alias("p"))
-        grad = (
-            feats.join(p, ["doc_id", "y"])
-            .groupBy("b")
-            .agg(
-                F.sum(
-                    (F.col("y").cast("bigint") * MICRO - F.col("p"))
-                    * F.col("x")
-                )
-                .cast("bigint")
-                .alias("g")
-            )
-            .collect()
+    # Nothing downstream re-reads the TRAIN slice (scoring uses its
+    # own), so the caches are released before returning.
+    with intermediates.scope():
+        raw = intermediates.persist(feats, StorageLevel.MEMORY_AND_DISK_DESER)
+        n = raw.select("doc_id").distinct().count()
+        w = {
+            r["b"]: 0
+            for r in raw.select("b").distinct().collect()
+        }
+        target = cached_partition_target(raw)
+        feats = intermediates.persist(
+            raw.repartition(target, "doc_id")
+            if target is not None
+            else raw.repartition("doc_id"),
+            StorageLevel.MEMORY_AND_DISK_DESER,
         )
-        for r in grad:
-            w[r["b"]] = w[r["b"]] + int(r["g"]) // (n * inv_lr)
-    # every consumer of the cached feature frame is a completed
-    # collect by now — release the executors' cache immediately
-    # rather than riding the _karna_persisted contract (nothing
-    # downstream re-reads the TRAIN slice; scoring uses its own)
-    feats.unpersist()
-    raw.unpersist()
+        for _ in range(iters):
+            z = _z_frame(feats, w)
+            p = z.select("doc_id", "y", _p_expr("z").alias("p"))
+            grad = (
+                feats.join(p, ["doc_id", "y"])
+                .groupBy("b")
+                .agg(
+                    F.sum(
+                        (F.col("y").cast("bigint") * MICRO - F.col("p"))
+                        * F.col("x")
+                    )
+                    .cast("bigint")
+                    .alias("g")
+                )
+                .collect()
+            )
+            for r in grad:
+                w[r["b"]] = w[r["b"]] + int(r["g"]) // (n * inv_lr)
     return w, n
 
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
+
 
 def bm25_scores(
     docs: DataFrame,
@@ -55,12 +57,12 @@ def bm25_scores(
         .agg(F.count("*").alias("tf"))
     )
     # tf feeds both idf and the scored join; a lazy localCheckpoint
-    # materializes it once at first action (build stays action-free)
-    # and — unlike persist(), whose CacheManager entry would outlive
-    # this query with no unpersist hook — its blocks are released by
-    # the ContextCleaner as soon as the frame is garbage-collected.
-    # Bounded small: docs containing a query term × |terms| rows.
-    tf = tf.localCheckpoint(eager=False)
+    # materializes it once at first action (build stays action-free).
+    # Its blocks stay registered until the caller's scope releases
+    # them: Spark's ContextCleaner does not free them when the frame is
+    # dropped. Bounded small: docs containing a query term × |terms|
+    # rows.
+    tf = intermediates.checkpoint(tf, eager=False)
     idf = (
         tf.groupBy("term")
         .agg(F.countDistinct(id_col).alias("df"))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.operators.text import words
 
 MAX_PIECE = 4
@@ -327,14 +328,17 @@ def em_rescored_vocab(
     # and the expression tree grows exponentially — the same lineage
     # cut the iterative connected-components operator uses. The frame
     # is the zipf-bounded distinct-word set, not the corpus.
-    paths = path_pieces(viterbi_choice_frame(occ, vocab1)).localCheckpoint()
-    counts = (
-        paths.join(wf, "w")
-        .select(F.explode("pieces").alias("piece"), "cnt")
-        .groupBy("piece")
-        .agg(F.sum("cnt").cast("long").alias("c2"))
-        .collect()
-    )
+    with intermediates.scope():
+        paths = intermediates.checkpoint(
+            path_pieces(viterbi_choice_frame(occ, vocab1)), eager=True
+        )
+        counts = (
+            paths.join(wf, "w")
+            .select(F.explode("pieces").alias("piece"), "cnt")
+            .groupBy("piece")
+            .agg(F.sum("cnt").cast("long").alias("c2"))
+            .collect()
+        )
     c2 = {r["piece"]: r["c2"] for r in counts}
     vocab2_counts: dict[str, int] = {}
     for p in vocab1:

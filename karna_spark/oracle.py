@@ -103,12 +103,14 @@ def compare_frames(name: str, spark_rows, spark_cols, duck_rows, duck_cols) -> P
 
 def check_query(spark, con: duckdb.DuckDBPyConnection, name: str, sf_dir: str) -> ParityResult:
     """Run one registry query on both engines and compare."""
+    from karna_spark import intermediates
     from karna_spark.queries import REGISTRY
 
     q = REGISTRY[name]
-    sdf = q.builder(spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    with intermediates.scope():
+        sdf = q.builder(spark, sf_dir)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
     if q.oracle is None:
         return ParityResult(name, len(spark_rows) >= 0, f"rows-only: {len(spark_rows)} rows")
     cur = con.execute(q.oracle)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.operators.dedup import (
     blocked_jaccard_pairs,
     embedding_near_dup_pairs,
@@ -405,8 +406,8 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the pair stage and the final keep join) — materialize it once;
     # an eager localCheckpoint also truncates lineage so no consumer
     # re-runs the argmax pipeline.
-    asg = assign_nearest_centroid(emb, seed_centroids(emb, 8)).localCheckpoint(
-        eager=True
+    asg = intermediates.checkpoint(
+        assign_nearest_centroid(emb, seed_centroids(emb, 8)), eager=True
     )
     drop = semantic_drop_ids(asg, 0.35).withColumn("is_dropped", F.lit(1))
     return (
@@ -471,15 +472,13 @@ def dedup_shared_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = keep.select(F.col("g"), F.col("doc_id").alias("id_a"))
     b = keep.select(F.col("g"), F.col("doc_id").alias("id_b"))
-    out = (
+    return (
         a.join(b, "g")
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("bigint").alias("shared_grams"))
         .where(F.col("shared_grams") >= 3)
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out
 
 
 def _posting_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,8 +490,8 @@ def _posting_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     text passes instead of one. The count() pins the cache before the
     plan fans out (the lazy-persist race documented in
     operators/dedup.py). At 100 TB the cached frame spills to disk,
-    which still beats recomputing string ops; callers hand the
-    persisted handle back on the result for release."""
+    which still beats recomputing string ops; the caller's scope
+    releases it (``karna_spark.intermediates``)."""
     from pyspark.storagelevel import StorageLevel
 
     from karna_spark.operators.text import word_ngrams
@@ -506,7 +505,8 @@ def _posting_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select(
         "doc_id",
         F.explode(F.array_distinct(word_ngrams(F.col("text"), 5))).alias("g"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    grams = intermediates.persist(grams, StorageLevel.MEMORY_AND_DISK)
     grams.count()
     return grams
 
@@ -572,7 +572,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_grams").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_grams").alias("nb"))
-    out = (
+    return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .where(5 * F.col("shared_grams") >= 3 * F.least("na", "nb"))
@@ -584,8 +584,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("shared_grams").cast("double") / F.col("nb"), 4).alias("cont_b"),
         )
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -693,7 +691,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _posting_grams(spark, sf_dir)
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("doc_id") == F.col("first_doc")).cast("bigint")
-    out = (
+    return (
         grams.join(firsts, "g")
         .groupBy("doc_id")
         .agg(
@@ -709,5 +707,3 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty"),
         )
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out

@@ -168,9 +168,6 @@ _NL_AGG = "total quantity by return flag in lineitem with discount under 0.05"
 # (l_quantity is whole-valued in the fixtures — SUM of whole doubles is
 # exact integer arithmetic below 2^53, order-independent.)
 
-_NL_TOPN = "top 15 customers by acctbal"
-
-
 @register_query(
     "frontend_nl_aggregate",
     oracle=(
@@ -213,17 +210,6 @@ def frontend_nl_join_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _fixtures(spark, sf_dir)
     return ask(spark, _NL_JOIN_AGG)
-
-
-def frontend_nl_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by frontend_nl_bm25_topk + frontend_nl_aggregate (top-k intent with scoring, superset translation). The builder stays for plan/bench/test surfaces.
-
-    NL front-end, top-N form — unique-key tie-break keeps the page
-    deterministic at any parallelism; plans as TakeOrderedAndProject."""
-    from karna_spark.frontends.nl import ask
-
-    _fixtures(spark, sf_dir)
-    return ask(spark, _NL_TOPN)
 
 
 _GQL_NESTED_LIST = """

@@ -157,22 +157,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- J5
-def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by similarity_topk_bruteforce (J5 cross product as broadcast NLJ — the plan you want at scale). The builder stays for plan/bench/test surfaces.
-
-    J5: explicit Cartesian product of two tiny relations. Cross joins
-    are only ever sane when at least one side is broadcast-small — this
-    one is 5×3."""
-    region = table(spark, sf_dir, "region")
-    statuses = table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
-    return (
-        region.crossJoin(F.broadcast(statuses))
-        .groupBy("r_name", "o_orderstatus")
-        .agg(F.count("*").alias("n_pairs"))
-    )
-
-
 # ---------------------------------------------------------------- J6
 @register_query(
     "join_theta_range",

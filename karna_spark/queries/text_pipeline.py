@@ -9,6 +9,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.operators.multimodal import (
     attach_media_metadata,
     decode_media,
@@ -1407,11 +1408,12 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the segment explosion once — three consumers (df counts,
     # the anti-probe, per-doc totals) would otherwise each re-scan and
     # re-split the corpus text (the _posting_grams pattern; count()
-    # pins the cache before the plan fans out, caller releases via the
-    # _karna_persisted contract).
-    seg_rows = docs.select(
-        "doc_id", F.posexplode(segs).alias("g", "seg")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # pins the cache before the plan fans out, the caller's scope
+    # releases it).
+    seg_rows = intermediates.persist(
+        docs.select("doc_id", F.posexplode(segs).alias("g", "seg")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     seg_rows.count()
     boiler = (
         seg_rows.select("seg", "doc_id")
@@ -1439,14 +1441,12 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("cleaned_text"),
     )
-    out = tot.join(reb, "doc_id", "left").select(
+    return tot.join(reb, "doc_id", "left").select(
         "doc_id",
         "n_segs",
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
         F.coalesce(F.col("cleaned_text"), F.lit("")).alias("cleaned_text"),
     )
-    out._karna_persisted = [seg_rows]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -1546,14 +1546,14 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split ran twice per run (once per consumer). The cache holds
     # (doc_id, text, ws) — one corpus pass's projection, the same
     # MEMORY_AND_DISK posture as minhash's src cache.
-    base = docs.select("doc_id", "text", ws.alias("ws")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    base = intermediates.persist(
+        docs.select("doc_id", "text", ws.alias("ws")), StorageLevel.MEMORY_AND_DISK
     )
     n = F.size(F.col("ws"))
     # (doc_id, s 1-based, g) for every K-token window; persisted once
     # (dup detection + hit projection consume it; the _posting_grams
-    # pattern, released via the _karna_persisted contract).
-    grams = (
+    # pattern, released by the caller's scope).
+    grams = intermediates.persist(
         base.filter(n >= K)
         .select(
             "doc_id",
@@ -1569,8 +1569,8 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("off") + 1).cast("int").alias("s"),
             "g",
             F.xxhash64("g").alias("h"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     grams.count()
     # Phase 1: hash-level df — the only corpus-scale shuffle, 8-byte keys.
@@ -1597,7 +1597,7 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(MERGE_INTERVALS_EXPR).alias("spans")
     )
     kept_ws = drop_spans(F.col("ws"), F.col("spans"))
-    out = base.join(merged, "doc_id", "left").select(
+    return base.join(merged, "doc_id", "left").select(
         "doc_id",
         F.when(F.col("spans").isNull(), F.concat_ws(" ", F.col("ws")))
         .otherwise(F.concat_ws(" ", kept_ws))
@@ -1607,8 +1607,6 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("n_removed"),
     )
-    out._karna_persisted = [grams, base]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -1991,7 +1989,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from karna_spark.operators.text import words
 
     is_t = (F.col("source") == "src0") & (F.col("lang") == "en")
-    w = (
+    w = intermediates.checkpoint(
         docs.select(
             "doc_id",
             is_t.alias("is_t"),
@@ -2003,15 +2001,16 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.conv(F.substring(F.md5(F.col("word")), 1, 2), 16, 10)
             .cast("bigint")
             .alias("b"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     # ≤256 rows but TWO consumers (totals + lambda) — checkpoint so
     # the corpus-scale bucket aggregate runs once, not twice.
     c = w.groupBy("b").agg(
         F.sum(F.when(F.col("is_t"), 1).otherwise(0)).cast("bigint").alias("tcnt"),
         F.sum(F.when(F.col("is_t"), 0).otherwise(1)).cast("bigint").alias("rcnt"),
-    ).localCheckpoint(eager=False)
+    )
+    c = intermediates.checkpoint(c, eager=False)
     tot = c.agg(
         F.sum("tcnt").cast("bigint").alias("t_total"),
         F.sum("rcnt").cast("bigint").alias("r_total"),
@@ -2512,7 +2511,7 @@ def text_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = d.filter(F.col("doc_id") % 2 == 1)
     model, floors = train_bigram_model(train, "text", "lang")
     pred = classify(test, model, floors, "doc_id", "text")
-    out = (
+    return (
         pred.join(test.select("doc_id", F.col("lang").alias("lang_true")), "doc_id")
         .groupBy("lang_true", "lang_pred")
         .agg(
@@ -2520,8 +2519,6 @@ def text_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("score_e6").cast("bigint").alias("sum_score_e6"),
         )
     )
-    out._karna_persisted = getattr(model, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
 
 
 # ---------------------------------------------------------------- J20

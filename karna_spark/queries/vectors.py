@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.functions.vector import cosine, dot, norm_l2
 from karna_spark.operators.similarity import (
     ann_bruteforce_topk,
@@ -472,10 +473,10 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERSISTED (r13): emb feeds five consumers (stored-index build,
     # delta slice, centroid seed rows, the probed search, and the
     # brute-force recall referee) — uncached, each re-ran the spread
-    # exchange plus the scan. One pass's projection, released via
-    # _karna_persisted.
-    emb = spread_scan(table(spark, sf_dir, "embeddings")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # exchange plus the scan. One pass's projection, released by the
+    # caller's scope.
+    emb = intermediates.persist(
+        spread_scan(table(spark, sf_dir, "embeddings")), StorageLevel.MEMORY_AND_DISK
     )
     base = emb.filter(F.col("vec_id") % 50 != 0)
     delta = emb.filter(F.col("vec_id") % 50 == 0)
@@ -490,9 +491,10 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The stored index: in production this is read back from a table
     # keyed/partitioned by bucket and appended per ingest; persist
-    # stands in for the store here (released via _karna_persisted).
-    idx = ivf_assignment_table(base, cents, "vec_id", "embedding").persist(
-        StorageLevel.MEMORY_AND_DISK
+    # stands in for the store here (released by the caller's scope).
+    idx = intermediates.persist(
+        ivf_assignment_table(base, cents, "vec_id", "embedding"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     idx.count()
     delta_asg = ivf_assignment_table(delta, cents, "vec_id", "embedding")
@@ -507,9 +509,7 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=3,
         corpus_assignments=idx.unionByName(delta_asg),
     )
-    out = _recall_vs_bruteforce(emb, delta, ann, k=10)
-    out._karna_persisted = [idx, emb]  # type: ignore[attr-defined]
-    return out
+    return _recall_vs_bruteforce(emb, delta, ann, k=10)
 
 
 @register_query(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from karna_spark.operators.sessionize import session_stats, sessionize_salted
+from karna_spark.operators.sessionize import sessionize_salted
 from karna_spark.queries.registry import register_query, table
 
 
@@ -115,20 +115,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey", "o_orderkey", "o_totalprice", F.row_number().over(w).alias("rn")
         )
         .filter(F.col("rn") <= 3)
-    )
-
-
-# ---------------------------------------------------------------- W5
-def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry (r10 consolidation): strictly dominated by sessionization_salted (same gap semantics; its oracle IS the plain ground truth, plus skew salting). The builder stays for plan/bench/test surfaces.
-
-    W5: gap-based sessions (30 min) via the lag→flag→running-sum
-    idiom (karna_spark.operators.sessionize), rolled up per user."""
-    ev = table(spark, sf_dir, "events")
-    stats = session_stats(ev, "user_id", "ts", gap_seconds=1800)
-    return stats.groupBy("user_id").agg(
-        F.max("session_id").cast("bigint").alias("n_sessions"),
-        F.sum("n_events").alias("n_events"),
     )
 
 

@@ -34,8 +34,9 @@ and its declared foreign_keys become GraphQL nesting relationships
 Errors: a request the server cannot serve as asked — malformed JSON,
 a body that is not a JSON object, a query the front-ends cannot
 translate, SQL that Spark cannot parse or analyze — answers 4xx with
-``{"error": ...}``. Any other failure is an engine fault (a dataset's
-files gone, a JVM or I/O error) and answers 500.
+``{"error": ...}``; a body shorter than its ``Content-Length``, 408
+after ``_SOCKET_TIMEOUT_S``. Any other failure is an engine fault (a
+dataset's files gone, a JVM or I/O error) and answers 500.
 
 Scale posture: every /query collects at most ``limit`` rows
 (hard-capped) through a TakeOrderedAndProject plan, and
@@ -81,11 +82,16 @@ from urllib.parse import unquote, urlsplit
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from karna_spark import intermediates
 from karna_spark.frontends.graphql import GraphQLError
 from karna_spark.frontends.nl import NLError
 from karna_spark.frontends.sql import SQLFrontendError
 
 MAX_PAGE = 10_000  # hard cap on rows per response
+
+# Seconds a handler waits on its socket (a request body that does not
+# arrive, a client that stops reading) before giving the connection up.
+_SOCKET_TIMEOUT_S = 30.0
 
 # Page cache bounds: stored pages, and their bytes (encoded page plus
 # the request text and LocalRelation rows its stored plan holds).
@@ -337,27 +343,17 @@ def _page_payload(
     """The page of ``df`` that ``body`` asks for, from ``cache`` when it
     holds one under the same key, else collected (and stored, at a cost
     that counts the ``request_bytes`` that built it)."""
-    from karna_spark.operators.dedup import release_intermediates
-
-    try:
-        out = _page_frame(df, body)
-        keyed = _page_key(out) if cache is not None else None
-        if keyed is None:
-            return _Page(_collect_page(out))
-        key, plan, held = keyed
-        data = cache.get(key, plan)
-        if data is not None:
-            return _Page(json.loads(data), data, "hit")
-        served = _Page(_collect_page(out), cache="miss")
-        cache.put(key, plan, served.data, held + request_bytes)
-        return served
-    finally:
-        # Operators that persist intermediates for their own
-        # multi-consumer plans (posting-gram dedup, MinHash, CC) hang
-        # the cache handles on the result; a long-lived server must
-        # drop those blocks once the page is served or they
-        # accumulate across requests.
-        release_intermediates(df)
+    out = _page_frame(df, body)
+    keyed = _page_key(out) if cache is not None else None
+    if keyed is None:
+        return _Page(_collect_page(out))
+    key, plan, held = keyed
+    data = cache.get(key, plan)
+    if data is not None:
+        return _Page(json.loads(data), data, "hit")
+    served = _Page(_collect_page(out), cache="miss")
+    cache.put(key, plan, served.data, held + request_bytes)
+    return served
 
 
 def _collect_page(out: DataFrame) -> dict:
@@ -399,6 +395,7 @@ def create_server(
 
     class Handler(BaseHTTPRequestHandler):
         server_version = "karna-spark"
+        timeout = _SOCKET_TIMEOUT_S
 
         def log_message(self, *args):  # keep pytest output clean
             pass
@@ -426,7 +423,14 @@ def create_server(
             if n == 0:
                 raise ApiError(400, "empty request body")
             try:
-                body = json.loads(self.rfile.read(n))
+                raw = self.rfile.read(n)
+            except TimeoutError as e:  # fewer bytes than Content-Length
+                self.close_connection = True
+                raise ApiError(
+                    408, f"request body not received within {self.timeout:g} s"
+                ) from e
+            try:
+                body = json.loads(raw)
             except ValueError as e:  # malformed JSON or UTF-8
                 raise ApiError(400, f"invalid JSON body: {e}") from e
             if not isinstance(body, dict):
@@ -475,10 +479,12 @@ def create_server(
             try:
                 body = self._body()
                 if self.path == "/query":
-                    df = _run_query(spark, body, metastore)
-                    served = _page_payload(
-                        df, body, pages, int(self.headers["Content-Length"])
-                    )
+                    # releases what the front-end persisted, on failure too
+                    with intermediates.scope():
+                        df = _run_query(spark, body, metastore)
+                        served = _page_payload(
+                            df, body, pages, int(self.headers["Content-Length"])
+                        )
                     return self._send(200, served, {"X-Karna-Cache": served.cache})
                 if self.path == "/datasets":
                     name, path = body.get("name"), body.get("path")

@@ -37,6 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from karna_spark import intermediates
 from karna_spark.catalog import read_fixture_table
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -508,7 +509,7 @@ def foreachbatch_snapshot_rollup(
     final version; merge is exact (integer cents) so the final
     snapshot hash-matches the batch recompute regardless of how the
     stream was split or ordered."""
-    from karna_spark.io.snapshots import SnapshotStore, local_checkpoint
+    from karna_spark.io.snapshots import SnapshotStore
     from karna_spark.operators.rollup import merge_rollups, rollup_slice
 
     store = SnapshotStore(store_root, "event_type")
@@ -530,7 +531,8 @@ def foreachbatch_snapshot_rollup(
             merged = delta
         # merged carries every row for the affected partitions, so the
         # keyed upsert (replace-by-key) publishes exact merged state.
-        with local_checkpoint(merged) as merged:
+        with intermediates.scope():
+            merged = intermediates.checkpoint(merged, eager=True)
             store.upsert(spark, merged, key_cols=["bucket_ts", "event_type"])
 
     stream = events_stream(spark, landing_dir)
@@ -614,11 +616,9 @@ def foreachbatch_incremental_dedup(
     exactly as Spark's docs prescribe for foreachBatch sinks; the
     single-process fixture run cannot redeliver, so the plain append
     keeps the job readable here."""
-    from karna_spark.io.snapshots import local_checkpoint
     from karna_spark.operators.dedup import (
         minhash_lsh_incremental_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
 
     sig_dir = os.path.join(state_root, "sigs")
@@ -626,7 +626,8 @@ def foreachbatch_incremental_dedup(
     pairs_dir = os.path.join(state_root, "pairs")
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        with local_checkpoint(batch_df) as batch_df:
+        with intermediates.scope():
+            batch_df = intermediates.checkpoint(batch_df, eager=True)
             have_state = os.path.isdir(sig_dir)
             if have_state:
                 sigs = spark.read.parquet(sig_dir)
@@ -643,7 +644,6 @@ def foreachbatch_incremental_dedup(
                 .write.mode("append")
                 .parquet(pairs_dir)
             )
-            release_intermediates(pairs)
             (
                 minhash_signature_table(batch_df, "doc_id", "text")
                 .write.mode("append")

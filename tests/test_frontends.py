@@ -452,16 +452,14 @@ def test_sql_guard_blocks_writes(fixtures):
 
 # ------------------------------------------------- operator-backed NL
 def test_nl_dedup_intent_phrasings_and_guard(fixtures):
+    from karna_spark import intermediates
     from karna_spark.frontends.nl import NLError, ask
 
-    a = ask(fixtures, "find near-duplicate documents")
-    b = ask(fixtures, "Near duplicates in documents?")
-    rows_a = sorted((r["id_a"], r["id_b"]) for r in a.collect())
-    rows_b = sorted((r["id_a"], r["id_b"]) for r in b.collect())
-    from karna_spark.operators.dedup import release_intermediates
-
-    release_intermediates(a)
-    release_intermediates(b)
+    with intermediates.scope():
+        a = ask(fixtures, "find near-duplicate documents")
+        b = ask(fixtures, "Near duplicates in documents?")
+        rows_a = sorted((r["id_a"], r["id_b"]) for r in a.collect())
+        rows_b = sorted((r["id_a"], r["id_b"]) for r in b.collect())
     assert rows_a and rows_a == rows_b  # phrasing-invariant dispatch
     # A table with no text-bearing column refuses with a clear error
     # instead of guessing a column.

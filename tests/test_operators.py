@@ -855,34 +855,34 @@ def test_incremental_minhash_store_path_matches_injob(spark):
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
+    from karna_spark import intermediates
     from karna_spark.operators.dedup import (
         minhash_lsh_incremental_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
     from karna_spark.queries.registry import table
 
     docs = table(spark, "/root/testdata/sf0.001", "documents")
     base = docs.filter(F.col("doc_id") % 10 != 0)
     delta = docs.filter(F.col("doc_id") % 10 == 0)
-    injob = minhash_lsh_incremental_pairs(base, delta, "doc_id", "text")
-    rows_a = sorted(
-        (r["new_id"], r["match_id"], round(r["jaccard"], 9))
-        for r in injob.collect()
-    )
-    release_intermediates(injob)
+    with intermediates.scope():
+        injob = minhash_lsh_incremental_pairs(base, delta, "doc_id", "text")
+        rows_a = sorted(
+            (r["new_id"], r["match_id"], round(r["jaccard"], 9))
+            for r in injob.collect()
+        )
     sigs = minhash_signature_table(base, "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sigs.count()
-    store = minhash_lsh_incremental_pairs(
-        base, delta, "doc_id", "text", base_signatures=sigs
-    )
-    rows_b = sorted(
-        (r["new_id"], r["match_id"], round(r["jaccard"], 9))
-        for r in store.collect()
-    )
-    release_intermediates(store)
+    with intermediates.scope():
+        store = minhash_lsh_incremental_pairs(
+            base, delta, "doc_id", "text", base_signatures=sigs
+        )
+        rows_b = sorted(
+            (r["new_id"], r["match_id"], round(r["jaccard"], 9))
+            for r in store.collect()
+        )
     sigs.unpersist()
     assert rows_a == rows_b
     assert len(rows_a) > 0
@@ -1010,8 +1010,8 @@ def test_kmeans_exact_matches_pure_python(spark):
     """The Spark result must equal the pure-Python replay bit-for-bit
     on the real sf0.001 embeddings — same quantization, same argmin
     tie-break, same round-half-up update, same empty-cluster carry."""
+    from karna_spark import intermediates
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rows = sorted(
@@ -1020,9 +1020,9 @@ def test_kmeans_exact_matches_pure_python(spark):
     )
     cents, counts = _kmeans_pure_python(rows, k=8, iters=3)
 
-    out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=8, iters=3)
-    got = {(r["cluster_id"], r["dim"]): (r["coord_q"], r["n_points"]) for r in out.collect()}
-    release_intermediates(out)
+    with intermediates.scope():
+        out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=8, iters=3)
+        got = {(r["cluster_id"], r["dim"]): (r["coord_q"], r["n_points"]) for r in out.collect()}
     assert len(got) == 8 * 64
     for cid in range(8):
         for dim in range(64):
@@ -1035,15 +1035,15 @@ def test_kmeans_empty_cluster_carries_previous_centroid(spark):
     """Duplicate init points force an immediately-empty cluster (ties
     break to the lower id): its centroid must carry forward and report
     n_points=0 instead of vanishing or dividing by zero."""
+    from karna_spark import intermediates
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
 
     df = spark.createDataFrame(
         [(0, [0.0]), (1, [0.0]), (2, [100.0])], "vec_id long, embedding array<double>"
     )
-    out = kmeans_lloyd_exact(spark, df, "vec_id", "embedding", k=2, iters=1)
-    rows = {r["cluster_id"]: (r["coord_q"], r["n_points"]) for r in out.collect()}
-    release_intermediates(out)
+    with intermediates.scope():
+        out = kmeans_lloyd_exact(spark, df, "vec_id", "embedding", k=2, iters=1)
+        rows = {r["cluster_id"]: (r["coord_q"], r["n_points"]) for r in out.collect()}
     # Both centroids init to the same quantized zero, so every point
     # (including the 100) ties and breaks to cluster 0 — cluster 1 is
     # empty from the first assignment: centroid carried, population 0.
@@ -1057,13 +1057,13 @@ def test_kmeans_plan_is_codegen_map_no_python(spark):
     """The assignment pass must stay JVM-side: no Python eval node, no
     window, and the only wide node feeding the result is the (cid, dim)
     partial aggregate."""
+    from karna_spark import intermediates
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=4, iters=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    release_intermediates(out)
+    with intermediates.scope():
+        out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=4, iters=2)
+        plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "Window" not in plan
 
@@ -1450,20 +1450,20 @@ def test_learn_bpe_job_count_independent_of_merges(spark):
 
 
 def test_learn_bpe_leaves_no_cached_rdds(spark):
-    """Cache-leak witness: learn_bpe — plain, with return_symbols plus
-    release_intermediates, and failing inside the learner — leaves the
+    """Cache-leak witness: learn_bpe — plain, with return_symbols read
+    inside a scope, and failing inside the learner — leaves the
     persistent-RDD count where it found it."""
+    from karna_spark import intermediates
     from karna_spark.operators.bpe import learn_bpe
-    from karna_spark.operators.dedup import release_intermediates
 
     jsc = spark.sparkContext._jsc
     start = jsc.getPersistentRDDs().size()
     wf = _bpe_corpus_wf(spark, 300)
     assert len(learn_bpe(wf, num_merges=60)) >= 40
     assert jsc.getPersistentRDDs().size() == start
-    merges, syms = learn_bpe(wf, num_merges=12, return_symbols=True)
-    assert syms.count() > 0
-    release_intermediates(syms)
+    with intermediates.scope():
+        merges, syms = learn_bpe(wf, num_merges=12, return_symbols=True)
+        assert syms.count() > 0
     assert jsc.getPersistentRDDs().size() == start
     # a NULL word is not iterable: the learner task raises
     bad = spark.createDataFrame([("ab", 3), (None, 2)], "w string, freq bigint")

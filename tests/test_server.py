@@ -235,19 +235,58 @@ def test_index_serves_console(server):
     assert "query console" in html and "/query" in html
 
 
-def test_page_payload_releases_persisted_intermediates(spark):
-    # r6 verdict item 7: the server result path must release operator
-    # cache handles after materialization — callers can't be trusted
-    # to know the _karna_persisted contract.
-    from karna_spark.server import _page_payload
+def _persisting_front_end(monkeypatch, serve=None, fail=False) -> list:
+    """Make each POST /query front-end call persist a frame through
+    ``intermediates``, as the dedup and BM25 builders do, before it
+    answers with ``serve(persisted)`` (default: the real front-end) or
+    raises an engine fault. Returns the frames it persisted."""
+    import karna_spark.server as server_mod
+    from pyspark.storagelevel import StorageLevel
 
-    cached = spark.range(10).persist()
-    cached.count()  # pin
-    df = cached.selectExpr("id * 2 AS x")
-    df._karna_persisted = [cached]
-    payload = _page_payload(df, {"limit": 5})
-    assert payload["row_count"] == 5
-    assert cached.storageLevel.useMemory is False  # unpersisted
+    from karna_spark import intermediates
+
+    real = server_mod._run_query
+    persisted = []
+
+    def run_query(spark, body, metastore=None):
+        df = intermediates.persist(spark.range(10), StorageLevel.MEMORY_AND_DISK)
+        df.count()
+        persisted.append(df)
+        if fail:
+            raise RuntimeError("engine fault after persisting")
+        return serve(df) if serve else real(spark, body, metastore)
+
+    monkeypatch.setattr(server_mod, "_run_query", run_query)
+    return persisted
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_page_payload_releases_persisted_intermediates(server, spark, monkeypatch):
+    """A request releases what its front-end persisted once the page is
+    built: here the page reads the persisted frame, so it bypasses the
+    cache."""
+    start = _persistent_rdds(spark)
+    persisted = _persisting_front_end(
+        monkeypatch, serve=lambda df: df.selectExpr("id * 2 AS x")
+    )
+    status, out, cache = _query(server, {"query": "ignored", "limit": 5})
+    assert (status, cache, out["row_count"]) == (200, "bypass", 5)
+    assert persisted[0].storageLevel.useMemory is False  # unpersisted
+    assert _persistent_rdds(spark) == start
+
+
+def test_failed_request_releases_persisted_intermediates(server, spark, monkeypatch):
+    """A request that fails after its front-end persisted answers 500
+    and still releases what it persisted."""
+    start = _persistent_rdds(spark)
+    persisted = _persisting_front_end(monkeypatch, fail=True)
+    status, out, _ = _query(server, {"query": "SELECT 1 AS one"})
+    assert status == 500 and "engine fault" in out["error"]
+    assert persisted[0].storageLevel.useMemory is False
+    assert _persistent_rdds(spark) == start
 
 
 def _query(base: str, body: dict) -> tuple[int, dict, str | None]:
@@ -276,6 +315,39 @@ def _last_job_id(spark) -> int:
 def _register(base: str, name: str, path) -> None:
     status, _ = _post(base, "/datasets", {"name": name, "path": str(path)})
     assert status == 201
+
+
+def test_body_shorter_than_content_length_is_408(spark, monkeypatch):
+    """A body that never reaches its Content-Length answers 408 once the
+    socket timeout passes, and the connection is closed, instead of
+    holding a handler thread until the client goes away."""
+    import socket
+    import time
+
+    import karna_spark.server as server_mod
+
+    monkeypatch.setattr(server_mod, "_SOCKET_TIMEOUT_S", 1.0)
+    srv = server_mod.create_server(spark, port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        addr = ("127.0.0.1", srv.server_address[1])
+        with socket.create_connection(addr, timeout=10) as sock:
+            t0 = time.perf_counter()
+            sock.sendall(
+                b"POST /query HTTP/1.1\r\nHost: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: 100\r\n\r\n{}"
+            )
+            reply = sock.makefile("rb")
+            status_line = reply.readline()
+            waited = time.perf_counter() - t0
+            rest = reply.read()  # returns once the server closes
+        assert status_line.split()[1] == b"408"
+        assert 0.9 <= waited < 9
+        assert b"not received" in rest
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 @pytest.mark.parametrize("header", ["abc", "-1"])
@@ -472,20 +544,19 @@ def test_cache_evicts_least_recently_used(spark, monkeypatch, bound):
     assert [serve("b"), serve("c")] == ["hit", "miss"]
 
 
-def test_cache_hit_releases_persisted_intermediates(spark):
-    """Served from the cache or not, the page path drops the operator
-    cache handles hung on the result."""
-    from karna_spark.server import PageCache, _page_payload
-
-    cache = PageCache()
+def test_cache_hit_releases_persisted_intermediates(server, spark, monkeypatch):
+    """Served from the cache or not, a request drops what its front-end
+    persisted."""
+    start = _persistent_rdds(spark)
+    persisted = _persisting_front_end(monkeypatch)
+    body = {"query": "SELECT r_name FROM region WHERE r_regionkey > 2", "limit": 2}
     states = []
-    for _ in range(2):
-        pinned = spark.range(10).persist()
-        pinned.count()
-        df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").select("r_name")
-        df._karna_persisted = [pinned]
-        states.append(_page_payload(df, {"limit": 2}, cache).cache)
-        assert pinned.storageLevel.useMemory is False
+    for i in range(2):
+        status, _, cache = _query(server, body)
+        assert status == 200
+        states.append(cache)
+        assert persisted[i].storageLevel.useMemory is False
+        assert _persistent_rdds(spark) == start
     assert states == ["miss", "hit"]
 
 

@@ -140,28 +140,44 @@ def test_pin_persist_failure_fails_the_verb(spark, tmp_path, monkeypatch):
 
 
 def test_pin_release_restores_persistent_rdds(spark, tmp_path):
-    """``_pin``'s release drops exactly what it persisted; an input the
-    caller already persisted is left alone."""
+    """A verb's pin (``intermediates.persist`` inside the verb's scope)
+    is dropped when the scope closes; an input the caller already
+    persisted is left alone, also by a verb that pins it, and a
+    validated upsert refused mid-way releases its pin."""
+    import pytest
+    from pyspark.storagelevel import StorageLevel
+
+    from karna_spark import intermediates
+
     jsc = spark.sparkContext._jsc
     start = jsc.getPersistentRDDs().size()
-    pinned, release = SnapshotStore._pin(_mk(spark, [(1, "a", 10)]))
-    assert pinned.count() == 1
-    assert jsc.getPersistentRDDs().size() == start + 1
-    release()
+    with intermediates.scope():
+        pinned = intermediates.persist(
+            _mk(spark, [(1, "a", 10)]), StorageLevel.MEMORY_AND_DISK
+        )
+        assert pinned.count() == 1
+        assert jsc.getPersistentRDDs().size() == start + 1
     assert jsc.getPersistentRDDs().size() == start
 
     mine = _mk(spark, [(2, "b", 20)]).persist()
     mine.count()
-    pinned, release = SnapshotStore._pin(mine)
-    assert pinned is mine
-    release()
+    with intermediates.scope():
+        pinned = intermediates.persist(mine, StorageLevel.MEMORY_AND_DISK)
+        assert pinned is mine
+    assert mine.storageLevel.useMemory
+    assert jsc.getPersistentRDDs().size() == start + 1
+
+    store = SnapshotStore(str(tmp_path / "t"), "p")
+    store.commit(_mk(spark, [(1, "a", 10)]))
+    store.upsert(spark, mine, ["k"])
     assert mine.storageLevel.useMemory
     assert jsc.getPersistentRDDs().size() == start + 1
     mine.unpersist()
 
-    store = SnapshotStore(str(tmp_path / "t"), "p")
-    store.commit(_mk(spark, [(1, "a", 10)]))
     store.upsert(spark, _mk(spark, [(1, "a", 11)]), ["k"])
+    assert jsc.getPersistentRDDs().size() == start
+    with pytest.raises(ValueError, match="across partitions"):
+        store.upsert(spark, _mk(spark, [(1, "b", 12)]), ["k"], validate_keys=True)
     assert jsc.getPersistentRDDs().size() == start
 
 

@@ -94,34 +94,17 @@ def main(argv: list[str] | None = None) -> int:
         else:
             register(spark, name, path)
 
+    # The HTTP route's dispatch: --metastore rides along, so GraphQL
+    # mutations are durable, FK edges nest and NL questions join
+    # through them, as over POST /query.
+    from karna_spark.server import _run_query
+
+    language = "graphql" if args.graphql else "nl" if args.nl else "sql"
     # What the front-end persists to build the result is released once
     # it is printed (karna_spark.intermediates).
     with intermediates.scope():
         try:
-            if args.graphql:
-                from karna_spark.frontends.graphql import (
-                    rel_schema_from_metastore,
-                    translate,
-                )
-
-                # --metastore rides along: mutations are durable and FK
-                # edges nest, matching the HTTP route's behavior
-                df = translate(
-                    spark,
-                    args.query,
-                    rel_schema=(
-                        rel_schema_from_metastore(ms) if ms else None
-                    ),
-                    metastore=ms,
-                )
-            elif args.nl:
-                from karna_spark.frontends.nl import ask
-
-                df = ask(spark, args.query)
-            else:
-                from karna_spark.frontends.sql import execute
-
-                df = execute(spark, args.query)
+            df = _run_query(spark, {"language": language, "query": args.query}, ms)
         except Exception as e:  # translator/parse errors are user errors
             print(f"error: {e}", file=sys.stderr)
             return 1

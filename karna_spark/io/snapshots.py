@@ -32,6 +32,21 @@ with, and manifest keys become qualified ``col=val``; see S30 below)
   commits. Manifest publication is a single JSON rename — the atomic
   commit point (same mechanism as Iceberg's version-hint swap).
 
+Manifest format: one JSON object per version (``sort_keys``). Its
+TABLE-STATE keys are ``partitions`` (always present), ``schema``,
+``stats``, ``deletes``, ``colmap``, ``defaults`` and ``specs`` (see
+``SnapshotStore._TABLE_STATE_KEYS`` for each one's meaning); its
+PER-VERSION keys are ``version``, ``committed_at`` and ``op``. Every
+verb publishes through ``SnapshotStore._publish``: the new manifest is
+its base manifest's table-state keys overridden by only the keys the
+verb changes (a change of ``None`` removes a key), stamped with fresh
+per-version keys, which are never inherited. Empty ``deletes``,
+``defaults`` and ``specs`` are omitted; ``colmap`` is kept even when
+empty, since its presence marks an evolved table. A full ``commit``
+derives from an empty base: it resets the schema epoch by intent.
+(Delta commits only the actions that change the prior table state,
+and Iceberg builds each table metadata from its base the same way.)
+
 Scale: the manifest holds one entry per *partition* (not per file), so
 resolution is O(partitions) driver-side — thousands, not billions. A
 production deployment shards manifests per Iceberg once partition
@@ -258,75 +273,93 @@ class SnapshotStore:
             except FileExistsError:
                 v += 1
 
+    # The table-state keys: what a version inherits from the manifest
+    # it derives from. Everything else in a manifest is the version's
+    # own stamp (``version``, ``committed_at``, ``op``) and is never
+    # inherited.
+    #   partitions  {key -> pointer version}: the data-dir pointers
+    #   schema      StructType JSON of the LOGICAL schema
+    #   stats       {key -> {"__rows": n, <physical col>: [min, max]}}
+    #               per-partition footer row counts and bounds (S20)
+    #   deletes     merge-on-read delete entries (S27 position sets,
+    #               S31 equality key sets); omitted when empty
+    #   colmap      {logical -> physical} column names; presence (even
+    #               {}) marks an evolved table: reads project the
+    #               manifest's LOGICAL schema through this mapping (S28)
+    #   defaults    S28 add-column defaults (Iceberg v3 initial-default):
+    #               {logical: {"value": .., "since": <add version>}} —
+    #               reads substitute value for rows written BEFORE the
+    #               add; omitted when empty
+    #   specs       S30 partition-spec evolution (Iceberg partition
+    #               specs): ordered [{"col": <physical col>, "since":
+    #               <version>}], the spec history, newest last (= the
+    #               column new writes partition by). Presence marks a
+    #               spec-evolved table: ALL partition keys (partitions,
+    #               stats, delete-entry partitions) are then QUALIFIED
+    #               ``"<col>=<raw value>"`` — each pointer's key embeds
+    #               the spec it was written under, so values from
+    #               different specs can never collide in one manifest.
+    #               Omitted when empty.
+    _TABLE_STATE_KEYS = (
+        "partitions", "schema", "stats", "deletes", "colmap",
+        "defaults", "specs",
+    )
+    _OMIT_EMPTY = ("deletes", "defaults", "specs")
+
     def _publish(
         self,
         v: int,
-        partitions: dict[str, int],
-        schema_json: str | None = None,
-        base_version: int | None = None,
-        stats: dict[str, dict[str, list]] | None = None,
-        deletes: list[dict] | None = None,
-        colmap: dict[str, str] | None = None,
-        defaults: dict[str, dict] | None = None,
-        specs: list[dict] | None = None,
+        base: dict,
         op: str | None = None,
-    ) -> None:
-        """Publish manifest ``v``. When ``base_version`` is given the
-        publish is CAS-style (Iceberg's commit validation): the
-        manifest was derived from ``base_version``'s pointers, so any
-        OTHER version published in between means this writer would
-        silently drop the interleaved commit's partition pointers — a
-        lost update. The check runs immediately before the link AND is
-        re-validated after it (version numbers are totally ordered and
-        claims exclusive, so of two racers that both pass the
-        pre-check, each sees the other's manifest post-publish, rolls
-        its own back, and raises — in the worst case BOTH racers abort
-        and retry, but a lost update can never be published
-        silently)."""
+        *,
+        base_version: int | None = None,
+        **changes,
+    ) -> int:
+        """Publish manifest ``v`` (returned): ``base``'s table-state keys
+        (:attr:`_TABLE_STATE_KEYS`) overridden by ``changes`` — a
+        change of ``None`` removes its key — stamped with ``version``,
+        ``committed_at`` and ``op`` (the operation that produced the
+        version, S35: Iceberg's snapshot summary "operation" field).
+        ``base`` is the manifest doc this version derives from; a bare
+        partition-pointer map is read as ``{"partitions": base}``.
+
+        When ``base_version`` is given the publish is CAS-style
+        (Iceberg's commit validation): the manifest was derived from
+        ``base_version``'s pointers, so any OTHER version published in
+        between means this writer would silently drop the interleaved
+        commit's partition pointers — a lost update. The check runs
+        immediately before the link AND is re-validated after it
+        (version numbers are totally ordered and claims exclusive, so
+        of two racers that both pass the pre-check, each sees the
+        other's manifest post-publish, rolls its own back, and raises
+        — in the worst case BOTH racers abort and retry, but a lost
+        update can never be published silently)."""
+        unknown = set(changes) - set(self._TABLE_STATE_KEYS)
+        if unknown:
+            raise TypeError(f"not a table-state key: {sorted(unknown)}")
         if base_version is not None and self.latest_version() != base_version:
             raise ConcurrentWriteError(
                 f"manifest base v{base_version} is stale (latest is "
                 f"v{self.latest_version()}); retry the write"
             )
-        tmp = self._mpath(v) + ".tmp"
-        doc = {
-            "version": v,
-            "partitions": partitions,
-            # wall-clock commit stamp (injectable via __init__ clock)
-            # — the resolution key for read(as_of=<ts>)
-            "committed_at": float(self._clock()),
-        }
+        if "partitions" not in base:
+            base = {"partitions": base}
+        doc = {k: base[k] for k in self._TABLE_STATE_KEYS if k in base}
+        for k, val in changes.items():
+            if val is None:
+                doc.pop(k, None)
+            else:
+                doc[k] = val
+        for k in self._OMIT_EMPTY:
+            if not doc.get(k):
+                doc.pop(k, None)
+        # wall-clock commit stamp (injectable via __init__ clock) —
+        # the resolution key for read(as_of=<ts>)
+        doc["version"] = v
+        doc["committed_at"] = float(self._clock())
         if op is not None:
-            # S35: the operation that produced this version — the
-            # history()/operation-log surface (Iceberg's snapshot
-            # summary "operation" field)
             doc["op"] = op
-        if defaults:
-            # S28 add-column defaults (Iceberg v3 initial-default):
-            # {logical: {"value": .., "since": <add version>}} — reads
-            # substitute value for rows written BEFORE the add
-            doc["defaults"] = defaults
-        if specs:
-            # S30 partition-spec evolution (Iceberg partition specs):
-            # ordered [{"col": <physical col>, "since": <version>}] —
-            # the spec history, newest last (= the column new writes
-            # partition by; ``since`` records when each took effect).
-            # Presence marks a spec-evolved table: ALL partition keys
-            # (partitions, stats, delete-entry partitions) are then
-            # QUALIFIED ``"<col>=<raw value>"`` — each pointer's key
-            # embeds the spec it was written under, so values from
-            # different specs can never collide in one manifest.
-            doc["specs"] = specs
-        if colmap is not None:
-            # presence (even {}) marks an evolved table: reads project
-            # the manifest's LOGICAL schema through this mapping
-            doc["colmap"] = colmap
-        if stats is not None:
-            doc["stats"] = stats
-        if schema_json is not None:
-            doc["schema"] = schema_json
-        if deletes:
-            doc["deletes"] = deletes
+        tmp = self._mpath(v) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(doc, fh, sort_keys=True)
         # Link-then-unlink instead of rename: os.link fails with EEXIST
@@ -348,6 +381,7 @@ class SnapshotStore:
                     f"v{base_version}, claimed v{v}); this write was "
                     "rolled back — retry"
                 )
+        return v
 
     def _published_versions(self) -> list[int]:
         return sorted(
@@ -705,19 +739,11 @@ class SnapshotStore:
                 else dict(e)
                 for e in doc["deletes"]
             ]
-        self._publish(
-            v,
-            new_parts,
-            schema_json=doc["schema"],
-            base_version=prev_v,
-            stats=new_stats or None,
-            deletes=new_dels,
-            colmap=cm,
-            defaults=doc.get("defaults"),
-            specs=specs,
-            op="respec",
+        return self._publish(
+            v, doc, "respec", base_version=prev_v,
+            partitions=new_parts, stats=new_stats or None,
+            deletes=new_dels, colmap=cm, specs=specs,
         )
-        return v
 
     # ------------------------------------------------------- writes
     def _write(
@@ -1002,6 +1028,7 @@ class SnapshotStore:
         prev_v = self.latest_version()
         prev_doc = self._manifest_doc(prev_v) if prev_v else {}
         v = self._claim_version()
+        pc, specs, wdf = None, None, df
         if "specs" in prev_doc:
             # epoch reset: physical names become df's logical names,
             # so the spec entry is re-keyed to the CURRENT logical
@@ -1027,31 +1054,21 @@ class SnapshotStore:
             else:
                 pc = self._logical_of(prev_doc, spec["col"])
                 new_spec = {"col": pc, "since": 0}
-                wdf = df
-            written = self._write(wdf, v, spec_col=pc)
-            self._publish(
-                v,
-                {f"{pc}={a}": v for a in written},
-                schema_json=df.schema.json(),
-                stats={
-                    f"{pc}={a}": st
-                    for a, st in self._partition_stats(
-                        written, v, spec_col=pc
-                    ).items()
-                },
-                specs=[new_spec],
-                op="commit",
-            )
-            return v
-        written = self._write(df, v)
-        self._publish(
-            v,
-            {a: v for a in written},
-            schema_json=df.schema.json(),
-            stats=self._partition_stats(written, v),
-            op="commit",
+            specs = [new_spec]
+        written = self._write(wdf, v, spec_col=pc)
+        q = f"{pc}=" if specs else ""  # spec-evolved keys are qualified
+        return self._publish(
+            v, {}, "commit",
+            partitions={q + a: v for a in written},
+            schema=df.schema.json(),
+            stats={
+                q + a: st
+                for a, st in self._partition_stats(
+                    written, v, spec_col=pc
+                ).items()
+            },
+            specs=specs,
         )
-        return v
 
     def upsert(
         self,
@@ -1316,19 +1333,13 @@ class SnapshotStore:
         )
         if mor:
             deletes.append(mor)
-        self._publish(
-            v,
-            manifest,
-            schema_json=merged.schema.json(),
-            base_version=prev_v,
+        return self._publish(
+            v, prev_doc, _op, base_version=prev_v,
+            partitions=manifest,
+            schema=merged.schema.json(),
             stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=deletes or None,
-            colmap=cm,
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op=_op,
+            deletes=deletes,
         )
-        return v
 
     def rollback(self, version: int) -> int:
         """S34: roll the table back to ``version`` — Iceberg's
@@ -1348,19 +1359,7 @@ class SnapshotStore:
             raise ValueError(f"already at v{version}")
         doc = self._manifest_doc(version)  # raises if expired/unknown
         v = self._claim_version()
-        self._publish(
-            v,
-            dict(doc["partitions"]),
-            schema_json=doc.get("schema"),
-            base_version=prev_v,
-            stats=doc.get("stats"),
-            deletes=[dict(e) for e in doc.get("deletes", [])] or None,
-            colmap=doc.get("colmap"),
-            defaults=doc.get("defaults"),
-            specs=doc.get("specs"),
-            op="rollback",
-        )
-        return v
+        return self._publish(v, doc, "rollback", base_version=prev_v)
 
     def merge(
         self,
@@ -1651,23 +1650,12 @@ class SnapshotStore:
             .filter(condition)
             .select(F.col("_pkey").alias("_pval"), "_rv", "_rid")
         )
-        deletes = [dict(e) for e in prev_doc.get("deletes", [])]
+        deletes = prev_doc.get("deletes", [])
         entry = self._write_position_deletes(matched, v)
-        if entry:
-            deletes.append(entry)
-        self._publish(
-            v,
-            dict(prev_doc["partitions"]),
-            schema_json=prev_doc.get("schema"),
-            base_version=prev_v,
-            stats=prev_doc.get("stats"),
-            deletes=deletes or None,
-            colmap=prev_doc.get("colmap"),
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op="delete",
+        return self._publish(
+            v, prev_doc, "delete", base_version=prev_v,
+            deletes=[*deletes, entry] if entry else deletes,
         )
-        return v
 
     def delete_keys(self, spark: SparkSession, col: str, keys) -> int:
         """Merge-on-read EQUALITY delete (S31 — Iceberg v2 equality
@@ -1766,14 +1754,14 @@ class SnapshotStore:
         v = self._claim_version()
         ddir = self._ddir(v)
         kdf.coalesce(1).write.mode("overwrite").parquet(ddir)
-        deletes = [dict(e) for e in prev_doc.get("deletes", [])]
+        deletes = prev_doc.get("deletes", [])
         if self._dir_rows(ddir) > 0:
-            deletes.append({
+            deletes = [*deletes, {
                 "id": v,
                 "kind": "eq",
                 "col": phys,
                 "bytes": self._delete_bytes([ddir]),
-            })
+            }]
         else:
             # zero keys: publish a deterministic no-op version (the
             # delete_where zero-match contract) instead of an entry
@@ -1781,19 +1769,9 @@ class SnapshotStore:
             import shutil
 
             shutil.rmtree(ddir, ignore_errors=True)
-        self._publish(
-            v,
-            dict(prev_doc["partitions"]),
-            schema_json=prev_doc.get("schema"),
-            base_version=prev_v,
-            stats=prev_doc.get("stats"),
-            deletes=deletes,
-            colmap=prev_doc.get("colmap"),
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op="eq-delete",
+        return self._publish(
+            v, prev_doc, "eq-delete", base_version=prev_v, deletes=deletes
         )
-        return v
 
     def compact(
         self,
@@ -1879,29 +1857,19 @@ class SnapshotStore:
         )
         manifest = {k: pv for k, pv in prev.items() if k not in set(vals)}
         manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
-        specs = prev_doc.get("specs")
-        if specs:
-            # prune spec-history entries this manifest no longer
-            # points through (a full migration compact leaves only
-            # the current spec; the freed old column becomes
-            # droppable again)
-            used = {self._split_key(prev_doc, k)[0] for k in manifest}
-            specs = [
-                s for s in specs[:-1] if s["col"] in used
-            ] + [specs[-1]]
-        self._publish(
-            v,
-            manifest,
-            schema_json=prev_doc.get("schema") or df.schema.json(),
-            base_version=prev_v,
+        # prune spec-history entries this manifest no longer points
+        # through (a full migration compact leaves only the current
+        # spec; the freed old column becomes droppable again)
+        used = {self._split_key(prev_doc, k)[0] for k in manifest}
+        specs = prev_doc.get("specs", [])
+        return self._publish(
+            v, prev_doc, "compact", base_version=prev_v,
+            partitions=manifest,
+            schema=prev_doc.get("schema") or df.schema.json(),
             stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
             deletes=self._carry_deletes(prev_doc, set(vals)),
-            colmap=cm,
-            defaults=prev_doc.get("defaults"),
-            specs=specs,
-            op="compact",
+            specs=[s for s in specs[:-1] if s["col"] in used] + specs[-1:],
         )
-        return v
 
     def _deletes_total_bytes(self, dels: list[dict]) -> int:
         """Total on-disk bytes of a version's delete entries: the
@@ -2243,7 +2211,10 @@ class SnapshotStore:
         return StructType(fields)
 
     # --------------------------------------- schema evolution (S28)
-    def _evolved_doc(self) -> tuple[int, dict, "StructType", dict]:
+    def _evolved_doc(self) -> tuple[int, dict, "StructType", dict, dict]:
+        """(base version, its manifest, logical schema, a copy of the
+        colmap — identity on an un-evolved table — and a copy of the
+        add-column defaults) for a schema-evolution verb to change."""
         prev_v = self.latest_version()
         if prev_v == 0:
             raise ValueError("schema evolution needs a published version")
@@ -2252,25 +2223,7 @@ class SnapshotStore:
             raise ValueError("manifest carries no schema to evolve")
         schema = StructType.fromJson(json.loads(doc["schema"]))
         cm = dict(doc.get("colmap") or {c.name: c.name for c in schema.fields})
-        return prev_v, doc, schema, cm
-
-    def _publish_evolution(
-        self, v: int, prev_v: int, doc: dict, schema: "StructType",
-        cm: dict, op: str = "ddl",
-    ) -> int:
-        self._publish(
-            v,
-            dict(doc["partitions"]),
-            schema_json=schema.json(),
-            base_version=prev_v,
-            stats=doc.get("stats"),
-            deletes=doc.get("deletes"),
-            colmap=cm,
-            defaults=doc.get("defaults"),
-            specs=doc.get("specs"),
-            op=op,
-        )
-        return v
+        return prev_v, doc, schema, cm, dict(doc.get("defaults") or {})
 
     def add_column(self, name: str, dtype, default=None) -> int:
         """S28: add a nullable column — METADATA-ONLY (Iceberg
@@ -2291,7 +2244,7 @@ class SnapshotStore:
         the same logical name can never resurrect stale bytes from old
         files, because the new physical name never collided with
         anything ever written. ``dtype`` is a pyspark DataType."""
-        prev_v, doc, schema, cm = self._evolved_doc()
+        prev_v, doc, schema, cm, defaults = self._evolved_doc()
         if name in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} already exists")
         if default is not None and not isinstance(
@@ -2308,11 +2261,10 @@ class SnapshotStore:
         )
         cm[name] = phys
         if default is not None:
-            d = dict(doc.get("defaults") or {})
-            d[name] = {"value": default, "since": v}
-            doc["defaults"] = d
-        return self._publish_evolution(
-            v, prev_v, doc, schema, cm, op="add-column"
+            defaults[name] = {"value": default, "since": v}
+        return self._publish(
+            v, doc, "add-column", base_version=prev_v,
+            schema=schema.json(), colmap=cm, defaults=defaults,
         )
 
     def rename_column(self, old: str, new: str) -> int:
@@ -2321,7 +2273,7 @@ class SnapshotStore:
         the logical→physical mapping changes, so the rename costs one
         manifest write on a 100 TB table and time travel still serves
         each version under the schema it was published with."""
-        prev_v, doc, schema, cm = self._evolved_doc()
+        prev_v, doc, schema, cm, defaults = self._evolved_doc()
         # spec cols (current or historical) are rename-protected while
         # manifests may point at dirs keyed by them; an un-evolved
         # table's implicit spec is the __init__ partition column, and
@@ -2334,11 +2286,9 @@ class SnapshotStore:
         if new in names:
             raise ValueError(f"column {new!r} already exists")
         cm[new] = cm.pop(old)
-        if old in (doc.get("defaults") or {}):
+        if old in defaults:
             # defaults are keyed by LOGICAL name — follow the rename
-            d = dict(doc["defaults"])
-            d[new] = d.pop(old)
-            doc["defaults"] = d
+            defaults[new] = defaults.pop(old)
         schema = StructType(
             [
                 StructField(new, f.dataType, f.nullable)
@@ -2347,9 +2297,9 @@ class SnapshotStore:
                 for f in schema.fields
             ]
         )
-        return self._publish_evolution(
-            self._claim_version(), prev_v, doc, schema, cm,
-            op="rename-column",
+        return self._publish(
+            self._claim_version(), doc, "rename-column", base_version=prev_v,
+            schema=schema.json(), colmap=cm, defaults=defaults,
         )
 
     def drop_column(self, name: str) -> int:
@@ -2358,7 +2308,7 @@ class SnapshotStore:
         version on, still served by time travel to prior versions).
         The physical name is retired forever: add_column never reuses
         one, so a later re-add cannot resurrect the dropped values."""
-        prev_v, doc, schema, cm = self._evolved_doc()
+        prev_v, doc, schema, cm, defaults = self._evolved_doc()
         if cm.get(name, name) in self._spec_protected_cols(doc):
             # any spec column (current or historical) stays undroppable
             # while this manifest may point at dirs keyed by it (S30);
@@ -2383,14 +2333,11 @@ class SnapshotStore:
                     f"entry v{e['id']}; compact before dropping it"
                 )
         cm.pop(name, None)
-        if name in (doc.get("defaults") or {}):
-            d = dict(doc["defaults"])
-            d.pop(name)
-            doc["defaults"] = d or None
+        defaults.pop(name, None)
         schema = StructType([f for f in schema.fields if f.name != name])
-        return self._publish_evolution(
-            self._claim_version(), prev_v, doc, schema, cm,
-            op="drop-column",
+        return self._publish(
+            self._claim_version(), doc, "drop-column", base_version=prev_v,
+            schema=schema.json(), colmap=cm, defaults=defaults,
         )
 
     # widening lattice: every edge is lossless (Iceberg's permitted
@@ -2412,7 +2359,7 @@ class SnapshotStore:
         silently truncate values already on disk."""
         from pyspark.sql.types import DecimalType
 
-        prev_v, doc, schema, cm = self._evolved_doc()
+        prev_v, doc, schema, cm, _ = self._evolved_doc()
         field = next((f for f in schema.fields if f.name == name), None)
         if field is None:
             raise ValueError(f"no such column: {name!r}")
@@ -2446,9 +2393,9 @@ class SnapshotStore:
                 for f in schema.fields
             ]
         )
-        return self._publish_evolution(
-            self._claim_version(), prev_v, doc, schema, cm,
-            op="widen-column",
+        return self._publish(
+            self._claim_version(), doc, "widen-column", base_version=prev_v,
+            schema=schema.json(), colmap=cm,
         )
 
     def read_changes(
@@ -3026,23 +2973,7 @@ class SnapshotStore:
         with open(os.path.join(bdir, "meta.json"), "w") as fh:
             json.dump({"name": name, "fork_base": v}, fh)
         br = self._branch_store(name)
-        doc = self._manifest_doc(v)
-        br._publish(
-            1,
-            doc["partitions"],
-            schema_json=doc.get("schema"),
-            stats=doc.get("stats"),
-            deletes=doc.get("deletes"),
-            # the fork carries the logical→physical mapping (S28): a
-            # branch of an evolved table must read/write through the
-            # same mapping, or the evolution is silently lost on the
-            # branch AND un-done on the parent at merge (r10 review).
-            # Same for the partition-spec history (S30).
-            colmap=doc.get("colmap"),
-            defaults=doc.get("defaults"),
-            specs=doc.get("specs"),
-            op="branch-fork",
-        )
+        br._publish(1, self._manifest_doc(v), "branch-fork")
         return br
 
     def branch(self, name: str) -> "SnapshotStore":
@@ -3080,21 +3011,8 @@ class SnapshotStore:
         doc = br._manifest_doc(head)
         v = self._claim_version()
         self._publish(
-            v,
-            doc["partitions"],
-            schema_json=doc.get("schema"),
+            v, doc, "branch-merge",
             base_version=br._branch_meta["fork_base"],
-            stats=doc.get("stats"),
-            deletes=doc.get("deletes"),
-            colmap=doc.get("colmap"),
-            # add-column defaults and the partition-spec history are
-            # table metadata like the colmap: dropping either at merge
-            # silently changes what pre-evolution rows read as (a
-            # defaulted column falls back to NULL; spec-evolved
-            # pointers become unreadable)
-            defaults=doc.get("defaults"),
-            specs=doc.get("specs"),
-            op="branch-merge",
         )
         meta_path = os.path.join(self._bdir(name), "meta.json")
         with open(meta_path) as fh:
@@ -3215,17 +3133,7 @@ class SnapshotStore:
                     },
                     fh,
                 )
-            cl._publish(
-                base,
-                dict(doc["partitions"]),
-                schema_json=doc.get("schema"),
-                stats=doc.get("stats"),
-                deletes=doc.get("deletes"),
-                colmap=doc.get("colmap"),
-                defaults=doc.get("defaults"),
-                specs=doc.get("specs"),
-                op="clone",
-            )
+            cl._publish(base, doc, "clone")
         except BaseException:
             # a half-built clone would trip the not-empty guard on
             # every retry; nothing here is shared with the source

@@ -97,13 +97,6 @@ def shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
-def minhash_signature(shingles: Column, num_perm: int) -> Column:
-    """Array of ``num_perm`` min-hashes over a shingle-string array.
-    Permutation i re-keys the (pre-hashed) longs with a seeded xxhash64
-    — the standard one-pass permutation trick."""
-    return minhash_signature_from_hashes(shingle_hashes(shingles), num_perm)
-
-
 def minhash_signature_from_hashes(hashes: Column, num_perm: int) -> Column:
     """Signature from an already-hashed ``array<long>`` column (the
     scale path: hash strings once, permute longs num_perm times)."""
@@ -618,83 +611,10 @@ def simhash64(text: Column) -> Column:
     return sig
 
 
-def simhash64_text_udf():
-    """Arrow-vectorized text → 64-bit SimHash (LongType).
-
-    Same signature semantics as ``simhash64`` but computed in one numpy
-    sweep (distinct words → blake2b-64 → per-bit ±1 balance via
-    ``add.reduceat`` → sign bits packed to int64) instead of 64
-    interpreted aggregate passes per row. blake2b replaces xxhash64 as
-    the word hash — deterministic across executors, and SimHash only
-    needs *a* good 64-bit hash, not a specific one."""
-    import hashlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    shifts = np.arange(64, dtype=np.uint64)
-
-    @pandas_udf("long")
-    def signature(texts: pd.Series) -> pd.Series:
-        hashes: list[np.ndarray] = []
-        offsets: list[int] = []
-        pos = 0
-        for t in texts:
-            words = dict.fromkeys(re.split(r"\s+", t or ""))
-            hashes.append(
-                np.frombuffer(
-                    b"".join(
-                        hashlib.blake2b(w.encode(), digest_size=8).digest()
-                        for w in words
-                    ),
-                    dtype=np.uint64,
-                )
-            )
-            offsets.append(pos)
-            pos += len(words)
-        if not hashes:  # empty Arrow batch — reduceat rejects [] indices
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        h_all = np.concatenate(hashes)
-        # (total, 64) bit matrix → ±1 → per-doc column sums → sign bits.
-        bits = ((h_all[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32)
-        balance = np.add.reduceat(2 * bits - 1, np.asarray(offsets, dtype=np.int64), axis=0)
-        sig_bits = (balance > 0).astype(np.uint64)
-        vals = (sig_bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-        return pd.Series(vals.view(np.int64))
-
-    return signature
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit signatures: popcount(a^b)
     via bit_count."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Candidate near-dups by SimHash: partition the 64-bit signature
-    into ``max_hamming + 1`` disjoint slices — by pigeonhole any pair
-    within Hamming ≤ max_hamming agrees exactly on at least one slice —
-    bucket per (slice_id, slice_value), then verify exact Hamming.
-    Join is per-slice-bucket: sub-quadratic, shuffle on the slice key.
-
-    Scale note: recall is guaranteed at any ``max_hamming``, but slice
-    width shrinks as 64/(k+1), so bucket occupancy (and join fan-out)
-    grows with k. At corpus scale keep k small (≤8) or move to a wider
-    signature before loosening the threshold."""
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    # Spread the CPU-bound signature stage when the corpus arrives as
-    # fewer splits than cores (same rationale as minhash_lsh_pairs).
-    sc = df.sparkSession.sparkContext
-    if src.rdd.getNumPartitions() < sc.defaultParallelism:
-        src = src.repartition(sc.defaultParallelism, "id")
-    sig_udf = simhash64_text_udf()
-    sigs = src.select("id", sig_udf(F.col("text")).alias("sig"))
-    return simhash_pairs_from_sigs(sigs, max_hamming, n_bits=64)
 
 
 def simhash_pairs_from_sigs(
@@ -702,8 +622,8 @@ def simhash_pairs_from_sigs(
 ) -> DataFrame:
     """Pigeonhole pairing over precomputed (id, sig) signatures — the
     slicing / bucket-join / exact-Hamming-verify half of SimHash dedup,
-    reusable with any signature source (the production blake2b UDF, or
-    an oracle-replayable expression signature for the driver gate)."""
+    reusable with any signature source (e.g. the oracle-replayable
+    expression signature of the driver gate)."""
     n_slices = min(max_hamming + 1, n_bits)
     # Partition n_bits into n_slices contiguous slices, sizes as equal
     # as possible (widths differ by ≤1) so the pigeonhole argument holds.

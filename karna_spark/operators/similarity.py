@@ -398,58 +398,6 @@ def ann_ivf_topk(
 # ------------------------------------------------------------ product quantization
 
 
-def train_pq(
-    df: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 8,
-    sample: int = 10_000,
-) -> list:
-    """Train product-quantization codebooks: split each d-dim vector
-    into ``m`` subspaces and learn ``ksub`` centroids per subspace.
-
-    Training runs driver-side on a bounded deterministic hash-sample
-    (the standard practice — FAISS trains PQ on a fixed-size sample, a
-    codebook needs thousands of points, not the corpus): the collect is
-    capped at ``sample`` rows regardless of corpus size, and the loop
-    is pure numpy, no per-iteration Spark jobs. Encode and search stay
-    fully distributed. Returns nested lists (m, ksub, d/m) — a few KB
-    that ships to executors as a closure constant."""
-    rows = (
-        df.select(F.col(vec_col).alias("v"))
-        .withColumn("__h", F.xxhash64(F.col("v").cast("string")))
-        .orderBy("__h")
-        .limit(sample)
-        .select("v")
-        .collect()
-    )
-    X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
-    d = X.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    codebooks = np.empty((m, ksub, dsub))
-    for j in range(m):
-        sub = X[:, j * dsub : (j + 1) * dsub]
-        # Distinct-point init: duplicate seeds would leave a cluster
-        # empty and another pattern uncovered — with few distinct
-        # subvectors that turns a losslessly-codable corpus lossy.
-        uniq = np.unique(sub, axis=0)
-        cent = uniq[: min(ksub, len(uniq))].copy()
-        if len(cent) < ksub:  # fewer distinct points than centroids
-            cent = np.resize(cent, (ksub, dsub))
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(ksub):
-                pts = sub[a == c]
-                if len(pts):
-                    cent[c] = pts.mean(axis=0)
-        codebooks[j] = cent
-    return codebooks.tolist()
-
-
 def pq_codebooks_from_rows(
     df: DataFrame, vec_col: str, id_col: str, seed_ids: list, m: int
 ) -> list:

@@ -79,20 +79,6 @@ def quality_features(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(text: Column) -> Column:
-    """Scalar quality score in [0,1]: weighted blend of the feature
-    ratios (weights arbitrary but fixed — the point is a deterministic,
-    cheap, orderable score)."""
-    f = quality_features(text)
-    length_ok = F.when((f["n_words"] >= 5) & (f["n_words"] <= 100000), 1.0).otherwise(0.0)
-    return (
-        0.4 * length_ok
-        + 0.3 * F.least(f["alpha_ratio"] * 1.25, F.lit(1.0))
-        + 0.2 * F.least(f["stopword_ratio"] * 5.0, F.lit(1.0))
-        + 0.1 * (1.0 - F.least(f["punct_ratio"] * 10.0, F.lit(1.0)))
-    )
-
-
 def token_counts(text: Column) -> dict[str, Column]:
     """Token-count estimators: whitespace words, BPE-ish regex tokens,
     and the chars/4 rule of thumb."""

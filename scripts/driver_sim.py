@@ -23,6 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
+from karna_spark import intermediates
+
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -58,7 +60,10 @@ def main() -> int:
 
     import __spark_entry__ as E
 
-    rows = E.entry(spark).collect()
+    # what a builder persists or checkpoints is released once its rows
+    # are read, as a server request or CLI run releases it
+    with intermediates.scope():
+        rows = E.entry(spark).collect()
     print(f"t1 smoke: {len(rows)} rows")
     assert rows, "entry() returned no rows"
 
@@ -72,8 +77,9 @@ def main() -> int:
     failures = []
     for name, fn in sorted(qs.items()):
         try:
-            sdf = fn(spark, sf)
-            s_hash = hash_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+            with intermediates.scope():
+                sdf = fn(spark, sf)
+                s_hash = hash_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
             if name not in oracles:
                 print(f"  {name}: rows-only ok")
                 continue

@@ -161,7 +161,6 @@ def main() -> None:
         minhash_lsh_incremental_pairs,
         minhash_lsh_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
     from karna_spark.operators.similarity import (
         ann_bruteforce_topk,
@@ -170,6 +169,7 @@ def main() -> None:
         ivf_assignment_table,
         sign_sketch_words,
     )
+    from karna_spark import intermediates
     from karna_spark.session import get_spark
 
     spark = get_spark(app_name="ingest_scaling")
@@ -181,278 +181,284 @@ def main() -> None:
     rows = []
     try:
         for n in args.sizes:
-            row = {"corpus": n, "batch": BATCH}
+            # each size's checkpoints and caches are released before the
+            # next size is measured
+            with intermediates.scope():
+                row = {"corpus": n, "batch": BATCH}
 
-            if "minhash" in args.ops:
-                corpus_path = os.path.join(work, f"docs_{n}.parquet")
-                synth_docs(spark, n, salt=1).write.mode("overwrite").parquet(
-                    corpus_path
-                )
-                corpus = spark.read.parquet(corpus_path)
-                batch = synth_docs(spark, BATCH, salt=2, start=n).localCheckpoint()
-
-                # one-time index build (reported, not the per-ingest number)
-                sig_path = os.path.join(work, f"sigs_{n}.parquet")
-                t0 = time.perf_counter()
-                minhash_signature_table(corpus, "doc_id", "text").write.mode(
-                    "overwrite"
-                ).parquet(sig_path)
-                sig_build = round(time.perf_counter() - t0, 3)
-                sigs = spark.read.parquet(sig_path)
-
-                def ingest_stored():
-                    out = minhash_lsh_incremental_pairs(
-                        corpus, batch, "doc_id", "text", base_signatures=sigs
+                if "minhash" in args.ops:
+                    corpus_path = os.path.join(work, f"docs_{n}.parquet")
+                    synth_docs(spark, n, salt=1).write.mode("overwrite").parquet(
+                        corpus_path
                     )
-                    noop(out)
-                    release_intermediates(out)
-
-                def ingest_naive():
-                    out = minhash_lsh_pairs(
-                        corpus.unionByName(batch), "doc_id", "text"
-                    )
-                    noop(out)
-                    release_intermediates(out)
-
-                stored_s = timed(ingest_stored, args.reps)
-                naive_s = timed(ingest_naive, args.reps)
-                row.update(
-                    minhash_stored_s=stored_s,
-                    minhash_naive_s=naive_s,
-                    minhash_speedup=round(naive_s / stored_s, 1),
-                    sig_build_once_s=sig_build,
-                )
-
-            if "image" in args.ops:
-                # ---- J20: stored-hash image ingest ------------------
-                from karna_spark.operators.multimodal import (
-                    ahash_incremental_pairs,
-                    ahash_near_dup_pairs,
-                    image_ahash64,
-                    synthesize_patterned_image_df,
-                )
-
-                img_ids = spark.range(0, n).select(
-                    F.col("id").alias("item_id")
-                )
-                batch_ids = spark.range(n, n + BATCH).select(
-                    F.col("id").alias("item_id")
-                )
-                # one-time hash-table build (reported, not per-ingest)
-                hash_path = os.path.join(work, f"ahash_{n}.parquet")
-                _next_group("image-build")
-                t0 = time.perf_counter()
-                image_ahash64(
-                    synthesize_patterned_image_df(img_ids, "item_id")
-                ).write.mode("overwrite").parquet(hash_path)
-                hash_build = round(time.perf_counter() - t0, 3)
-                stored_hashes = spark.read.parquet(hash_path)
-                batch_media = synthesize_patterned_image_df(
-                    batch_ids, "item_id"
-                ).localCheckpoint()
-
-                def img_stored():
-                    noop(
-                        ahash_incremental_pairs(batch_media, stored_hashes)
+                    corpus = spark.read.parquet(corpus_path)
+                    batch = intermediates.checkpoint(
+                        synth_docs(spark, BATCH, salt=2, start=n), eager=True
                     )
 
-                def img_naive():
-                    noop(
-                        ahash_near_dup_pairs(
-                            image_ahash64(
-                                synthesize_patterned_image_df(
-                                    img_ids.unionByName(batch_ids),
-                                    "item_id",
+                    # one-time index build (reported, not the per-ingest number)
+                    sig_path = os.path.join(work, f"sigs_{n}.parquet")
+                    t0 = time.perf_counter()
+                    minhash_signature_table(corpus, "doc_id", "text").write.mode(
+                        "overwrite"
+                    ).parquet(sig_path)
+                    sig_build = round(time.perf_counter() - t0, 3)
+                    sigs = spark.read.parquet(sig_path)
+
+                    def ingest_stored():
+                        with intermediates.scope():
+                            noop(minhash_lsh_incremental_pairs(
+                                corpus, batch, "doc_id", "text",
+                                base_signatures=sigs,
+                            ))
+
+                    def ingest_naive():
+                        with intermediates.scope():
+                            noop(minhash_lsh_pairs(
+                                corpus.unionByName(batch), "doc_id", "text"
+                            ))
+
+                    stored_s = timed(ingest_stored, args.reps)
+                    naive_s = timed(ingest_naive, args.reps)
+                    row.update(
+                        minhash_stored_s=stored_s,
+                        minhash_naive_s=naive_s,
+                        minhash_speedup=round(naive_s / stored_s, 1),
+                        sig_build_once_s=sig_build,
+                    )
+
+                if "image" in args.ops:
+                    # ---- J20: stored-hash image ingest ------------------
+                    from karna_spark.operators.multimodal import (
+                        ahash_incremental_pairs,
+                        ahash_near_dup_pairs,
+                        image_ahash64,
+                        synthesize_patterned_image_df,
+                    )
+
+                    img_ids = spark.range(0, n).select(
+                        F.col("id").alias("item_id")
+                    )
+                    batch_ids = spark.range(n, n + BATCH).select(
+                        F.col("id").alias("item_id")
+                    )
+                    # one-time hash-table build (reported, not per-ingest)
+                    hash_path = os.path.join(work, f"ahash_{n}.parquet")
+                    _next_group("image-build")
+                    t0 = time.perf_counter()
+                    image_ahash64(
+                        synthesize_patterned_image_df(img_ids, "item_id")
+                    ).write.mode("overwrite").parquet(hash_path)
+                    hash_build = round(time.perf_counter() - t0, 3)
+                    stored_hashes = spark.read.parquet(hash_path)
+                    batch_media = intermediates.checkpoint(
+                        synthesize_patterned_image_df(batch_ids, "item_id"),
+                        eager=True,
+                    )
+
+                    def img_stored():
+                        noop(
+                            ahash_incremental_pairs(batch_media, stored_hashes)
+                        )
+
+                    def img_naive():
+                        noop(
+                            ahash_near_dup_pairs(
+                                image_ahash64(
+                                    synthesize_patterned_image_df(
+                                        img_ids.unionByName(batch_ids),
+                                        "item_id",
+                                    )
                                 )
                             )
                         )
+
+                    img_stored_s = timed(img_stored, args.reps, label="img-stored")
+                    img_naive_s = timed(img_naive, args.reps, label="img-naive")
+                    row.update(
+                        image_stored_s=img_stored_s,
+                        image_naive_s=img_naive_s,
+                        image_speedup=round(img_naive_s / img_stored_s, 1),
+                        hash_build_once_s=hash_build,
                     )
 
-                img_stored_s = timed(img_stored, args.reps, label="img-stored")
-                img_naive_s = timed(img_naive, args.reps, label="img-naive")
-                row.update(
-                    image_stored_s=img_stored_s,
-                    image_naive_s=img_naive_s,
-                    image_speedup=round(img_naive_s / img_stored_s, 1),
-                    hash_build_once_s=hash_build,
-                )
+                if "bloom" in args.ops:
+                    # F37 decontamination: the broadcast-Bloom MAP-ONLY
+                    # probe vs the exact broadcast string join. Both scale
+                    # linearly in the corpus; the Bloom side has NO
+                    # explode/distinct/shuffle — the exact side shuffles
+                    # every distinct (doc, ngram) pair (~|words| rows/doc),
+                    # which is the cost the filter exists to delete.
+                    bl_path = os.path.join(work, f"bloom_docs_{n}.parquet")
+                    synth_docs(spark, n, salt=1).write.mode("overwrite").parquet(
+                        bl_path
+                    )
+                    bl_corpus = spark.read.parquet(bl_path)
+                    bench = intermediates.checkpoint(
+                        synth_docs(spark, 200, salt=7, start=10_000_000),
+                        eager=True,
+                    )
 
-            if "bloom" in args.ops:
-                # F37 decontamination: the broadcast-Bloom MAP-ONLY
-                # probe vs the exact broadcast string join. Both scale
-                # linearly in the corpus; the Bloom side has NO
-                # explode/distinct/shuffle — the exact side shuffles
-                # every distinct (doc, ngram) pair (~|words| rows/doc),
-                # which is the cost the filter exists to delete.
-                bl_path = os.path.join(work, f"bloom_docs_{n}.parquet")
-                synth_docs(spark, n, salt=1).write.mode("overwrite").parquet(
-                    bl_path
-                )
-                bl_corpus = spark.read.parquet(bl_path)
-                bench = synth_docs(
-                    spark, 200, salt=7, start=10_000_000
-                ).localCheckpoint()
+                    from karna_spark.operators.bloom import bloom_flag_ngrams
+                    from karna_spark.operators.contamination import (
+                        contaminated_docs,
+                    )
 
-                from karna_spark.operators.bloom import bloom_flag_ngrams
-                from karna_spark.operators.contamination import (
-                    contaminated_docs,
-                )
-
-                def decon_bloom():
-                    noop(
-                        bloom_flag_ngrams(
-                            bl_corpus, bench, "doc_id", "text", n=4,
-                            m_bits=1 << 19,
+                    def decon_bloom():
+                        noop(
+                            bloom_flag_ngrams(
+                                bl_corpus, bench, "doc_id", "text", n=4,
+                                m_bits=1 << 19,
+                            )
                         )
-                    )
 
-                def decon_exact():
-                    noop(
-                        contaminated_docs(
-                            bl_corpus, bench, "doc_id", "text", n=4
+                    def decon_exact():
+                        noop(
+                            contaminated_docs(
+                                bl_corpus, bench, "doc_id", "text", n=4
+                            )
                         )
+
+                    bloom_s = timed(decon_bloom, args.reps, label="bloom-probe")
+                    exact_s = timed(decon_exact, args.reps, label="bloom-exact")
+                    row.update(
+                        bloom_probe_s=bloom_s,
+                        exact_join_s=exact_s,
+                        bloom_speedup=round(exact_s / bloom_s, 1),
                     )
 
-                bloom_s = timed(decon_bloom, args.reps, label="bloom-probe")
-                exact_s = timed(decon_exact, args.reps, label="bloom-exact")
-                row.update(
-                    bloom_probe_s=bloom_s,
-                    exact_join_s=exact_s,
-                    bloom_speedup=round(exact_s / bloom_s, 1),
+                if "ivf" not in args.ops and "hamming" not in args.ops:
+                    rows.append(row)
+                    print(f"done corpus={n}: {row}", file=sys.stderr)
+                    continue
+
+                # shared vector corpus for the ANN legs
+                vec_path = os.path.join(work, f"vecs_{n}.parquet")
+                synth_vecs(spark, n, salt=3).write.mode("overwrite").parquet(vec_path)
+                vecs = spark.read.parquet(vec_path)
+                vbatch = intermediates.checkpoint(
+                    synth_vecs(spark, BATCH, salt=4, start=n), eager=True
                 )
 
-            if "ivf" not in args.ops and "hamming" not in args.ops:
+                if "ivf" in args.ops:
+                    # ---- J19: IVF ANN ingest --------------------------------
+                    nlist = 8 if args.nlist_rule == "fixed8" else max(8, int(math.isqrt(n)))
+                    cents = intermediates.checkpoint(
+                        vecs.filter(F.col("vec_id") % (n // nlist) == 0)
+                        .limit(nlist)
+                        .select(
+                            "vec_id",
+                            F.transform("embedding", lambda x: x.cast("double")).alias(
+                                "centroid"
+                            ),
+                        )
+                        .withColumn(
+                            "cluster_id", F.row_number().over(W.orderBy("vec_id")) - 1
+                        )
+                        .select("cluster_id", "centroid"),
+                        eager=True,
+                    )
+                    asg_path = os.path.join(work, f"asg_{n}.parquet")
+                    t0 = time.perf_counter()
+                    ivf_assignment_table(vecs, cents, "vec_id", "embedding").write.mode(
+                        "overwrite"
+                    ).parquet(asg_path)
+                    asg_build = round(time.perf_counter() - t0, 3)
+                    stored_asg = spark.read.parquet(asg_path)
+
+                    def ann_stored():
+                        delta_asg = ivf_assignment_table(
+                            vbatch, cents, "vec_id", "embedding"
+                        )
+                        noop(
+                            ann_ivf_topk(
+                                vecs.unionByName(vbatch),
+                                vbatch,
+                                cents,
+                                "vec_id",
+                                "vec_id",
+                                "embedding",
+                                k=10,
+                                nprobe=3,
+                                corpus_assignments=stored_asg.unionByName(delta_asg),
+                            )
+                        )
+
+                    def ann_naive():
+                        noop(
+                            ann_ivf_topk(
+                                vecs.unionByName(vbatch),
+                                vbatch,
+                                cents,
+                                "vec_id",
+                                "vec_id",
+                                "embedding",
+                                k=10,
+                                nprobe=3,
+                            )
+                        )
+
+                    ann_stored_s = timed(ann_stored, args.reps)
+                    ann_naive_s = timed(ann_naive, args.reps)
+
+                    row.update(
+                        ivf_nlist=nlist,
+                        ivf_stored_s=ann_stored_s,
+                        ivf_naive_s=ann_naive_s,
+                        ivf_speedup=round(ann_naive_s / ann_stored_s, 1),
+                        ivf_build_once_s=asg_build,
+                    )
+
+                if "hamming" in args.ops:
+                    # ---- J21: binary-sketch ANN vs float brute force ----
+                    # steady state: the 8-byte/row sketch table persists at
+                    # ingest; each query batch scans sketches + reranks a
+                    # bounded candidate set. Naive: exact cosine over the
+                    # full float corpus for the same queries. Speedup is
+                    # the scan-size story (16 sketch bytes vs 256 float
+                    # bytes per 64-dim row) plus the cheaper distance op.
+                    _next_group(f"hamming corpus={n}")
+                    nq = 50
+                    qvecs = intermediates.checkpoint(
+                        synth_vecs(spark, nq, salt=5, start=n + BATCH), eager=True
+                    )
+                    sk_path = os.path.join(work, f"sketch_{n}.parquet")
+                    t0 = time.perf_counter()
+                    vecs.select(
+                        F.col("vec_id").alias("neighbor_id"),
+                        *sign_sketch_words("embedding", DIM),
+                    ).write.mode("overwrite").parquet(sk_path)
+                    sk_build = round(time.perf_counter() - t0, 3)
+                    stored_sk = spark.read.parquet(sk_path)
+
+                    def ham_stored():
+                        noop(
+                            ann_hamming_rerank(
+                                vecs, qvecs, "vec_id", "vec_id", "embedding",
+                                k=10, rerank=50, dim=DIM,
+                                corpus_sketches=stored_sk,
+                            )
+                        )
+
+                    def ham_naive():
+                        noop(
+                            ann_bruteforce_topk(
+                                vecs, qvecs, "vec_id", "vec_id", "embedding",
+                                k=10,
+                            )
+                        )
+
+                    ham_stored_s = timed(ham_stored, args.reps, label="ham-stored")
+                    ham_naive_s = timed(ham_naive, args.reps, label="ham-naive")
+                    row.update(
+                        hamming_stored_s=ham_stored_s,
+                        hamming_bruteforce_s=ham_naive_s,
+                        hamming_speedup=round(ham_naive_s / ham_stored_s, 1),
+                        sketch_build_once_s=sk_build,
+                    )
+
                 rows.append(row)
                 print(f"done corpus={n}: {row}", file=sys.stderr)
-                spark.catalog.clearCache()
-                continue
-
-            # shared vector corpus for the ANN legs
-            vec_path = os.path.join(work, f"vecs_{n}.parquet")
-            synth_vecs(spark, n, salt=3).write.mode("overwrite").parquet(vec_path)
-            vecs = spark.read.parquet(vec_path)
-            vbatch = synth_vecs(spark, BATCH, salt=4, start=n).localCheckpoint()
-
-            if "ivf" in args.ops:
-                # ---- J19: IVF ANN ingest --------------------------------
-                nlist = 8 if args.nlist_rule == "fixed8" else max(8, int(math.isqrt(n)))
-                cents = (
-                    vecs.filter(F.col("vec_id") % (n // nlist) == 0)
-                    .limit(nlist)
-                    .select(
-                        "vec_id",
-                        F.transform("embedding", lambda x: x.cast("double")).alias(
-                            "centroid"
-                        ),
-                    )
-                    .withColumn(
-                        "cluster_id", F.row_number().over(W.orderBy("vec_id")) - 1
-                    )
-                    .select("cluster_id", "centroid")
-                    .localCheckpoint()
-                )
-                asg_path = os.path.join(work, f"asg_{n}.parquet")
-                t0 = time.perf_counter()
-                ivf_assignment_table(vecs, cents, "vec_id", "embedding").write.mode(
-                    "overwrite"
-                ).parquet(asg_path)
-                asg_build = round(time.perf_counter() - t0, 3)
-                stored_asg = spark.read.parquet(asg_path)
-
-                def ann_stored():
-                    delta_asg = ivf_assignment_table(
-                        vbatch, cents, "vec_id", "embedding"
-                    )
-                    noop(
-                        ann_ivf_topk(
-                            vecs.unionByName(vbatch),
-                            vbatch,
-                            cents,
-                            "vec_id",
-                            "vec_id",
-                            "embedding",
-                            k=10,
-                            nprobe=3,
-                            corpus_assignments=stored_asg.unionByName(delta_asg),
-                        )
-                    )
-
-                def ann_naive():
-                    noop(
-                        ann_ivf_topk(
-                            vecs.unionByName(vbatch),
-                            vbatch,
-                            cents,
-                            "vec_id",
-                            "vec_id",
-                            "embedding",
-                            k=10,
-                            nprobe=3,
-                        )
-                    )
-
-                ann_stored_s = timed(ann_stored, args.reps)
-                ann_naive_s = timed(ann_naive, args.reps)
-
-                row.update(
-                    ivf_nlist=nlist,
-                    ivf_stored_s=ann_stored_s,
-                    ivf_naive_s=ann_naive_s,
-                    ivf_speedup=round(ann_naive_s / ann_stored_s, 1),
-                    ivf_build_once_s=asg_build,
-                )
-
-            if "hamming" in args.ops:
-                # ---- J21: binary-sketch ANN vs float brute force ----
-                # steady state: the 8-byte/row sketch table persists at
-                # ingest; each query batch scans sketches + reranks a
-                # bounded candidate set. Naive: exact cosine over the
-                # full float corpus for the same queries. Speedup is
-                # the scan-size story (16 sketch bytes vs 256 float
-                # bytes per 64-dim row) plus the cheaper distance op.
-                _next_group(f"hamming corpus={n}")
-                nq = 50
-                qvecs = synth_vecs(
-                    spark, nq, salt=5, start=n + BATCH
-                ).localCheckpoint()
-                sk_path = os.path.join(work, f"sketch_{n}.parquet")
-                t0 = time.perf_counter()
-                vecs.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    *sign_sketch_words("embedding", DIM),
-                ).write.mode("overwrite").parquet(sk_path)
-                sk_build = round(time.perf_counter() - t0, 3)
-                stored_sk = spark.read.parquet(sk_path)
-
-                def ham_stored():
-                    noop(
-                        ann_hamming_rerank(
-                            vecs, qvecs, "vec_id", "vec_id", "embedding",
-                            k=10, rerank=50, dim=DIM,
-                            corpus_sketches=stored_sk,
-                        )
-                    )
-
-                def ham_naive():
-                    noop(
-                        ann_bruteforce_topk(
-                            vecs, qvecs, "vec_id", "vec_id", "embedding",
-                            k=10,
-                        )
-                    )
-
-                ham_stored_s = timed(ham_stored, args.reps, label="ham-stored")
-                ham_naive_s = timed(ham_naive, args.reps, label="ham-naive")
-                row.update(
-                    hamming_stored_s=ham_stored_s,
-                    hamming_bruteforce_s=ham_naive_s,
-                    hamming_speedup=round(ham_naive_s / ham_stored_s, 1),
-                    sketch_build_once_s=sk_build,
-                )
-
-            rows.append(row)
-            print(f"done corpus={n}: {row}", file=sys.stderr)
-            spark.catalog.clearCache()
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -83,3 +83,47 @@ def test_cli_rejects_writes_and_bad_grammar():
     )
     assert proc.returncode == 1
     assert "read-only" in proc.stderr
+
+
+@pytest.mark.slow
+def test_cli_nl_joins_through_metastore_fk(tmp_path):
+    """--nl resolves against the attached metastore, as POST /query
+    does: a declared FK edge lets the question group by a column of
+    the parent table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"zone_id": [1, 2], "zone_name": ["north", "south"]}),
+        str(tmp_path / "zone.parquet"),
+    )
+    pq.write_table(
+        pa.table({
+            "trip_id": [10, 11, 12],
+            "zone_id": [1, 1, 2],
+            "fare": [7.5, 2.5, 4.0],
+        }),
+        str(tmp_path / "trip.parquet"),
+    )
+
+    def rec(name, fks):
+        return {
+            "name": name, "path": str(tmp_path / f"{name}.parquet"),
+            "fmt": "parquet", "options": {}, "schema_json": None,
+            "foreign_keys": fks,
+        }
+
+    store = tmp_path / "ms.json"
+    store.write_text(json.dumps({
+        "version": 1,
+        "datasets": [
+            rec("zone", []), rec("trip", [["zone_id", "zone", "zone_id"]])
+        ],
+        "queries": [],
+    }))
+    rows = run_cli(
+        "--nl", "total fare by zone name in trip", "--metastore", str(store)
+    )
+    assert {r["zone_name"]: r["sum_fare"] for r in rows} == {
+        "north": 10.0, "south": 4.0
+    }

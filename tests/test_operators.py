@@ -80,11 +80,17 @@ def test_minhash_incremental_matches_delta_only(spark):
 def test_minhash_signature_elements_differ(spark):
     """Regression: each permutation must use its own seed (a broken
     seed binding makes all 64 signature elements identical)."""
-    from karna_spark.operators.dedup import minhash_signature, word_ngrams
+    from karna_spark.operators.dedup import (
+        minhash_signature_from_hashes,
+        shingle_hashes,
+        word_ngrams,
+    )
 
     df = spark.createDataFrame([(0, "a b c d e f g h i j")], "id long, text string")
     sig = df.select(
-        minhash_signature(word_ngrams(F.col("text"), 2), 16).alias("s")
+        minhash_signature_from_hashes(
+            shingle_hashes(word_ngrams(F.col("text"), 2)), 16
+        ).alias("s")
     ).first()["s"]
     assert len(set(sig)) > 8, f"signature degenerate: {sig[:4]}..."
 
@@ -142,15 +148,6 @@ def test_matrix_budget_resolution(monkeypatch):
         )
     derived = avail // (4 * (os.cpu_count() or 8))
     assert got <= max(64 * 2**20, min(d.MATRIX_BYTES_CEILING, derived * 2))
-
-
-def test_simhash_near_dups(spark):
-    from karna_spark.operators.dedup import simhash_near_dup_pairs
-
-    df, expected = _docs_with_near_dups(spark)
-    pairs = simhash_near_dup_pairs(df, "doc_id", "text", max_hamming=12)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert expected <= got, f"missing planted pairs: {expected - got}"
 
 
 def test_simhash_identical_text_zero_hamming(spark):
@@ -412,15 +409,6 @@ def test_multimodal_decode_real_media_distributed(spark):
             assert r.mean_intensity == abs((d * 131) % 30000 - 15000) / 32768.0
 
 
-def test_quality_score_bounded(spark):
-    from karna_spark.operators.text import quality_score
-    from karna_spark.queries.registry import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    scores = docs.select(quality_score(F.col("text")).alias("q")).collect()
-    assert all(0.0 <= r["q"] <= 1.0 for r in scores)
-
-
 def test_sessionize_salted_equals_plain_on_fixture(spark):
     from karna_spark.operators.sessionize import sessionize, sessionize_salted
     from karna_spark.queries.registry import table
@@ -622,7 +610,10 @@ def test_pq_lossless_construction_matches_bruteforce(spark):
     true squared L2 and the top-k must match brute force exactly."""
     import numpy as np
 
-    from karna_spark.operators.similarity import ann_pq_topk, train_pq
+    from karna_spark.operators.similarity import (
+        ann_pq_topk,
+        pq_codebooks_from_rows,
+    )
 
     rng_patterns = [
         [float((p * 7 + d) % 5) for d in range(4)] for p in range(4)
@@ -633,7 +624,8 @@ def test_pq_lossless_construction_matches_bruteforce(spark):
 
     rows = [(i, vec(i)) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = train_pq(df, "embedding", m=2, ksub=4, iters=10, sample=1000)
+    # seed rows 0, 5, 10, 15 carry all 4 patterns in both subspaces
+    cb = pq_codebooks_from_rows(df, "embedding", "vec_id", [0, 5, 10, 15], m=2)
     queries = df.filter(F.col("vec_id") < 3)
     got = ann_pq_topk(df, queries, cb, "vec_id", "vec_id", "embedding", k=4)
     got_rows = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["adc"])
@@ -651,11 +643,15 @@ def test_pq_lossless_construction_matches_bruteforce(spark):
 
 
 def test_pq_codes_within_range(spark):
-    from karna_spark.operators.similarity import pq_encode_udf, train_pq
+    from karna_spark.operators.similarity import (
+        pq_codebooks_from_rows,
+        pq_encode_udf,
+    )
     from karna_spark.queries.registry import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
-    cb = train_pq(emb, "embedding", m=8, ksub=16, iters=3)
+    seeds = [r[0] for r in emb.select("vec_id").orderBy("vec_id").limit(16).collect()]
+    cb = pq_codebooks_from_rows(emb, "embedding", "vec_id", seeds, m=8)
     enc = pq_encode_udf(cb)
     codes = emb.select(enc(F.col("embedding")).alias("c")).collect()
     assert all(len(r["c"]) == 8 and all(0 <= x < 16 for x in r["c"]) for r in codes)

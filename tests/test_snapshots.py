@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -3636,3 +3637,190 @@ def test_clone_pin_tag_survives_source_vacuum(spark, tmp_path):
     src.vacuum(retain_last=1, orphan_grace_sec=0)
     with _pytest.raises(Exception):
         cl.read(spark).collect()
+
+
+# ------------------------------------------------- metadata inheritance
+# Every publishing verb derives its manifest from a base manifest plus
+# only the keys it changes. Run each verb on a table that carries all
+# three kinds of table metadata a verb can silently drop — a renamed
+# column (colmap), a defaulted added column (defaults), an evolved
+# partition spec (specs) — plus a live delete entry, and check that
+# the new head keeps each of them unless the verb changes it.
+
+_META_KEYS = ("colmap", "defaults", "specs")
+_META_DDL = "k long, p string, val int, grp string, extra long"
+
+
+@pytest.fixture(scope="module")
+def _meta_table(spark, tmp_path_factory):
+    from pyspark.sql.types import LongType
+
+    root = str(tmp_path_factory.mktemp("meta") / "t")
+    st = SnapshotStore(root, "p")
+    st.commit(spark.createDataFrame(
+        [(1, "a", 10, "x"), (2, "a", 20, "y"), (3, "b", 30, "x"),
+         (4, "c", 40, "z")],
+        "k long, p string, val int, g string",
+    ))
+    st.add_column("extra", LongType(), default=7)
+    st.rename_column("g", "grp")
+    st.repartition_spec("grp")
+    st.delete_where(spark, "k = 3")
+    doc = st._manifest_doc(st.latest_version())
+    assert doc["colmap"]["grp"] == "g" and doc["defaults"]
+    assert len(doc["specs"]) == 2 and doc["deletes"]
+    return root
+
+
+def _meta_rows(spark, *rows):
+    return spark.createDataFrame(list(rows), _META_DDL)
+
+
+def _head(st):
+    return st._manifest_doc(st.latest_version())
+
+
+def _verb_commit(spark, st, tmp):
+    st.commit(st.read(spark))
+    return st
+
+
+def _verb_upsert(spark, st, tmp):
+    st.upsert(spark, _meta_rows(spark, (5, "a", 50, "x", 1)), ["k"])
+    return st
+
+
+def _verb_apply_changes(spark, st, tmp):
+    st.apply_changes(spark, spark.createDataFrame(
+        [("U", 2, "a", 21, "y", 2), ("D", 4, "c", 40, "z", 7)],
+        "op string, " + _META_DDL,
+    ), ["k"])
+    return st
+
+
+def _verb_merge(spark, st, tmp):
+    st.merge(spark, _meta_rows(spark, (1, "a", 11, "x", 3),
+                               (6, "b", 60, "y", 4)), ["k"])
+    return st
+
+
+def _verb_delete_where(spark, st, tmp):
+    st.delete_where(spark, "k = 1")
+    return st
+
+
+def _verb_delete_keys(spark, st, tmp):
+    st.delete_keys(spark, "grp", ["z"])
+    return st
+
+
+def _verb_compact(spark, st, tmp):
+    # a current-spec partition only: old-spec pointers stay, so the
+    # spec history must survive
+    st.upsert(spark, _meta_rows(spark, (5, "a", 50, "q", 1)), ["k"])
+    st.compact(spark, ["g=q"])
+    return st
+
+
+def _verb_repartition_spec(spark, st, tmp):
+    st.repartition_spec("p")
+    return st
+
+
+def _verb_add_column(spark, st, tmp):
+    from pyspark.sql.types import StringType
+
+    st.add_column("note", StringType())
+    return st
+
+
+def _verb_rename_column(spark, st, tmp):
+    st.rename_column("val", "amount")
+    return st
+
+
+def _verb_drop_column(spark, st, tmp):
+    st.drop_column("val")
+    return st
+
+
+def _verb_widen_column(spark, st, tmp):
+    from pyspark.sql.types import LongType
+
+    st.widen_column("val", LongType())
+    return st
+
+
+def _verb_rollback(spark, st, tmp):
+    st.rollback(3)  # after the rename, before the respec
+    return st
+
+
+def _verb_create_branch(spark, st, tmp):
+    return st.create_branch("dev")
+
+
+def _verb_merge_branch(spark, st, tmp):
+    from pyspark.sql.types import StringType
+
+    br = st.create_branch("dev")
+    br.add_column("note", StringType(), default="n")
+    st.merge_branch("dev")
+    return st
+
+
+def _verb_clone(spark, st, tmp):
+    return st.clone(str(tmp / "clone"))
+
+
+# verb -> (run, the metadata keys it changes, base-manifest resolver)
+_META_VERBS = {
+    "commit": (_verb_commit, {"colmap", "defaults", "specs"}, None),
+    "upsert": (_verb_upsert, set(), None),
+    "apply_changes": (_verb_apply_changes, set(), None),
+    "merge": (_verb_merge, set(), None),
+    "delete_where": (_verb_delete_where, set(), None),
+    "delete_keys": (_verb_delete_keys, set(), None),
+    "compact": (_verb_compact, set(), None),
+    "repartition_spec": (_verb_repartition_spec, {"specs"}, None),
+    "add_column": (_verb_add_column, {"colmap"}, None),
+    "rename_column": (_verb_rename_column, {"colmap"}, None),
+    "drop_column": (_verb_drop_column, {"colmap"}, None),
+    "widen_column": (_verb_widen_column, set(), None),
+    "rollback": (_verb_rollback, set(), lambda st: st._manifest_doc(3)),
+    "create_branch": (_verb_create_branch, set(), None),
+    # the parent's new head derives from the branch head
+    "merge_branch": (
+        _verb_merge_branch, set(), lambda st: _head(st.branch("dev"))
+    ),
+    "clone": (_verb_clone, set(), None),
+}
+
+
+@pytest.mark.parametrize("verb", [
+    pytest.param(v, marks=pytest.mark.xfail(
+        strict=True,
+        reason="known defect: merge on a spec-evolved table fails reading "
+        "its old-spec files (ClassCastException Integer -> UTF8String in "
+        "_retire_old_spec_rows)",
+    )) if v == "merge" else v
+    for v in sorted(_META_VERBS)
+])
+def test_every_verb_keeps_table_metadata(spark, tmp_path, _meta_table, verb):
+    import shutil
+
+    run, changed, resolve_base = _META_VERBS[verb]
+    root = str(tmp_path / "t")
+    shutil.copytree(_meta_table, root)
+    st = SnapshotStore(root, "p")
+    before = _head(st)
+    out = run(spark, st, tmp_path)
+    base = resolve_base(st) if resolve_base else before
+    head = _head(out)
+    for key in _META_KEYS:
+        if key in changed:
+            assert head.get(key) != base.get(key), (verb, key)
+        else:
+            assert head.get(key) == base.get(key), (verb, key)
+    # the head still reads: the kept metadata is consistent with it
+    out.read(spark).collect()

@@ -182,17 +182,12 @@ def execute(
                 raise SQLFrontendError(f"bad timestamp literal {ts!r}: {e}")
             if dt.tzinfo is None:
                 dt = dt.replace(tzinfo=datetime.timezone.utc)
-            epoch = dt.timestamp()
-            cands = [
-                w
-                for w in store._published_versions()
-                if store._manifest_doc(w).get("committed_at", 0.0) <= epoch
-            ]
-            if not cands:
+            try:
+                return store.version_as_of(dt.timestamp())
+            except ValueError:
                 raise SQLFrontendError(
                     f"no snapshot version committed at or before {ts!r}"
-                )
-            return max(cands)
+                ) from None
 
         def _version_view(name: str, v: int, alias: "str | None") -> str:
             if name not in snapshots:

@@ -187,7 +187,7 @@ class SnapshotStore:
         root: str,
         partition_col: str,
         clock=None,
-        distribution: str | None = None,
+        distribution: str = "none",
     ):
         self.root = root
         self.pc = partition_col
@@ -207,16 +207,12 @@ class SnapshotStore:
         # avoids — writes there are a handful of KB-scale files on a
         # local FS — while read-heavy tables (e.g. an incrementally
         # maintained MV re-read on every refresh) already win locally
-        # and pass distribution='hash' explicitly. On a real cluster,
-        # where a delta write is hundreds of tasks and file counts are
-        # an object-store bill, pin KARNA_SNAPSHOT_DISTRIBUTION=hash
-        # (or pass it per table, Iceberg-style).
-        self.distribution = (
-            distribution
-            if distribution is not None
-            else os.environ.get("KARNA_SNAPSHOT_DISTRIBUTION", "none")
-        )
-        if self.distribution not in ("hash", "none"):
+        # and pass distribution='hash' explicitly, as does any table on
+        # a real cluster, where a delta write is hundreds of tasks and
+        # file counts are an object-store bill (per table,
+        # Iceberg-style).
+        self.distribution = distribution
+        if distribution not in ("hash", "none"):
             raise ValueError(
                 f"unknown write distribution {self.distribution!r}; "
                 "expected 'hash' or 'none'"
@@ -249,7 +245,9 @@ class SnapshotStore:
     def _manifest(self, v: int) -> dict[str, int]:
         return self._manifest_doc(v)["partitions"]
 
-    def _manifest_doc(self, v: int) -> dict:
+    def _manifest_doc(self, v: int | None = None) -> dict:
+        """Manifest of version ``v`` (default: the latest)."""
+        v = self.latest_version() if v is None else v
         with open(self._mpath(v)) as fh:
             return json.load(fh)
 
@@ -339,8 +337,8 @@ class SnapshotStore:
             raise TypeError(f"not a table-state key: {sorted(unknown)}")
         if base_version is not None and self.latest_version() != base_version:
             raise ConcurrentWriteError(
-                f"manifest base v{base_version} is stale (latest is "
-                f"v{self.latest_version()}); retry the write"
+                f"base moved: this write derived from v{base_version}, "
+                f"head is now v{self.latest_version()}; retry the write"
             )
         if "partitions" not in base:
             base = {"partitions": base}
@@ -382,6 +380,22 @@ class SnapshotStore:
                     "rolled back — retry"
                 )
         return v
+
+    def _commit(self, op: str, stage, *args) -> int:
+        """The commit protocol of every CAS-published verb (Delta's and
+        Iceberg's): read the base manifest BEFORE anything is claimed,
+        ``stage(doc, *args)`` validates, claims, writes and returns
+        ``(v, changes)``, and ``v`` is published as the base plus
+        ``changes`` with the race check. Base-first matters: a writer
+        that claimed first could base on a racer's newer head yet
+        publish a LOWER version that passes both race checks and is
+        never served — a lost update no retry loop catches."""
+        base_v = self.latest_version()
+        if base_v == 0:
+            raise ValueError(f"{op} needs a published version")
+        doc = self._manifest_doc(base_v)
+        v, changes = stage(doc, *args)
+        return self._publish(v, doc, op, base_version=base_v, **changes)
 
     def _published_versions(self) -> list[int]:
         return sorted(
@@ -560,8 +574,7 @@ class SnapshotStore:
         point reads on a composite spec: ``read(spark,
         partition_values=[store.spec_key({"region": "EU", "k": 42})])``
         scans exactly one directory of a 100 TB table."""
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+        doc = self._manifest_doc(version)
         spec = self._doc_specs(doc)[-1]
         if not spec.get("fields"):
             lg = self._logical_of(doc, spec["col"])
@@ -585,8 +598,10 @@ class SnapshotStore:
         transformed value; keys under specs that never mention the
         field are kept (conservative — pruning may fail to skip, never
         lose rows). Pure driver-side manifest work, zero I/O."""
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+        return self._prune_keys(self._manifest_doc(version), field, value)
+
+    def _prune_keys(self, doc: dict, field: str, value) -> list[str]:
+        """:meth:`prune_keys` evaluated against manifest ``doc``."""
         phys = (doc.get("colmap") or {}).get(field, field)
         specs = {s["col"]: s for s in self._doc_specs(doc)}
         out = []
@@ -650,10 +665,9 @@ class SnapshotStore:
         would make the python pruning twin disagree with the written
         directory names). A one-field identity list degrades to the
         single-column spec form."""
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("spec evolution needs a published version")
-        doc = self._manifest_doc(prev_v)
+        return self._commit("respec", self._stage_respec, new_col)
+
+    def _stage_respec(self, doc: dict, new_col):
         if doc.get("schema") is None:
             raise ValueError("manifest carries no schema to evolve")
         schema = StructType.fromJson(json.loads(doc["schema"]))
@@ -739,8 +753,7 @@ class SnapshotStore:
                 else dict(e)
                 for e in doc["deletes"]
             ]
-        return self._publish(
-            v, doc, "respec", base_version=prev_v,
+        return v, dict(
             partitions=new_parts, stats=new_stats or None,
             deletes=new_dels, colmap=cm, specs=specs,
         )
@@ -765,7 +778,14 @@ class SnapshotStore:
         hold the raw partition value, and path construction re-escapes
         (r7 ADVICE: returning the escaped name verbatim made upsert
         retain the old pointer AND add the escaped-name key, serving
-        that partition's rows twice)."""
+        that partition's rows twice).
+
+        INVARIANT: cached frames that scan the store keep its partition
+        typing across the store's own writes. Spark refreshes every
+        cached plan that reads under a written path, so every write
+        runs with partition-type inference off — with it on, MERGE
+        INTO's pinned feed (a scan of the target) re-read a ``v=1``
+        directory as an integer where its scan declares a string."""
         pc = spec_col if spec_col is not None else self.pc
         # Partition-column type gate (same reasoning as composite-spec
         # sources): manifest keys round-trip through Spark's directory
@@ -839,7 +859,8 @@ class SnapshotStore:
             # requirement as a prefix, so the writer keeps this exact
             # order and the files come out clustered on order_by.
             out = out.sortWithinPartitions(pc, "v", *order_by)
-        out.write.mode("append").partitionBy(pc, "v").parquet(self.data)
+        with _no_partition_inference(df.sparkSession):
+            out.write.mode("append").partitionBy(pc, "v").parquet(self.data)
         prefix = f"{pc}="
         return [
             _unescape_partition(d[len(prefix):])
@@ -1025,8 +1046,7 @@ class SnapshotStore:
         lands under the current spec, whose history collapses to a
         single entry because no old-spec pointer survives a full
         rewrite."""
-        prev_v = self.latest_version()
-        prev_doc = self._manifest_doc(prev_v) if prev_v else {}
+        prev_doc = self._manifest_doc() if self.latest_version() else {}
         v = self._claim_version()
         pc, specs, wdf = None, None, df
         if "specs" in prev_doc:
@@ -1094,20 +1114,18 @@ class SnapshotStore:
         while op_col in taken:
             op_col = "_" + op_col
         feed = delta.withColumn(op_col, F.lit("U"))
-        if not validate_keys:
-            return self.apply_changes(
-                spark, feed, key_cols, op_col=op_col, _op="upsert"
-            )
-        # the check and the rewrite must see the same rows: pin the
-        # feed here (apply_changes leaves an already-pinned frame alone)
+        stage = self._stage_checked_upsert if validate_keys else self._stage_apply
+        return self._commit("upsert", stage, spark, feed, key_cols, op_col)
+
+    def _stage_checked_upsert(self, doc: dict, spark, feed, key_cols, op_col):
+        # the check and the rewrite see the same rows and the same base:
+        # pin the feed here (the apply stage leaves a pinned frame alone)
         with intermediates.scope():
             feed = intermediates.persist(feed, StorageLevel.MEMORY_AND_DISK)
-            base = self.latest_version()
-            doc = self._manifest_doc(base)
             if doc["partitions"]:
                 dl, pc_l = self._with_spec_col(feed, doc, logical=True)
                 prev_df, _ = self._with_spec_col(
-                    self.read(spark, version=base), doc, logical=True
+                    self._read_doc(spark, doc), doc, logical=True
                 )
                 moved = (
                     prev_df
@@ -1128,12 +1146,7 @@ class SnapshotStore:
                         f"{moved[0][pc_l]!r}); partition values are "
                         "immutable per key"
                     )
-            # checked against ``base``: a publish racing the check must
-            # fail the apply loudly, not slip a moved key past it
-            return self.apply_changes(
-                spark, feed, key_cols, op_col=op_col, _op="upsert",
-                _expect_base=base,
-            )
+            return self._stage_apply(doc, spark, feed, key_cols, op_col)
 
     def _write_position_deletes(self, matched: DataFrame, v: int) -> dict | None:
         """Write version ``v``'s position-delete file from ``matched``
@@ -1150,7 +1163,8 @@ class SnapshotStore:
             if not touched:
                 return None
             ddir = self._ddir(v)
-            matched.coalesce(1).write.mode("overwrite").parquet(ddir)
+            with _no_partition_inference(matched.sparkSession):
+                matched.coalesce(1).write.mode("overwrite").parquet(ddir)
         return {
             "id": v,
             "partitions": touched,
@@ -1162,7 +1176,6 @@ class SnapshotStore:
     def _retire_old_spec_rows(
         self,
         spark: SparkSession,
-        prev_v: int,
         prev_doc: dict,
         keys: DataFrame,
         key_cols: list[str],
@@ -1199,16 +1212,16 @@ class SnapshotStore:
             ).first()
             if b["lo"] is not None:
                 where = (key_cols[0], b["lo"], b["hi"])
-        # read() disables partition-type inference for its own scans
+        # reads disable partition-type inference for their own scans
         # (the _pkey strings below round-trip the raw manifest keys)
         matched = (
-            self.read(
+            self._read_doc(
                 spark,
-                version=prev_v,
+                prev_doc,
                 partition_values=old_keys,
                 where=where,
-                _keep_hidden=True,
-                _with_pkey=True,
+                keep_hidden=True,
+                with_pkey=True,
             )
             .join(F.broadcast(keys), key_cols, "left_semi")
             .select(F.col("_pkey").alias("_pval"), "_rv", "_rid")
@@ -1221,8 +1234,6 @@ class SnapshotStore:
         changes: DataFrame,
         key_cols: list[str],
         op_col: str = "op",
-        _op: str = "cdc",
-        _expect_base: int | None = None,
     ) -> int:
         """CDC apply: merge a change feed carrying an op column
         ('I'/'U' upsert, 'D' delete) into a new snapshot. This is the
@@ -1262,84 +1273,60 @@ class SnapshotStore:
         rewrite) — the Iceberg merge-on-read MERGE shape. The scan cost
         shrinks to zero as :meth:`compact` migrates the table to the
         current spec."""
-        # READ the base BEFORE claiming the version number (every
-        # writer's ordering): claiming first opens a window where a
-        # racer can claim+publish a HIGHER number, after which this
-        # write would base on the racer's head yet publish a LOWER
-        # version — passing the CAS pre-check (latest == base) and the
-        # post-check (which scans only w > base), landing durable but
-        # never served: a silently lost update no retry loop catches.
-        # Base-first, the racer's publish makes the CAS check fail
-        # loudly and with_commit_retries does its job.
-        prev_v = self.latest_version()
-        if _expect_base is not None and prev_v != _expect_base:
-            # a composite verb (merge, a validated upsert) derived or
-            # checked this feed against an EARLIER head: basing the
-            # apply on the racer's newer head would pass CAS while
-            # carrying decisions made against stale rows — the same
-            # lost-update class as the claim-before-read race, one
-            # level up. Fail loudly; the caller re-derives its feed
-            # from the new head and retries.
-            raise ConcurrentWriteError(
-                f"base moved under the change feed: derived against "
-                f"v{_expect_base}, head is now v{prev_v}"
-            )
-        prev_doc = self._manifest_doc(prev_v)
+        return self._commit(
+            "cdc", self._stage_apply, spark, changes, key_cols, op_col
+        )
+
+    def _stage_apply(self, doc: dict, spark, changes, key_cols, op_col):
         v = self._claim_version()
         # Pin the feed: the affected-values collect, the anti-join key
         # set, the write and (spec-evolved) the merge-on-read key probe
         # would each re-run the caller's upstream plan.
         with intermediates.scope():
-            changes = intermediates.persist(changes, StorageLevel.MEMORY_AND_DISK)
-            return self._apply_changes_pinned(
-                spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
+            changes = intermediates.persist(
+                changes, StorageLevel.MEMORY_AND_DISK
             )
-
-    def _apply_changes_pinned(
-        self, spark, changes, key_cols, op_col, _op, prev_v, prev_doc, v
-    ) -> int:
-        prev = prev_doc["partitions"]
-        cur_spec = self._doc_specs(prev_doc)[-1]
-        cur = cur_spec["col"]
-        # S30b: under a composite spec the partition value is DERIVED
-        # (one string column computed from the spec's source fields) —
-        # the feed gains it here for affected-value discovery, and
-        # the physical write frame gains it again below from physical
-        # names. Single-column specs pass through unchanged.
-        ch, pc_l = self._with_spec_col(changes, prev_doc, logical=True)
-        affected = self._affected_values(ch, pc_l, op_col)
-        affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
-        existing = self.read(
-            spark,
-            version=prev_v,
-            partition_values=[k for k in sorted(affected_keys) if k in prev],
-        )
-        keys = changes.select(*key_cols).distinct()
-        keep = existing.join(keys, key_cols, "left_anti")
-        upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
-        merged = keep.unionByName(upserts)
-        cm = prev_doc.get("colmap")
-        wdf = self._to_physical(merged, cm)
-        if cur_spec.get("fields"):
-            wdf = wdf.withColumn(
-                cur, self._spec_expr(prev_doc, cur_spec, logical=False)
+            prev = doc["partitions"]
+            cur_spec = self._doc_specs(doc)[-1]
+            cur = cur_spec["col"]
+            # S30b: under a composite spec the partition value is DERIVED
+            # (one string column computed from the spec's source fields) —
+            # the feed gains it here for affected-value discovery, and
+            # the physical write frame gains it again below from physical
+            # names. Single-column specs pass through unchanged.
+            ch, pc_l = self._with_spec_col(changes, doc, logical=True)
+            affected = self._affected_values(ch, pc_l, op_col)
+            affected_keys = {self._mk_key(doc, cur, a) for a in affected}
+            existing = self._read_doc(
+                spark,
+                doc,
+                partition_values=sorted(k for k in affected_keys if k in prev),
             )
-        written = self._write(wdf, v, spec_col=cur)
-        manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
-        manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
-        deletes = self._carry_deletes(prev_doc, affected_keys) or []
-        mor = self._retire_old_spec_rows(
-            spark, prev_v, prev_doc, keys, key_cols, v
-        )
-        if mor:
-            deletes.append(mor)
-        return self._publish(
-            v, prev_doc, _op, base_version=prev_v,
-            partitions=manifest,
-            schema=merged.schema.json(),
-            stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=deletes,
-        )
+            keys = changes.select(*key_cols).distinct()
+            keep = existing.join(keys, key_cols, "left_anti")
+            upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
+            merged = keep.unionByName(upserts)
+            cm = doc.get("colmap")
+            wdf = self._to_physical(merged, cm)
+            if cur_spec.get("fields"):
+                wdf = wdf.withColumn(
+                    cur, self._spec_expr(doc, cur_spec, logical=False)
+                )
+            written = self._write(wdf, v, spec_col=cur)
+            manifest = {
+                k: pv for k, pv in prev.items() if k not in affected_keys
+            }
+            manifest.update({self._mk_key(doc, cur, a): v for a in written})
+            deletes = self._carry_deletes(doc, affected_keys) or []
+            mor = self._retire_old_spec_rows(spark, doc, keys, key_cols, v)
+            if mor:
+                deletes.append(mor)
+            return v, dict(
+                partitions=manifest,
+                schema=merged.schema.json(),
+                stats=self._inherit_stats(doc, manifest, written, v),
+                deletes=deletes,
+            )
 
     def rollback(self, version: int) -> int:
         """S34: roll the table back to ``version`` — Iceberg's
@@ -1354,12 +1341,17 @@ class SnapshotStore:
         commit, so a racing writer fails loudly rather than being
         silently undone. The target must still be readable (not
         expired by vacuum — resolving it raises otherwise)."""
-        prev_v = self.latest_version()
-        if version == prev_v:
+        return self._commit("rollback", self._stage_rollback, version)
+
+    def _stage_rollback(self, doc: dict, version: int):
+        if version == doc["version"]:
             raise ValueError(f"already at v{version}")
-        doc = self._manifest_doc(version)  # raises if expired/unknown
-        v = self._claim_version()
-        return self._publish(v, doc, "rollback", base_version=prev_v)
+        target = self._manifest_doc(version)  # raises if expired/unknown
+        # every table-state key becomes the target's (None removes one
+        # the target lacks)
+        return self._claim_version(), {
+            k: target.get(k) for k in self._TABLE_STATE_KEYS
+        }
 
     def merge(
         self,
@@ -1376,8 +1368,8 @@ class SnapshotStore:
         """S33: MERGE INTO — the Delta/Iceberg writer verb
         (``WHEN MATCHED [AND cond] THEN UPDATE / DELETE, WHEN NOT
         MATCHED [AND cond] THEN INSERT``) expressed as ONE
-        source-target join that derives a CDC feed and hands it to
-        :meth:`apply_changes` (so partition-scoped copy-on-write,
+        source-target join that derives a CDC feed and stages it as
+        :meth:`apply_changes` does (so partition-scoped copy-on-write,
         schema/spec evolution, old-spec retirement, stats inheritance
         and CAS publish are all inherited, not re-implemented).
 
@@ -1419,9 +1411,20 @@ class SnapshotStore:
         bound is target-scale, not delta-scale; that is inherent to
         the verb (Delta's docs carry the same warning), and partition
         rewrite cost is still ∝ partitions the feed touches."""
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("nothing to merge into: no published version")
+        return self._commit(
+            "merge", self._stage_merge, spark, source, key_cols,
+            matched_update_cond, matched_delete_cond,
+            not_matched_insert_cond, not_matched_by_source_delete,
+            not_matched_by_source_update_set,
+            not_matched_by_source_update_cond,
+        )
+
+    def _stage_merge(
+        self, doc, spark, source, key_cols, matched_update_cond,
+        matched_delete_cond, not_matched_insert_cond,
+        not_matched_by_source_delete, not_matched_by_source_update_set,
+        not_matched_by_source_update_cond,
+    ):
         nmbs_set = not_matched_by_source_update_set
         nmbs = bool(not_matched_by_source_delete) or nmbs_set is not None
         if nmbs_set is not None and not nmbs_set:
@@ -1440,7 +1443,6 @@ class SnapshotStore:
                 "ignored; pass the SET dict or drop the condition"
             )
         if nmbs_set:
-            doc = self._manifest_doc(prev_v)
             protected = {
                 self._logical_of(doc, p)
                 for p in self._spec_protected_cols(doc)
@@ -1483,7 +1485,7 @@ class SnapshotStore:
                     "pre-aggregate the source to one row per key"
                 )
             cols = source.columns
-            tgt = self.read(spark, version=prev_v)
+            tgt = self._read_doc(spark, doc)
             s = source.select(
                 *[F.col(c).alias(f"__s_{c}") for c in cols],
                 F.lit(True).alias("__s_present"),
@@ -1593,13 +1595,10 @@ class SnapshotStore:
                     *[_img(c) for c in cols],
                 )
             )
-            return self.apply_changes(
-                spark, feed, key_cols, op_col="__merge_op", _op="merge",
-                # the feed's clause decisions were evaluated against
-                # prev_v's rows; a racer publishing in between must fail
-                # the apply loudly, not be silently overwritten
-                _expect_base=prev_v,
-            )
+            # the feed's clause decisions were evaluated against the
+            # base's rows, so the apply stages on that same base: a
+            # racer publishing in between fails the commit loudly
+            return self._stage_apply(doc, spark, feed, key_cols, "__merge_op")
 
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Merge-on-read row delete (S27 — Iceberg v2 position
@@ -1626,36 +1625,24 @@ class SnapshotStore:
         deterministic no-op version with the base's delete list)."""
         if isinstance(condition, str):
             condition = F.expr(condition)
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("nothing to delete from: no published version")
-        prev_doc = self._manifest_doc(prev_v)
+        return self._commit(
+            "delete", self._stage_delete_where, spark, condition
+        )
+
+    def _stage_delete_where(self, doc: dict, spark, condition):
         v = self._claim_version()
-        # Partition-type inference OFF for this internal scan: Spark
-        # would otherwise re-render directory values ('00123'→123,
-        # '1.10'→1.1) and the touched-partition names recorded below
-        # would mismatch the raw manifest keys, silently skipping the
-        # partition in the changelog's MOR prune (r9 ADVICE). With
-        # inference off the partition column comes back as the raw
-        # directory string — exactly the manifest key — and a typed
-        # user ``condition`` on it still works (Spark casts the
-        # comparison).
+        # the read scans with partition-type inference off, so _pkey
+        # is the raw directory string — exactly the manifest key the
+        # changelog's MOR prune matches (r9 ADVICE) — and a typed user
+        # ``condition`` on it still works (Spark casts the comparison)
         matched = (
-            self.read(
-                spark,
-                version=prev_v,
-                _keep_hidden=True,
-                _with_pkey=True,
-            )
+            self._read_doc(spark, doc, keep_hidden=True, with_pkey=True)
             .filter(condition)
             .select(F.col("_pkey").alias("_pval"), "_rv", "_rid")
         )
-        deletes = prev_doc.get("deletes", [])
+        deletes = doc.get("deletes", [])
         entry = self._write_position_deletes(matched, v)
-        return self._publish(
-            v, prev_doc, "delete", base_version=prev_v,
-            deletes=[*deletes, entry] if entry else deletes,
-        )
+        return v, dict(deletes=[*deletes, entry] if entry else deletes)
 
     def delete_keys(self, spark: SparkSession, col: str, keys) -> int:
         """Merge-on-read EQUALITY delete (S31 — Iceberg v2 equality
@@ -1693,17 +1680,18 @@ class SnapshotStore:
         while an eq entry references the column — dropped physical
         columns leave the read schema, which would silently disarm
         the filter and resurrect the rows; compact first."""
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("nothing to delete from: no published version")
-        prev_doc = self._manifest_doc(prev_v)
-        if prev_doc.get("schema") is None:
+        return self._commit(
+            "eq-delete", self._stage_delete_keys, spark, col, keys
+        )
+
+    def _stage_delete_keys(self, doc: dict, spark, col: str, keys):
+        if doc.get("schema") is None:
             raise ValueError("equality deletes need a manifest schema")
-        schema = StructType.fromJson(json.loads(prev_doc["schema"]))
+        schema = StructType.fromJson(json.loads(doc["schema"]))
         names = {f.name: f for f in schema.fields}
         if col not in names:
             raise ValueError(f"no such column: {col!r}")
-        cm = prev_doc.get("colmap") or {}
+        cm = doc.get("colmap") or {}
         phys = cm.get(col, col)
         if isinstance(keys, DataFrame):
             if len(keys.columns) != 1:
@@ -1753,8 +1741,9 @@ class SnapshotStore:
             ).distinct()
         v = self._claim_version()
         ddir = self._ddir(v)
-        kdf.coalesce(1).write.mode("overwrite").parquet(ddir)
-        deletes = prev_doc.get("deletes", [])
+        with _no_partition_inference(spark):  # see _write
+            kdf.coalesce(1).write.mode("overwrite").parquet(ddir)
+        deletes = doc.get("deletes", [])
         if self._dir_rows(ddir) > 0:
             deletes = [*deletes, {
                 "id": v,
@@ -1769,9 +1758,7 @@ class SnapshotStore:
             import shutil
 
             shutil.rmtree(ddir, ignore_errors=True)
-        return self._publish(
-            v, prev_doc, "eq-delete", base_version=prev_v, deletes=deletes
-        )
+        return v, dict(deletes=deletes)
 
     def compact(
         self,
@@ -1808,12 +1795,13 @@ class SnapshotStore:
         manifest-stat pruning layer (S20) reads — bounded reads skip
         more after an ordered compaction. Logical content is
         unchanged either way."""
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("nothing to compact: no published version")
-        prev_doc = self._manifest_doc(prev_v)
-        prev = prev_doc["partitions"]
-        cur = self._cur_spec(prev_doc)
+        return self._commit(
+            "compact", self._stage_compact, spark, partition_values, order_by
+        )
+
+    def _stage_compact(self, doc: dict, spark, partition_values, order_by):
+        prev = doc["partitions"]
+        cur = self._cur_spec(doc)
         if partition_values is None:
             vals = sorted(prev)
         else:
@@ -1829,7 +1817,7 @@ class SnapshotStore:
         # outside the rewrite set, so a migrating compaction must be
         # full-table; current-spec-only subsets stay per-partition.
         old_targets = [
-            k for k in vals if self._split_key(prev_doc, k)[0] != cur
+            k for k in vals if self._split_key(doc, k)[0] != cur
         ]
         if old_targets and set(vals) != set(prev):
             raise ValueError(
@@ -1839,12 +1827,12 @@ class SnapshotStore:
                 "collide with inherited pointers"
             )
         v = self._claim_version()
-        df = self.read(spark, version=prev_v, partition_values=vals)
-        cm = prev_doc.get("colmap")
+        df = self._read_doc(spark, doc, partition_values=vals)
+        cm = doc.get("colmap")
         # S30b: composite specs compact/migrate by the DERIVED value —
         # computed on the logical read, untouched by _to_physical (the
         # synthetic name is in no colmap), consumed by partitionBy
-        rdf, pcn = self._with_spec_col(df, prev_doc, logical=True)
+        rdf, pcn = self._with_spec_col(df, doc, logical=True)
         packed = self._to_physical(
             rdf.repartition(len(vals), F.col(pcn)), cm
         )
@@ -1856,18 +1844,17 @@ class SnapshotStore:
             packed, v, order_by=order_by, spec_col=cur, cluster=False
         )
         manifest = {k: pv for k, pv in prev.items() if k not in set(vals)}
-        manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
+        manifest.update({self._mk_key(doc, cur, a): v for a in written})
         # prune spec-history entries this manifest no longer points
         # through (a full migration compact leaves only the current
         # spec; the freed old column becomes droppable again)
-        used = {self._split_key(prev_doc, k)[0] for k in manifest}
-        specs = prev_doc.get("specs", [])
-        return self._publish(
-            v, prev_doc, "compact", base_version=prev_v,
+        used = {self._split_key(doc, k)[0] for k in manifest}
+        specs = doc.get("specs", [])
+        return v, dict(
             partitions=manifest,
-            schema=prev_doc.get("schema") or df.schema.json(),
-            stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=self._carry_deletes(prev_doc, set(vals)),
+            schema=doc.get("schema") or df.schema.json(),
+            stats=self._inherit_stats(doc, manifest, written, v),
+            deletes=self._carry_deletes(doc, set(vals)),
             specs=[s for s in specs[:-1] if s["col"] in used] + specs[-1:],
         )
 
@@ -1921,8 +1908,7 @@ class SnapshotStore:
         would overcount — exactly why Iceberg disables metadata
         aggregation when delete files exist. :meth:`compact` folds
         the deletes and restores the fast path."""
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+        doc = self._manifest_doc(version)
         if doc.get("deletes"):
             raise ValueError(
                 "merge-on-read deletes pending: a manifest count "
@@ -1963,8 +1949,7 @@ class SnapshotStore:
         truncate their stats — or NaN-tainted floats) return NULL.
         Logical names resolve through the colmap; bounds live under
         physical names."""
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+        doc = self._manifest_doc(version)
         if doc.get("deletes"):
             raise ValueError(
                 "merge-on-read deletes pending: manifest stats "
@@ -2091,8 +2076,7 @@ class SnapshotStore:
         ``exceeds_broadcast`` is the operational signal to run
         :meth:`compact`, which folds the deletes in and clears the
         entries."""
-        v = self.latest_version() if version is None else version
-        dels = self._manifest_doc(v).get("deletes", [])
+        dels = self._manifest_doc(version).get("deletes", [])
         b = self._deletes_total_bytes(dels)
         return {
             "n_entries": len(dels),
@@ -2109,8 +2093,7 @@ class SnapshotStore:
         ``pending`` is the operational signal to run the full-table
         :meth:`compact`, which rewrites them under the current spec
         and prunes the history."""
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+        doc = self._manifest_doc(version)
         cur = self._cur_spec(doc)
         old = [
             k
@@ -2211,19 +2194,16 @@ class SnapshotStore:
         return StructType(fields)
 
     # --------------------------------------- schema evolution (S28)
-    def _evolved_doc(self) -> tuple[int, dict, "StructType", dict, dict]:
-        """(base version, its manifest, logical schema, a copy of the
-        colmap — identity on an un-evolved table — and a copy of the
-        add-column defaults) for a schema-evolution verb to change."""
-        prev_v = self.latest_version()
-        if prev_v == 0:
-            raise ValueError("schema evolution needs a published version")
-        doc = self._manifest_doc(prev_v)
+    @staticmethod
+    def _evolved(doc: dict) -> tuple["StructType", dict, dict]:
+        """(logical schema, a copy of the colmap — identity on an
+        un-evolved table — and a copy of the add-column defaults) of
+        base manifest ``doc``, for a schema-evolution verb to change."""
         if doc.get("schema") is None:
             raise ValueError("manifest carries no schema to evolve")
         schema = StructType.fromJson(json.loads(doc["schema"]))
         cm = dict(doc.get("colmap") or {c.name: c.name for c in schema.fields})
-        return prev_v, doc, schema, cm, dict(doc.get("defaults") or {})
+        return schema, cm, dict(doc.get("defaults") or {})
 
     def add_column(self, name: str, dtype, default=None) -> int:
         """S28: add a nullable column — METADATA-ONLY (Iceberg
@@ -2244,7 +2224,12 @@ class SnapshotStore:
         the same logical name can never resurrect stale bytes from old
         files, because the new physical name never collided with
         anything ever written. ``dtype`` is a pyspark DataType."""
-        prev_v, doc, schema, cm, defaults = self._evolved_doc()
+        return self._commit(
+            "add-column", self._stage_add_column, name, dtype, default
+        )
+
+    def _stage_add_column(self, doc: dict, name: str, dtype, default):
+        schema, cm, defaults = self._evolved(doc)
         if name in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} already exists")
         if default is not None and not isinstance(
@@ -2262,10 +2247,7 @@ class SnapshotStore:
         cm[name] = phys
         if default is not None:
             defaults[name] = {"value": default, "since": v}
-        return self._publish(
-            v, doc, "add-column", base_version=prev_v,
-            schema=schema.json(), colmap=cm, defaults=defaults,
-        )
+        return v, dict(schema=schema.json(), colmap=cm, defaults=defaults)
 
     def rename_column(self, old: str, new: str) -> int:
         """S28: rename a column — METADATA-ONLY. The physical name in
@@ -2273,7 +2255,12 @@ class SnapshotStore:
         the logical→physical mapping changes, so the rename costs one
         manifest write on a 100 TB table and time travel still serves
         each version under the schema it was published with."""
-        prev_v, doc, schema, cm, defaults = self._evolved_doc()
+        return self._commit(
+            "rename-column", self._stage_rename_column, old, new
+        )
+
+    def _stage_rename_column(self, doc: dict, old: str, new: str):
+        schema, cm, defaults = self._evolved(doc)
         # spec cols (current or historical) are rename-protected while
         # manifests may point at dirs keyed by them; an un-evolved
         # table's implicit spec is the __init__ partition column, and
@@ -2297,9 +2284,8 @@ class SnapshotStore:
                 for f in schema.fields
             ]
         )
-        return self._publish(
-            self._claim_version(), doc, "rename-column", base_version=prev_v,
-            schema=schema.json(), colmap=cm, defaults=defaults,
+        return self._claim_version(), dict(
+            schema=schema.json(), colmap=cm, defaults=defaults
         )
 
     def drop_column(self, name: str) -> int:
@@ -2308,7 +2294,10 @@ class SnapshotStore:
         version on, still served by time travel to prior versions).
         The physical name is retired forever: add_column never reuses
         one, so a later re-add cannot resurrect the dropped values."""
-        prev_v, doc, schema, cm, defaults = self._evolved_doc()
+        return self._commit("drop-column", self._stage_drop_column, name)
+
+    def _stage_drop_column(self, doc: dict, name: str):
+        schema, cm, defaults = self._evolved(doc)
         if cm.get(name, name) in self._spec_protected_cols(doc):
             # any spec column (current or historical) stays undroppable
             # while this manifest may point at dirs keyed by it (S30);
@@ -2335,9 +2324,8 @@ class SnapshotStore:
         cm.pop(name, None)
         defaults.pop(name, None)
         schema = StructType([f for f in schema.fields if f.name != name])
-        return self._publish(
-            self._claim_version(), doc, "drop-column", base_version=prev_v,
-            schema=schema.json(), colmap=cm, defaults=defaults,
+        return self._claim_version(), dict(
+            schema=schema.json(), colmap=cm, defaults=defaults
         )
 
     # widening lattice: every edge is lossless (Iceberg's permitted
@@ -2357,9 +2345,14 @@ class SnapshotStore:
         writes land at the wide type. Narrowing (or any lossy change —
         e.g. decimal scale change) is refused: a down-cast could
         silently truncate values already on disk."""
+        return self._commit(
+            "widen-column", self._stage_widen_column, name, dtype
+        )
+
+    def _stage_widen_column(self, doc: dict, name: str, dtype):
         from pyspark.sql.types import DecimalType
 
-        prev_v, doc, schema, cm, _ = self._evolved_doc()
+        schema, cm, _ = self._evolved(doc)
         field = next((f for f in schema.fields if f.name == name), None)
         if field is None:
             raise ValueError(f"no such column: {name!r}")
@@ -2393,10 +2386,7 @@ class SnapshotStore:
                 for f in schema.fields
             ]
         )
-        return self._publish(
-            self._claim_version(), doc, "widen-column", base_version=prev_v,
-            schema=schema.json(), colmap=cm,
-        )
+        return self._claim_version(), dict(schema=schema.json(), colmap=cm)
 
     def read_changes(
         self,
@@ -2545,22 +2535,19 @@ class SnapshotStore:
             for val, pv in m.items()
             if mo.get(val) != pv or val in mor_touched
         ]
-        return self.read(spark, version=v, partition_values=sorted(changed))
+        return self._read_doc(spark, doc, partition_values=sorted(changed))
 
     def _inherit_stats(
         self,
-        prev_v: int,
+        doc: dict,
         manifest: dict[str, int],
         written: list[str],
         v: int,
-        prev_doc: dict | None = None,
     ) -> dict[str, dict[str, list]]:
         """Manifest stats for an incremental commit: freshly computed
         bounds for the partitions this write produced, inherited
-        bounds for every pointer carried over from ``prev_v`` (whose
-        already-parsed manifest the caller passes — no re-read on the
-        commit hot path)."""
-        doc = prev_doc if prev_doc is not None else self._manifest_doc(prev_v)
+        bounds for every pointer carried over from base manifest
+        ``doc``."""
         prev_stats = doc.get("stats", {})
         spec_col = self._cur_spec(doc)
         wkeys = {self._mk_key(doc, spec_col, a) for a in written}
@@ -2681,14 +2668,9 @@ class SnapshotStore:
         # added-column data for unrelated rows (r10 review) — and
         # mergeSchema refuses int/bigint mixes after a widen.
         #
-        # Partition-type inference OFF (same hazard as delete_where,
-        # r9 ADVICE): inference can re-render a string partition value
-        # ('00123'→123→'123'), so the hit set / remap keys would
-        # mismatch the raw manifest keys and the rewrite would write
-        # differently-named directories. With inference off the
-        # directory string round-trips exactly through probe, filter,
-        # partitionBy rewrite, and manifest repoint. try/finally: a
-        # scan error must not leak the disabled conf session-wide.
+        # Partition-type inference OFF (r9 ADVICE): the directory
+        # string must round-trip exactly through probe, filter,
+        # partitionBy rewrite, and manifest repoint.
         kdf = keys.select(*key_cols).distinct()
         # One probe + one rewrite PER SPEC GROUP (S30): dirs written
         # under the same partition column share a layout, so each
@@ -2800,9 +2782,10 @@ class SnapshotStore:
                     .withColumn("v", nv_expr)
                     .join(F.broadcast(kcast), _key_cond(kcast), "left_anti")
                 )
-                kept.write.mode("append").partitionBy(gcol, "v").parquet(
-                    self.data
-                )
+                with _no_partition_inference(spark):  # see _write
+                    kept.write.mode("append").partitionBy(gcol, "v").parquet(
+                        self.data
+                    )
                 for (val, pv), nv in claimed.items():
                     remap[(gcol, val, pv)] = (
                         nv
@@ -2944,7 +2927,9 @@ class SnapshotStore:
         bdir = self._bdir(name)
         with open(os.path.join(bdir, "meta.json")) as fh:
             meta = json.load(fh)
-        br = SnapshotStore(bdir, self.pc, distribution=self.distribution)
+        br = SnapshotStore(
+            bdir, self.pc, clock=self._clock, distribution=self.distribution
+        )
         br.data = self.data          # shared physical storage (CoW)
         br.cdir = self.cdir          # store-global version claims
         br._branch_meta = meta
@@ -3007,8 +2992,7 @@ class SnapshotStore:
         stale fork base made every second merge raise
         ``ConcurrentWriteError`` even with no interleaved writer)."""
         br = self.branch(name)
-        head = br.latest_version()
-        doc = br._manifest_doc(head)
+        doc = br._manifest_doc()
         v = self._claim_version()
         self._publish(
             v, doc, "branch-merge",
@@ -3290,8 +3274,6 @@ class SnapshotStore:
         where_eq: "tuple[str, object] | None" = None,
         tag: str | None = None,
         as_of: float | None = None,
-        _keep_hidden: bool = False,
-        _with_pkey: bool = False,
     ) -> DataFrame:
         """Read snapshot ``version`` (default: latest). Resolves the
         manifest to leaf dirs so Spark scans exactly the committed
@@ -3338,27 +3320,42 @@ class SnapshotStore:
             with open(self._tag_path(tag)) as fh:
                 version = json.load(fh)["version"]
         if as_of is not None:
-            # timestamp time travel: newest version committed at or
-            # before ``as_of`` (every manifest is stamped
-            # ``committed_at`` at publish; resolution is a driver-side
-            # scan of the manifest list — O(#versions) JSON reads,
-            # like Iceberg's metadata-log lookup)
             if version is not None:
                 raise ValueError(
                     "pass either version/tag or as_of, not both"
                 )
-            cands = [
-                w
-                for w in self._published_versions()
-                if self._manifest_doc(w).get("committed_at", 0.0) <= as_of
-            ]
-            if not cands:
-                raise ValueError(
-                    f"no version committed at or before {as_of}"
-                )
-            version = max(cands)
-        v = self.latest_version() if version is None else version
-        doc = self._manifest_doc(v)
+            version = self.version_as_of(as_of)
+        doc = self._manifest_doc(version)
+        return self._read_doc(spark, doc, partition_values, where, where_eq)
+
+    def version_as_of(self, ts: float) -> int:
+        """Timestamp time travel: the newest version committed at or
+        before epoch seconds ``ts`` (every manifest is stamped
+        ``committed_at`` at publish; resolution is a driver-side scan
+        of the manifest list — O(#versions) JSON reads, like Iceberg's
+        metadata-log lookup). Raises ``ValueError`` when none was."""
+        cands = [
+            w
+            for w in self._published_versions()
+            if self._manifest_doc(w).get("committed_at", 0.0) <= ts
+        ]
+        if not cands:
+            raise ValueError(f"no version committed at or before {ts}")
+        return max(cands)
+
+    def _read_doc(
+        self,
+        spark: SparkSession,
+        doc: dict,
+        partition_values: list[str] | None = None,
+        where: tuple[str, object, object] | None = None,
+        where_eq: "tuple[str, object] | None" = None,
+        keep_hidden: bool = False,
+        with_pkey: bool = False,
+    ) -> DataFrame:
+        """:meth:`read` of manifest ``doc``. ``keep_hidden`` keeps the
+        row identity (``_rv``, ``_rid``) and ``with_pkey`` appends
+        ``_pkey``, the raw manifest key of each row's partition."""
         manifest = doc["partitions"]
         cm = doc.get("colmap")
         if partition_values is not None:
@@ -3377,7 +3374,7 @@ class SnapshotStore:
             # engine prunes at manifest level — Iceberg's scan-planning
             # behavior, no manual key construction.
             ecol, eval_ = where_eq
-            keep = set(self.prune_keys(ecol, eval_, version=v))
+            keep = set(self._prune_keys(doc, ecol, eval_))
             manifest = {k: pv for k, pv in manifest.items() if k in keep}
         if where is not None:
             wcol, lo, hi = where
@@ -3398,10 +3395,11 @@ class SnapshotStore:
             schema_json = doc.get("schema")
             if schema_json is None:
                 raise ValueError(
-                    f"snapshot v{v} is empty and carries no schema"
+                    f"snapshot v{doc.get('version')} is empty and carries no "
+                    "schema"
                 )
             schema = StructType.fromJson(json.loads(schema_json))
-            if _keep_hidden:
+            if keep_hidden:
                 schema = StructType(
                     schema.fields
                     + [
@@ -3410,7 +3408,7 @@ class SnapshotStore:
                     ]
                 )
             out = spark.createDataFrame([], schema)
-            if _with_pkey:
+            if with_pkey:
                 out = out.withColumn("_pkey", F.lit(None).cast("string"))
         elif "specs" not in doc:
             dirs = [
@@ -3469,7 +3467,7 @@ class SnapshotStore:
                 for c in out.columns
                 if c != "v"
             ]
-            if _with_pkey:
+            if with_pkey:
                 proj.append(F.col(self.pc).cast("string").alias("_pkey"))
             out = out.select(*proj)
         else:
@@ -3527,7 +3525,7 @@ class SnapshotStore:
                         gproj.append(F.col(c).cast(ptypes[c]).alias(c))
                     else:
                         gproj.append(F.col(c))
-                if _with_pkey:
+                if with_pkey:
                     gproj.append(
                         F.concat(
                             F.lit(f"{col}="), F.col(col).cast("string")
@@ -3615,10 +3613,10 @@ class SnapshotStore:
                         proj.append(expr.alias(f.name))
                     else:
                         proj.append(F.lit(None).cast(f.dataType).alias(f.name))
-                if _with_pkey:
+                if with_pkey:
                     proj.append(F.col("_pkey"))
                 out = out.select(*proj, "_rv", "_rid")
-            if not _keep_hidden:
+            if not keep_hidden:
                 out = out.drop("_rv", "_rid")
         if where is not None:
             out = out.filter(F.col(where[0]).between(where[1], where[2]))

@@ -31,117 +31,4 @@ from karna_spark.queries import (  # noqa: F401,E402
     analytics,
 )
 
-# Registry order is the order the driver's correctness harness visits
-# queries, and the harness is count-capped (the first 50 entries per
-# round — CORRECTNESS_rN.json always holds exactly 50 rows).
-#
-# ROTATION POLICY (codified at N=205, r9 — the registry scale policy
-# the r8 verdict asked for):
-#   1. FLOOR: every registered query's newest driver row must be
-#      ≤ ceil(N/50) rounds old (5 rounds at the current N).
-#   2. HEAD ORDER: each round's top-50 is, in order, (a) queries with
-#      NO driver row yet (new queries are certified on their first
-#      eligible round — never registered without a path to a row),
-#      (b) queries materially changed this round, (c) the stalest
-#      certified cohort in registry order. Whatever spills past 50
-#      leads the NEXT round's (c).
-#   3. FEASIBILITY, not just instantaneous freshness: the plan must
-#      stay feasible FOREVER, not merely this round —
-#      scripts/rotation_check.py runs an earliest-deadline-first
-#      simulation of the next 2×floor rounds (each query's deadline =
-#      newest row + floor) and fails if any future round would need
-#      more than 50 slots. This is the mechanical form of "don't
-#      build a certification cliff".
-#   4. CAPACITY: the schedulability bound is N ≤ 50×floor; the policy
-#      cap is N ≤ 240 (a 10-row buffer under 250). Past the cap —
-#      or whenever the EDF simulation reports sustained ≥48/50
-#      utilization — rows whose capability is strictly dominated by a
-#      certified superset must be retired/merged before new rows are
-#      added (precedent: the r8 retirement of the four rows-only
-#      dedup/similarity twins).
-#
-# Round 12 executes the r11 verdict's post-round reorder. Head =
-# (a) the r12-born rows (multi-field transform partition specs S30b,
-# branch WAP / rollback / history-audit driver rows for the formerly
-# pytest-only storage verbs S26/S34/S35, the Avro OCF round trip, and
-# the two operator-backed NL intents), (b) the queries whose operators
-# materially changed with the r11 ADVICE fixes (stats_agg explicit
-# result schema, merge source pinning + reserved count alias, and the
-# S30 machinery generalized to composite specs), then (c) the
-# EDF-obligatory stale cohorts: all 32 r7 rows (deadline r12) followed
-# by the first 2 r8 rows in registry order (five late-r12 rows — the
-# NOT-MATCHED-BY-SOURCE merge, RRF fusion, binary-sketch ANN, the NL
-# hybrid intent, and the BPE encode — took head slots from the r8
-# fill); the r8 remainder (agg_grouping_sets onward) leads r13's (c)
-# head. rotation_check.py verifies floor + EDF feasibility against
-# this order.
-_PRIORITY: tuple[str, ...] = (
-    # (a) the r12-born rows (the four extension-session rows first:
-    # broadcast-Bloom decontamination F37, the unigram tokenizer F38,
-    # the shallow-clone lifecycle S36, and the decontamination NL
-    # intent — they took the last four r7 head slots; those four r7
-    # rows lead r13's (c) head with the r8 cohort):
-    "dedup_bloom_decontaminate", "text_unigram_tokenize",
-    "snapshot_clone_divergence", "frontend_nl_decontaminate",
-    "agg_countmin_merge_estimate", "text_unigram_em_round",
-    "snapshot_multifield_spec", "snapshot_branch_wap",
-    "snapshot_rollback_read", "snapshot_history_audit",
-    "source_avro_roundtrip", "frontend_nl_boolean_search",
-    "frontend_nl_funnel", "snapshot_merge_full_sync",
-    "retrieval_rrf_fusion", "similarity_hamming_rerank",
-    "frontend_nl_hybrid_search", "text_bpe_encode",
-    "pipeline_rag_index", "frontend_sql_time_travel",
-    # (b) materially changed this round (io/snapshots.py r11 ADVICE
-    # fixes + composite-spec generalization of the write/read paths;
-    # text_boolean_search refactored onto the shared F33 operator):
-    "snapshot_stats_agg_pushdown", "snapshot_merge_into",
-    "snapshot_partition_evolution", "text_boolean_search",
-    # (c) the 32 r7-stale rows (deadline r12), registry order:
-    "source_csv_roundtrip", "source_tsv_roundtrip",
-    "source_multifile_glob", "source_partitioned_layout",
-    "sink_result_page", "source_bucketed_join", "source_cdc_apply",
-    "source_jsonl_roundtrip", "source_orc_roundtrip",
-    "streaming_snapshot_rollup", "events_cohort_retention",
-    "scd2_dimension_build", "timeseries_twap", "agg_linear_regression",
-    "agg_equidepth_histogram", "zorder_layout_stats",
-    "events_transition_matrix", "agg_sketch_accuracy_gate",
-    "timeseries_ohlc", "events_rfm_segmentation",
-    "basket_affinity_lift", "profile_table_stats",
-    "events_longest_streak", "events_attribution_last_touch",
-    "events_path_mining", "agg_yoy_growth",
-    # the 20 r12-born + 4 changed + 26 r7 rows fill all 50 slots;
-    # the displaced r7 tail (agg_abc_pareto, orders_backlog_timeline,
-    # events_dau_wau, dq_referential_integrity,
-    # events_winsorized_stats, dq_k_anonymity) + the whole r8 cohort
-    # lead r13's (c) head:
-)
-
-# r12 CONSOLIDATION (policy rule 4, pre-emptive — N was 226/240 with
-# EDF avg 19.7): eleven rows whose capability is strictly dominated by
-# certified supersets were retired — the primitive demonstrations
-# (projection/filter/distinct/sort/semi/anti) exercised by every TPC-H
-# row, window_ranking (⊂ window_distribution_ranks + topk_per_group),
-# text_token_counts (⊂ vocab/BM25/LM rows' exact token counting),
-# agg_approx_count_distinct (⊂ agg_sketch_accuracy_gate, which
-# certifies the same function AGAINST exact), dedup_semantic_assign
-# (its assignment is certified implicitly through
-# dedup_semantic_keep's winners; still plan-audited by direct import),
-# and similarity_threshold_search (⊂ topk_bruteforce + lsh_recall).
-# Every §2 tag they carried is multi-covered (tests/
-# test_survey_coverage.py stays green). N: 226 → 215.
-
-
-def _reorder() -> None:
-    ordered = {}
-    for name in _PRIORITY:
-        if name in registry.REGISTRY:
-            ordered[name] = registry.REGISTRY[name]
-    for name, q in registry.REGISTRY.items():
-        ordered.setdefault(name, q)
-    registry.REGISTRY.clear()
-    registry.REGISTRY.update(ordered)
-
-
-_reorder()
-
 REGISTRY = registry.REGISTRY

@@ -257,14 +257,14 @@ def test_upsert_validate_keys_fails_when_base_moves_after_check(spark, tmp_path)
     root = str(tmp_path / "t")
     store = SnapshotStore(root, "p")
     store.commit(_mk(spark, [(1, "a", 10)]))
-    orig_read = store.read
+    orig_read = store._read_doc
 
     def read_then_race(*args, **kwargs):
-        store.read = orig_read
+        store._read_doc = orig_read
         SnapshotStore(root, "p").upsert(spark, _mk(spark, [(2, "a", 20)]), ["k"])
         return orig_read(*args, **kwargs)
 
-    store.read = read_then_race  # the check's scan is the first read
+    store._read_doc = read_then_race  # the check's scan is the first read
     with pytest.raises(ConcurrentWriteError):
         store.upsert(spark, _mk(spark, [(1, "a", 11)]), ["k"], validate_keys=True)
     assert _rows(store.read(spark)) == [(1, "a", 10), (2, "a", 20)]
@@ -917,10 +917,9 @@ def test_compact_collapses_files_content_identical(spark, tmp_path):
     """S23: a fragmented latest version compacts to ONE file per
     partition in a new commit with byte-identical logical content;
     prior versions keep reading their own (uncompacted) directories."""
-    # distribution='none' pinned explicitly: the shipped default is
-    # 'none', but an ambient KARNA_SNAPSHOT_DISTRIBUTION=hash would
-    # cluster every write by partition value and defeat the deliberate
-    # fragmentation this test compacts away.
+    # distribution='none' (also the default) named explicitly: 'hash'
+    # would cluster every write by partition value and defeat the
+    # deliberate fragmentation this test compacts away.
     store = SnapshotStore(str(tmp_path / "t"), "p", distribution="none")
     # Fragment on purpose: an 8-task write fans each partition's rows
     # across up to 8 files.
@@ -1665,6 +1664,7 @@ def test_random_schema_evolution_interleavings_match_model(spark, tmp_path):
         # hist[v] = (val_name, vals {k: val}, aux {k: int|None} | None)
         hist = {v1: (val_name, dict(first), None)}
         retained = {v1}
+        spec_at = {v1: cur_spec}  # the spec each version was left under
 
         def check():
             for v in sorted(hist):
@@ -1709,12 +1709,17 @@ def test_random_schema_evolution_interleavings_match_model(spark, tmp_path):
         for i_op in range(14):
             op = random.choice(
                 ["commit", "upsert", "cdc", "addcol", "dropcol",
-                 "rename", "mordelete", "compact", "vacuum", "respec"]
+                 "rename", "mordelete", "compact", "vacuum", "respec",
+                 "smerge", "rollback"]
             )
             if i_op == 2:
                 # force at least one spec change per seed so every
                 # later random op composes with a mixed-spec table
                 op = "respec"
+            elif i_op == 3:
+                # and one MERGE INTO on it: the feed scans the target's
+                # old-spec files while the merge writes
+                op = "smerge"
             latest = max(v for v in hist if v in retained)
             _, prev_vals, prev_aux = hist[latest]
             if op == "commit":
@@ -1835,6 +1840,54 @@ def test_random_schema_evolution_interleavings_match_model(spark, tmp_path):
                 keep = random.randint(1, 3)
                 store.vacuum(retain_last=keep, orphan_grace_sec=0.0)
                 retained = set(sorted(v for v in hist if v in retained)[-keep:])
+            elif op == "smerge":
+                # MERGE INTO as in the storage checker: matched rows
+                # whose target value is under a random threshold are
+                # deleted, other matches take the source image,
+                # unmatched source rows are inserted
+                rows = {
+                    k: random.randrange(100)
+                    for k in random.sample(range(1, 9), random.randint(1, 5))
+                }
+                av = (
+                    {k: random.choice([None, random.randrange(9)]) for k in rows}
+                    if aux_live
+                    else None
+                )
+                thresh = random.randrange(100)
+                v = store.merge(
+                    spark, frame(rows, av), ["k"],
+                    matched_delete_cond=f"t.{val_name} < {thresh}",
+                )
+                nv, na = dict(prev_vals), (dict(prev_aux) if aux_live else None)
+                for k, val in rows.items():
+                    if k in nv and nv[k] < thresh:
+                        nv.pop(k)
+                        if na is not None:
+                            na.pop(k)
+                    else:
+                        nv[k] = val
+                        if na is not None:
+                            na[k] = av[k]
+                hist[v] = (val_name, nv, na)
+                retained.add(v)
+            elif op == "rollback":
+                # the head takes an older version's rows, schema and
+                # spec; later ops continue from that state
+                live = sorted(v for v in hist if v in retained)
+                tgt = random.choice(live)
+                if tgt == live[-1]:
+                    with pytest.raises(ValueError):
+                        store.rollback(tgt)
+                else:
+                    v = store.rollback(tgt)
+                    val_name, vals, aux = hist[tgt]
+                    aux_live = aux is not None
+                    cur_spec = spec_at[tgt]
+                    hist[v] = (val_name, dict(vals), dict(aux) if aux_live else None)
+                    retained.add(v)
+            for v in hist:
+                spec_at.setdefault(v, cur_spec)
             check()
 
 
@@ -2407,6 +2460,25 @@ def test_read_as_of_timestamp(spark, tmp_path):
         store.read(spark, as_of=10)
     with pytest.raises(ValueError, match="not both"):
         store.read(spark, version=1, as_of=1001)
+
+
+def test_branch_keeps_the_store_clock(spark, tmp_path):
+    """A branch stamps its manifests with its parent store's clock, so
+    read(as_of=...) on the branch resolves in the same time base."""
+    t = iter(range(1000, 1100))
+    store = SnapshotStore(str(tmp_path / "t"), "p", clock=lambda: next(t))
+    store.commit(_mk(spark, [(1, "a", 10)]))                # 1000
+    br = store.create_branch("dev")                         # fork: 1001
+    br.upsert(spark, _mk(spark, [(2, "a", 20)]), ["k"])     # 1002
+    store.branch("dev").upsert(
+        spark, _mk(spark, [(3, "b", 30)]), ["k"]            # 1003
+    )
+    assert [
+        br._manifest_doc(v)["committed_at"] for v in br._published_versions()
+    ] == [1001.0, 1002.0, 1003.0]
+    assert _rows(br.read(spark, as_of=1002.5)) == [(1, "a", 10), (2, "a", 20)]
+    assert _rows(br.read(spark, as_of=1001)) == [(1, "a", 10)]
+    assert br.version_as_of(1003) == br.latest_version()
 
 
 def test_add_column_default_initial_value(spark, tmp_path):
@@ -3425,20 +3497,20 @@ def test_merge_detects_base_move_between_read_and_apply(spark, tmp_path):
     root = str(tmp_path / "t")
     store = SnapshotStore(root, "p")
     store.commit(_mk(spark, [(1, "a", 10), (2, "a", 20)]))
-    orig_apply = store.apply_changes
+    orig_claim = store._claim_version
     fired = {"done": False}
 
-    def apply_with_racer(*a, **kw):
+    def claim_after_racer():
         if not fired["done"]:
             fired["done"] = True
             # the racer lands a commit between merge's base read and
-            # the feed apply
+            # the feed apply (which claims the version first)
             SnapshotStore(root, "p").upsert(
                 spark, _mk(spark, [(2, "a", 99)]), ["k"]
             )
-        return orig_apply(*a, **kw)
+        return orig_claim()
 
-    store.apply_changes = apply_with_racer
+    store._claim_version = claim_after_racer
     with pytest.raises(ConcurrentWriteError, match="base moved"):
         store.merge(
             spark,
@@ -3446,7 +3518,7 @@ def test_merge_detects_base_move_between_read_and_apply(spark, tmp_path):
             ["k"],
             not_matched_by_source_delete="t.val < 50",
         )
-    store.apply_changes = orig_apply
+    store._claim_version = orig_claim
     # the racer's write survived; a retry sees the new head, where
     # val=99 FAILS the delete condition — the racer's row lives on
     # (under the old silent-overwrite behavior the stale val=20
@@ -3797,15 +3869,7 @@ _META_VERBS = {
 }
 
 
-@pytest.mark.parametrize("verb", [
-    pytest.param(v, marks=pytest.mark.xfail(
-        strict=True,
-        reason="known defect: merge on a spec-evolved table fails reading "
-        "its old-spec files (ClassCastException Integer -> UTF8String in "
-        "_retire_old_spec_rows)",
-    )) if v == "merge" else v
-    for v in sorted(_META_VERBS)
-])
+@pytest.mark.parametrize("verb", sorted(_META_VERBS))
 def test_every_verb_keeps_table_metadata(spark, tmp_path, _meta_table, verb):
     import shutil
 

@@ -1,51 +1,49 @@
-"""GraphQL front-end: GraphQL query text → Spark DataFrame plan.
+"""GraphQL front-end: GraphQL query text → one SQL text + bound parameters.
 
 The reference declares GraphQL as one of its three query surfaces
 ("query tabular files like CSV, TSV or parquet using SQL, GraphQL and
 Natural Language", reference README.md:2) with no implementation
 (karna-core/src/lib.rs:1-14 is the cargo template). This module is the
 Spark-native realization (SURVEY.md §2.10): parse with the public
-``graphql-core`` library, walk the selection set, and emit *declarative*
-DataFrame operations — Catalyst then owns pushdown, join strategy and
-limit fusion exactly as it does for the SQL surface.
+``graphql-core`` library, resolve variables, fragments and
+``@skip``/``@include`` on the AST, and emit one SQL text (``to_sql``),
+the target the NL front-end compiles to as well. ``spark.sql`` analyzes
+it once; Catalyst then owns pushdown, join strategy and limit fusion
+exactly as it does for the SQL surface.
 
-Mapping (hasura-inspired, all public GraphQL syntax):
+Mapping (hasura-inspired, all public GraphQL syntax; ``t0`` aliases the
+root table, ``:pN`` are bound parameters):
 
-- root field           → registered table (catalog.FIXTURE_TABLES or
-                         any temp view)
-- scalar selections    → ``select`` (column pruning reaches the scan)
-- ``where:`` argument  → ``filter``; operators eq/neq/gt/gte/lt/lte/
-                         in_/like/isNull, combinators AND/OR/NOT
-- ``orderBy:``         → ``orderBy`` (list of {col: ASC|DESC})
-- ``limit:``/``offset:`` → ``limit``/``offset`` (Catalyst plans
-                         TakeOrderedAndProject when fused with orderBy)
-- nested many-to-one   → broadcast left join to the parent dimension;
-                         emitted as a struct column (API mode) or as
-                         flattened leaf columns (``flat=True``, the
-                         oracle-checkable mode)
-- nested one-to-many   → groupBy(parent keys) + sorted collect_list of
-                         structs (relay-style nesting)
-- ``<table>_aggregate(groupBy: [...])`` → groupBy + count/sum/avg/
-                         min/max sub-selections, flat output
-- ``$variables``       → resolved against the caller's bindings (+
-                         declared defaults) before translation
-- fragments            → named (``...f``) and inline (``... { }``)
-                         spreads expanded before translation
+- root field ``t``, scalar ``c`` → ``SELECT t0.`c` … FROM `t` t0``
+  (any table or temp view in the session catalog)
+- ``where:`` → ``WHERE`` over t0: eq/neq/gt/gte/lt/lte/like →
+  ``= <> > >= < <= LIKE :pN``; ``in_`` → ``IN (:p0, …)`` (``[]`` →
+  ``FALSE``); isNull → ``IS [NOT] NULL``; AND/OR/NOT combine
+- ``orderBy:``/``limit:``/``offset:`` → ``ORDER BY `c` ASC|DESC``/
+  ``LIMIT n``/``OFFSET n`` (offset needs orderBy)
+- nested many-to-one → ``/*+ BROADCAST */ LEFT JOIN`` to the parent,
+  selected as ``struct(...)`` of its leafs (API mode) or as the plain
+  leafs (``flat=True``, the oracle-checkable mode); a deeper
+  many-to-one level adds its leafs to the same struct
+- nested one-to-many → ``LEFT JOIN`` to a ``GROUP BY child_col``
+  subquery of ``sort_array(collect_list(struct(...)))``, selected as
+  ``coalesce(…, array())``
+- ``<t>_aggregate(groupBy: [...])`` → ``GROUP BY`` with
+  ``COUNT(1) AS count`` and ``sum_<c>``-style sum/avg/min/max aliases
 
-Scale: joins to dimension parents are explicitly ``F.broadcast`` —
-every relationship in REL_SCHEMA points at a dimension table orders of
-magnitude smaller than the fact side, so at 100 TB the plan stays
-shuffle-free for nesting; one-to-many nesting shuffles once on the
-parent key (unavoidable for the semantics). The translator itself is
-driver-side metadata work only.
+Every user value is a named parameter (``:p0``, ``:p1``, …), never
+spliced into the text. Every identifier is backquoted with inner
+backticks doubled: ``groupBy:`` names and variable-supplied keys are
+arbitrary strings. Malformed arguments raise ``GraphQLError``.
+Mutations are metastore calls, not queries, and run directly.
 """
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 try:  # public graphql-core; gated so the engine imports without it
     from graphql import GraphQLSyntaxError
@@ -130,19 +128,6 @@ def rel_schema_from_metastore(metastore) -> dict:
     return schema
 
 
-_COMPARISONS = {
-    "eq": lambda c, v: c == v,
-    "neq": lambda c, v: c != v,
-    "gt": lambda c, v: c > v,
-    "gte": lambda c, v: c >= v,
-    "lt": lambda c, v: c < v,
-    "lte": lambda c, v: c <= v,
-    "in_": lambda c, v: c.isin(v),
-    "like": lambda c, v: c.like(v),
-    "isNull": lambda c, v: c.isNull() if v else c.isNotNull(),
-}
-
-
 class GraphQLError(ValueError):
     pass
 
@@ -221,9 +206,9 @@ def _inline_fragments(
 ) -> None:
     """Replace every FragmentSpread / InlineFragment in ``sel_set``
     (recursively) with the fragment's own selections, in place, so the
-    translator walks plain fields only — dropping any selection whose
+    emitter walks plain fields only — dropping any selection whose
     @skip/@include directives exclude it (evaluated here, against the
-    resolved variables, so the emitted plan is byte-identical to the
+    resolved variables, so the emitted SQL is that of the
     hand-pruned query). Type conditions are not
     enforced — this engine has no GraphQL type system; a fragment's
     selections must name real columns/relationships of wherever it is
@@ -253,205 +238,213 @@ def _inline_fragments(
     sel_set.selections = tuple(new_sels)
 
 
-def _where_expr(cond: dict) -> Column:
-    """``where:`` object → boolean Column. Keys are ANDed; AND/OR/NOT
-    combinators recurse."""
-    terms: list[Column] = []
-    for key, val in cond.items():
-        if key == "AND":
-            terms.extend(_where_expr(c) for c in val)
-        elif key == "OR":
-            ors = [_where_expr(c) for c in val]
-            acc = ors[0]
-            for o in ors[1:]:
-                acc = acc | o
-            terms.append(acc)
-        elif key == "NOT":
-            terms.append(~_where_expr(val))
-        else:  # column → {op: value, ...}
-            if not isinstance(val, dict):
-                raise GraphQLError(f"filter for {key!r} must be an operator object")
-            for op, v in val.items():
-                if op not in _COMPARISONS:
-                    raise GraphQLError(f"unknown operator {op!r} on {key!r}")
-                terms.append(_COMPARISONS[op](F.col(key), v))
-    if not terms:
-        return F.lit(True)
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc & t
-    return acc
+_COMPARE = {"eq": "=", "neq": "<>", "gt": ">", "gte": ">=", "lt": "<", "lte": "<=", "like": "LIKE"}
 
 
-def _order_cols(order_by: list) -> list[Column]:
-    cols = []
-    for item in order_by:
-        for col, direction in item.items():
-            c = F.col(col)
-            cols.append(c.desc() if str(direction).upper() == "DESC" else c.asc())
-    return cols
+def _ident(name) -> str:
+    """Backquoted SQL identifier; a backtick inside it is doubled."""
+    if not isinstance(name, str):
+        raise GraphQLError(f"expected a column or table name, got {name!r}")
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _field_args(field, variables: dict | None = None) -> dict:
     return {a.name.value: _value(a.value, variables) for a in field.arguments or ()}
 
 
-def _read(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)
+def _selections(field) -> tuple:
+    """A field's sub-selections; only root fields take arguments."""
+    sels = field.selection_set.selections if field.selection_set else ()
+    if not sels:
+        raise GraphQLError(f"{field.name.value} selects no fields")
+    for s in sels:
+        if s.arguments:
+            raise GraphQLError(f"nested field {s.name.value!r} takes no arguments")
+    return sels
 
 
-def _translate_table_field(
-    spark: SparkSession,
-    field,
-    table: str,
-    flat: bool,
-    rel_schema: dict,
-    variables: dict | None = None,
-) -> DataFrame:
-    """One root (or nested) table field → DataFrame."""
-    df = _read(spark, table)
-    args = _field_args(field, variables)
-    if "where" in args:
-        df = df.filter(_where_expr(args["where"]))
+class _Emitter:
+    """Emits the SQL text of one root field; ``args`` collects the
+    values its ``:pN`` parameters bind. ``tN`` are its table aliases."""
 
-    rels = rel_schema.get(table, {})
-    out_cols: list[Column] = []
-    list_fields: list[tuple[str, OneToMany, object]] = []
-    for sel in field.selection_set.selections:
-        fname = sel.name.value
-        if sel.selection_set is None:  # scalar leaf
-            out_cols.append(F.col(fname))
-            continue
-        rel = rels.get(fname)
-        if rel is None:
-            raise GraphQLError(f"unknown relationship {table}.{fname}")
-        if isinstance(rel, ManyToOne):
-            parent_leafs = [
-                s.name.value for s in sel.selection_set.selections if s.selection_set is None
-            ]
-            nested_rels = [
-                s for s in sel.selection_set.selections if s.selection_set is not None
-            ]
-            parent = _read(spark, rel.parent_table)
-            # second-level many-to-one nesting (e.g. customer→nation→region)
-            for nsel in nested_rels:
-                nrel = rel_schema.get(rel.parent_table, {}).get(nsel.name.value)
-                if not isinstance(nrel, ManyToOne):
-                    raise GraphQLError(
-                        f"unsupported nesting {rel.parent_table}.{nsel.name.value}"
-                    )
-                nleafs = [
-                    s.name.value
-                    for s in nsel.selection_set.selections
-                    if s.selection_set is None
-                ]
-                gparent = _read(spark, nrel.parent_table).select(nrel.parent_col, *nleafs)
-                parent = parent.join(
-                    F.broadcast(gparent),
-                    parent[nrel.fk_col] == gparent[nrel.parent_col],
-                    "left",
-                ).drop(gparent[nrel.parent_col])
-                parent_leafs.extend(nleafs)
-            parent = parent.select(rel.parent_col, *parent_leafs)
-            # Dimension side is small by construction → broadcast: no
-            # shuffle of the (potentially 100 TB) child side.
-            df = df.join(
-                F.broadcast(parent), df[rel.fk_col] == parent[rel.parent_col], "left"
-            ).drop(parent[rel.parent_col])
-            if flat:
-                out_cols.extend(F.col(c) for c in parent_leafs)
+    def __init__(self, rel_schema: dict, variables: dict):
+        self.rel_schema, self.variables = rel_schema, variables
+        self.args: dict[str, object] = {}
+        self.aliases = map("t{}".format, itertools.count())
+
+    def param(self, value) -> str:
+        if not isinstance(value, (str, int, float, bool, type(None))):
+            raise GraphQLError(f"filter values must be scalars, got {value!r}")
+        name = f"p{len(self.args)}"
+        self.args[name] = value
+        return ":" + name
+
+    def root_args(self, field, allowed: tuple) -> dict:
+        args = _field_args(field, self.variables)
+        unknown = sorted(set(args) - set(allowed))
+        if unknown:
+            raise GraphQLError(f"{field.name.value} has no argument(s) {unknown}")
+        return args
+
+    def where(self, cond, t: str) -> str:
+        """``where:`` object → parenthesized predicate over alias ``t``.
+        Keys are ANDed; AND/OR/NOT combinators recurse."""
+        if not isinstance(cond, dict):
+            raise GraphQLError(f"a filter must be an object, got {cond!r}")
+        terms = []
+        for key, val in cond.items():
+            if key in ("AND", "OR"):
+                if not isinstance(val, list) or (key == "OR" and not val):
+                    raise GraphQLError(f"{key} takes a non-empty list of filter objects")
+                parts = [self.where(c, t) for c in val]
+                terms += parts if key == "AND" else ["(" + " OR ".join(parts) + ")"]
+            elif key == "NOT":
+                terms.append("NOT " + self.where(val, t))
+            elif not isinstance(val, dict):
+                raise GraphQLError(f"filter for {key!r} must be an operator object")
             else:
-                out_cols.append(F.struct(*[F.col(c) for c in parent_leafs]).alias(fname))
-        else:  # OneToMany → relay-style nested list
-            list_fields.append((fname, rel, sel))
+                terms += [self.compare(f"{t}.{_ident(key)}", key, op, v) for op, v in val.items()]
+        return "(" + " AND ".join(terms) + ")" if terms else "TRUE"
 
-    if not list_fields:
-        out = df.select(*out_cols)
-    else:
-        # One-to-many nesting: one shuffle on the parent key, then the
-        # children arrive as a deterministic (sorted) array of structs.
-        out = df
-        scalar_names = [c for c in out.columns]
-        for fname, rel, sel in list_fields:
-            leafs = [
-                s.name.value for s in sel.selection_set.selections if s.selection_set is None
-            ]
-            child = _read(spark, rel.child_table).select(rel.child_col, *leafs)
-            child_agg = (
-                child.groupBy(rel.child_col)
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct(*[F.col(c) for c in leafs]))
-                    ).alias(fname)
-                )
-            )
-            list_type = child_agg.schema[fname].dataType
-            out = out.join(
-                child_agg, out[rel.parent_col] == child_agg[rel.child_col], "left"
-            ).drop(child_agg[rel.child_col])
-            # A parent with zero children misses the join entirely →
-            # NULL array. GraphQL list semantics (and SQL's
-            # list(...) FILTER idiom) say empty list, not null.
-            out = out.withColumn(
-                fname, F.coalesce(F.col(fname), F.array().cast(list_type))
-            )
-        keep = [c for c in out_cols] + [F.col(f) for f, _, _ in list_fields]
-        out = out.select(*keep)
+    def compare(self, col: str, key: str, op: str, v) -> str:
+        if op in _COMPARE:
+            return f"{col} {_COMPARE[op]} {self.param(v)}"
+        if op == "in_":  # a single value coerces to a one-item list
+            vals = v if isinstance(v, list) else [v]
+            # Spark's parser rejects IN (); no value matches an empty list
+            return f"{col} IN ({', '.join(map(self.param, vals))})" if vals else "FALSE"
+        if op == "isNull":
+            if not isinstance(v, bool):
+                raise GraphQLError(f"isNull on {key!r} takes a boolean")
+            return f"{col} IS {'' if v else 'NOT '}NULL"
+        raise GraphQLError(f"unknown operator {op!r} on {key!r}")
 
-    if "orderBy" in args:
-        out = out.orderBy(*_order_cols(args["orderBy"]))
-    if "offset" in args:
-        out = out.offset(int(args["offset"]))
-    if "limit" in args:
-        out = out.limit(int(args["limit"]))
-    return out
+    def filter_and_tail(self, sql: str, args: dict, t: str, group: list, sort: dict) -> str:
+        """``sql`` + WHERE, GROUP BY, ORDER BY, LIMIT and OFFSET. An
+        ``orderBy`` name is the expression ``sort`` maps it to, else a
+        column of the root table ``t``."""
+        if "where" in args:
+            sql += " WHERE " + self.where(args["where"], t)
+        if group:
+            sql += " GROUP BY " + ", ".join(group)
+        order = args.get("orderBy", [])
+        if not isinstance(order, list) or not all(isinstance(o, dict) for o in order):
+            raise GraphQLError("orderBy takes a list of {column: ASC|DESC} objects")
+        keys = []
+        for col, direction in (kv for o in order for kv in o.items()):
+            if not isinstance(direction, str) or direction.upper() not in ("ASC", "DESC"):
+                raise GraphQLError(f"orderBy direction of {col!r} must be ASC or DESC")
+            expr = sort.get(col) or f"{t}.{_ident(col)}"
+            keys.append(f"{expr} {direction.upper()}")
+        if keys:
+            sql += " ORDER BY " + ", ".join(keys)
+        for arg in ("limit", "offset"):
+            n = args.get(arg, 0)
+            if type(n) is not int or n < 0:
+                raise GraphQLError(f"{arg} must be a non-negative integer, got {n!r}")
+            if arg in args:
+                sql += f" {arg.upper()} {n}"
+        if args.get("offset") and not keys:
+            # the rule POST /query applies to its own offset
+            raise GraphQLError("offset requires orderBy for a stable page")
+        return sql
 
+    def table(self, field, table: str, flat: bool) -> str:
+        """A table root field → SELECT over it and its relationships."""
+        args = self.root_args(field, ("where", "orderBy", "limit", "offset"))
+        t = next(self.aliases)
+        cols, lists, joins, broadcast = [], [], [], []
+        sort = {}  # orderBy names that are not root columns
+        for sel in _selections(field):
+            name = sel.name.value
+            if sel.selection_set is None:  # scalar leaf
+                cols.append(f"{t}.{_ident(name)}")
+                continue
+            rel = self.rel_schema.get(table, {}).get(name)
+            if rel is None:
+                raise GraphQLError(f"unknown relationship {table}.{name}")
+            sort[name] = _ident(name)
+            if isinstance(rel, ManyToOne):
+                leafs = self.parent(t, rel, sel, joins, broadcast)
+                sort.update(leafs)
+                exprs = list(leafs.values())
+                cols += exprs if flat else [f"struct({', '.join(exprs)}) AS {_ident(name)}"]
+            else:  # OneToMany → relay-style nested list, after the scalars
+                lists.append(self.children(t, name, rel, sel, joins))
+        # Every REL_SCHEMA parent is a dimension table, orders of
+        # magnitude smaller than the child → broadcast: no shuffle of
+        # the (potentially 100 TB) child side.
+        hint = f"/*+ BROADCAST({', '.join(broadcast)}) */ " if broadcast else ""
+        sql = f"SELECT {hint}{', '.join(cols + lists)} FROM {_ident(table)} {t}"
+        return self.filter_and_tail(" ".join([sql, *joins]), args, t, [], sort)
 
-_AGG_FNS = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
+    def parent(self, child: str, rel: ManyToOne, sel, joins: list, broadcast: list) -> dict:
+        """LEFT JOIN the parent of a many-to-one field; returns {name:
+        column} of its selected leafs, then of its own many-to-one
+        fields' leafs."""
+        t = next(self.aliases)
+        broadcast.append(t)
+        joins.append(
+            f"LEFT JOIN {_ident(rel.parent_table)} {t} "
+            f"ON {child}.{_ident(rel.fk_col)} = {t}.{_ident(rel.parent_col)}"
+        )
+        sels = _selections(sel)
+        leafs = {s.name.value: f"{t}.{_ident(s.name.value)}"
+                 for s in sels if s.selection_set is None}
+        for s in [s for s in sels if s.selection_set is not None]:
+            nrel = self.rel_schema.get(rel.parent_table, {}).get(s.name.value)
+            if not isinstance(nrel, ManyToOne):
+                raise GraphQLError(f"unsupported nesting {rel.parent_table}.{s.name.value}")
+            leafs.update(self.parent(t, nrel, s, joins, broadcast))
+        return leafs
 
+    def children(self, parent: str, name: str, rel: OneToMany, sel, joins: list) -> str:
+        """LEFT JOIN a one-to-many field's children, grouped on the
+        parent key (one shuffle, which the semantics need) into a sorted
+        array of structs; a parent with no children gets ``[]``, not
+        NULL."""
+        t = next(self.aliases)
+        sels = _selections(sel)
+        nested = [s.name.value for s in sels if s.selection_set is not None]
+        if nested:
+            raise GraphQLError(f"unsupported nesting {rel.child_table}.{nested[0]}")
+        leafs = [_ident(s.name.value) for s in sels]
+        key, out = _ident(rel.child_col), _ident(name)
+        joins.append(
+            f"LEFT JOIN (SELECT {key}, sort_array(collect_list(struct({', '.join(leafs)})))"
+            f" AS {out} FROM {_ident(rel.child_table)} GROUP BY {key}) {t}"
+            f" ON {parent}.{_ident(rel.parent_col)} = {t}.{key}"
+        )
+        return f"coalesce({t}.{out}, array()) AS {out}"
 
-def _translate_aggregate_field(
-    spark: SparkSession, field, table: str, variables: dict | None = None
-) -> DataFrame:
-    """``<table>_aggregate(groupBy: [...])`` → groupBy + aggregates.
-
-    Catalyst compiles this to the standard partial/final hash aggregate
-    — map-side combine first, so the shuffle carries one row per
-    (partition, group), not per input row.
-    """
-    df = _read(spark, table)
-    args = _field_args(field, variables)
-    if "where" in args:
-        df = df.filter(_where_expr(args["where"]))
-    group_cols = [str(c) for c in args.get("groupBy", [])]
-
-    aggs: list[Column] = []
-    for sel in field.selection_set.selections:
-        fname = sel.name.value
-        if fname == "count":
-            aggs.append(F.count(F.lit(1)).alias("count"))
-        elif fname in _AGG_FNS:
-            if sel.selection_set is None:
-                raise GraphQLError(f"{fname} needs a column selection set")
-            for leaf in sel.selection_set.selections:
-                col = leaf.name.value
-                aggs.append(_AGG_FNS[fname](F.col(col)).alias(f"{fname}_{col}"))
-        elif sel.selection_set is None and fname in group_cols:
-            continue  # group key re-selected — always emitted
-        else:
-            raise GraphQLError(f"unsupported aggregate selection {fname!r}")
-    if not aggs:
-        raise GraphQLError("aggregate field selects no aggregates")
-
-    if group_cols:
-        out = df.groupBy(*group_cols).agg(*aggs)
-    else:
-        out = df.agg(*aggs)
-    if "orderBy" in args:
-        out = out.orderBy(*_order_cols(args["orderBy"]))
-    if "limit" in args:
-        out = out.limit(int(args["limit"]))
-    return out
+    def aggregate(self, field, table: str) -> str:
+        """``<table>_aggregate(groupBy: [...])`` → GROUP BY with
+        count/sum/avg/min/max. Catalyst plans the partial/final hash
+        aggregate, so the shuffle carries one row per (partition,
+        group)."""
+        args = self.root_args(field, ("where", "groupBy", "orderBy", "limit", "offset"))
+        t = next(self.aliases)
+        group = args.get("groupBy", [])
+        if not isinstance(group, list):
+            raise GraphQLError("groupBy takes a list of column names")
+        keys = [f"{t}.{_ident(c)}" for c in group]
+        aggs = {}  # output name → aggregate
+        for sel in _selections(field):
+            name = sel.name.value
+            if name == "count" and sel.selection_set is None:
+                aggs["count"] = "COUNT(1)"
+            elif name in ("sum", "avg", "min", "max") and sel.selection_set is not None:
+                for c in (leaf.name.value for leaf in _selections(sel)):
+                    aggs[f"{name}_{c}"] = f"{name.upper()}({t}.{_ident(c)})"
+            elif sel.selection_set is None and name in group:
+                continue  # group key re-selected — always emitted
+            else:
+                raise GraphQLError(f"unsupported aggregate selection {name!r}")
+        if not aggs:
+            raise GraphQLError("aggregate field selects no aggregates")
+        outs = keys + [f"{e} AS {_ident(n)}" for n, e in aggs.items()]
+        sql = f"SELECT {', '.join(outs)} FROM {_ident(table)} {t}"
+        return self.filter_and_tail(sql, args, t, keys, {n: _ident(n) for n in aggs})
 
 
 def _translate_mutation(
@@ -568,6 +561,66 @@ def _translate_mutation(
     return spark.createDataFrame([tuple(result[s] for s in sels)], schema)
 
 
+def _parse(query_text: str, variables: dict | None) -> tuple:
+    """Parse → (operation kind, its one root field, resolved
+    variables). A query's fragments and @skip/@include are resolved
+    on the AST here."""
+    if not HAVE_GRAPHQL:  # pragma: no cover
+        raise GraphQLError("graphql-core not available in this environment")
+    try:
+        doc = gql_parse(query_text)
+    except GraphQLSyntaxError as e:
+        raise GraphQLError(str(e)) from e
+    ops = [d for d in doc.definitions if isinstance(d, gql_ast.OperationDefinitionNode)]
+    if len(ops) != 1 or ops[0].operation.value not in ("query", "mutation"):
+        raise GraphQLError("expected exactly one query or mutation operation")
+    op, kind = ops[0], ops[0].operation.value
+    resolved_vars = _resolve_variables(op, variables)
+    if kind == "query":
+        frags = [d for d in doc.definitions if isinstance(d, gql_ast.FragmentDefinitionNode)]
+        _inline_fragments(op.selection_set, {d.name.value: d for d in frags}, resolved_vars)
+    roots = op.selection_set.selections
+    if len(roots) != 1:
+        raise GraphQLError(f"expected exactly one {kind} root field")
+    return kind, roots[0], resolved_vars
+
+
+def _sql(root, flat: bool, rel_schema: dict | None, variables: dict) -> tuple[str, dict]:
+    emit = _Emitter(REL_SCHEMA if rel_schema is None else rel_schema, variables)
+    name = root.name.value
+    if name.endswith("_aggregate"):
+        return emit.aggregate(root, name[: -len("_aggregate")]), emit.args
+    return emit.table(root, name, flat), emit.args
+
+
+def to_sql(
+    query_text: str,
+    flat: bool = False,
+    rel_schema: dict | None = None,
+    variables: dict | None = None,
+) -> tuple[str, dict]:
+    """GraphQL query document (single root field) → ``(sql, args)``
+    for ``spark.sql(sql, args=args)``; ``args`` holds the user values.
+
+    ``flat=True`` flattens many-to-one nesting into leaf columns (the
+    shape plain SQL joins produce — used by the oracle-checked parity
+    queries); default emits nested structs/arrays (the API shape).
+    The root field may name ANY table in the session catalog;
+    relationship fields resolve against ``rel_schema`` (the fixture
+    star schema by default; ``rel_schema_from_metastore(ms)`` adds
+    registered datasets' declared FK edges).
+
+    ``variables`` binds the operation's declared ``$variables``;
+    declared defaults fill omitted names. The wire form and the
+    equivalent inline query give the same SQL text and equal args,
+    hence the byte-identical plan.
+    """
+    kind, root, resolved_vars = _parse(query_text, variables)
+    if kind == "mutation":
+        raise GraphQLError("a mutation is a metastore call with no SQL form; use translate")
+    return _sql(root, flat, rel_schema, resolved_vars)
+
+
 def translate(
     spark: SparkSession,
     query_text: str,
@@ -576,66 +629,12 @@ def translate(
     variables: dict | None = None,
     metastore=None,
 ) -> DataFrame:
-    """GraphQL query document → DataFrame (single root field).
-
-    ``flat=True`` flattens many-to-one nesting into leaf columns (the
-    shape plain SQL joins produce — used by the oracle-checked parity
-    queries); default emits nested structs/arrays (the API shape).
-
-    The root field may name ANY table registered in the session catalog
-    (scalar selections, where/orderBy/limit and ``_aggregate`` need no
-    metadata). Relationship fields resolve against ``rel_schema`` —
-    defaults to the fixture star schema; pass
-    ``rel_schema_from_metastore(ms)`` to nest user-registered datasets
-    along their declared FK edges.
-
-    ``variables`` binds the operation's declared ``$variables`` —
-    the wire shape every real GraphQL client library sends
-    (query text + separate JSON variables). Defaults declared in the
-    operation fill omitted names; a missing non-null variable or an
-    undeclared provided name is an error. Named fragments
-    (``fragment f on T { ... }`` + ``...f``) and inline fragments are
-    expanded before translation, so fragment-factored clients (Relay,
-    Apollo codegen) work unchanged. Variable substitution and fragment
-    inlining are driver-side text/AST work — the emitted plan is
-    byte-identical to the equivalent inline query, so Catalyst sees no
-    difference at any scale.
-    """
-    if not HAVE_GRAPHQL:  # pragma: no cover
-        raise GraphQLError("graphql-core not available in this environment")
-    if rel_schema is None:
-        rel_schema = REL_SCHEMA
-    try:
-        doc = gql_parse(query_text)
-    except GraphQLSyntaxError as e:
-        raise GraphQLError(str(e)) from e
-    ops = [d for d in doc.definitions if isinstance(d, gql_ast.OperationDefinitionNode)]
-    if len(ops) != 1 or ops[0].operation.value not in ("query", "mutation"):
-        raise GraphQLError("expected exactly one query or mutation operation")
-    if ops[0].operation.value == "mutation":
-        roots_m = ops[0].selection_set.selections
-        if len(roots_m) != 1:
-            raise GraphQLError("expected exactly one mutation root field")
-        return _translate_mutation(
-            spark, roots_m[0], _resolve_variables(ops[0], variables),
-            metastore,
-        )
-    fragments = {
-        d.name.value: d
-        for d in doc.definitions
-        if isinstance(d, gql_ast.FragmentDefinitionNode)
-    }
-    resolved_vars = _resolve_variables(ops[0], variables)
-    _inline_fragments(ops[0].selection_set, fragments, resolved_vars)
-    roots = ops[0].selection_set.selections
-    if len(roots) != 1:
-        raise GraphQLError("expected exactly one root field")
-    root = roots[0]
-    name = root.name.value
-    if name.endswith("_aggregate"):
-        return _translate_aggregate_field(
-            spark, root, name[: -len("_aggregate")], resolved_vars
-        )
-    return _translate_table_field(
-        spark, root, name, flat, rel_schema, resolved_vars
-    )
+    """GraphQL document → DataFrame. A query runs as ``spark.sql`` over
+    ``to_sql``'s text and args (see ``to_sql`` for ``flat``,
+    ``rel_schema`` and ``variables``); a mutation runs its metastore
+    call against ``metastore``."""
+    kind, root, resolved_vars = _parse(query_text, variables)
+    if kind == "mutation":
+        return _translate_mutation(spark, root, resolved_vars, metastore)
+    sql, args = _sql(root, flat, rel_schema, resolved_vars)
+    return spark.sql(sql, args=args)

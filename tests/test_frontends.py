@@ -43,6 +43,20 @@ def test_graphql_nested_struct_shape(fixtures):
     assert rows[0]["nation"].__fields__ == ["n_name"]
 
 
+def test_graphql_order_by_nested_leaf(fixtures):
+    """orderBy may name a leaf of a nested many-to-one field even when
+    the leaf is inside a struct and not an output column."""
+    from karna_spark.frontends.graphql import translate
+
+    rows = translate(
+        fixtures,
+        "query { customer(orderBy: [{n_name: DESC}, {c_custkey: ASC}]) "
+        "{ c_custkey nation { n_name } } }",
+    ).collect()
+    keys = [(r["nation"]["n_name"], -r["c_custkey"]) for r in rows]
+    assert len(rows) > 1 and keys == sorted(keys, reverse=True)
+
+
 def test_graphql_one_to_many_list(fixtures):
     from karna_spark.frontends.graphql import translate
 
@@ -245,6 +259,79 @@ def test_graphql_fragment_errors(fixtures):
     """
     with pytest.raises(GraphQLError, match="nesting too deep"):
         translate(fixtures, cyc)
+
+
+# ------------------------------------------------------- SQL emission
+def test_graphql_wire_and_inline_emit_the_same_sql():
+    """Variables and fragments resolve on the AST: the wire form and the
+    inline query compile to the same SQL text and equal args, which is
+    what makes their plans identical."""
+    from karna_spark.frontends.graphql import to_sql
+
+    wire = to_sql(_GQL_WIRE, flat=True, variables={"minTotal": 150000, "status": "O"})
+    inline = to_sql(_GQL_INLINE, flat=True)
+    assert wire[0] == inline[0]
+    assert wire[1] == inline[1] == {"p0": 150000, "p1": "O"}
+    assert [type(v) for v in wire[1].values()] == [int, str]
+    # user values are bound, never spliced into the text
+    assert "150000" not in wire[0] and "'O'" not in wire[0]
+
+
+_INJECTIONS = ["it's", "a`b", "x -- y", "back\\slash", "q' OR '1'='1", "all'`--\\"]
+
+
+@pytest.mark.parametrize("value", _INJECTIONS)
+def test_graphql_string_argument_stays_data(spark, value):
+    """A quote, backtick, comment marker or backslash inside a string
+    argument is data: the rows equal a DataFrame filter on that value,
+    whether the value comes as a literal or as a variable."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from karna_spark.frontends.graphql import translate
+
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate([*_INJECTIONS, "plain"])], "id int, s string"
+    )
+    df.createOrReplaceTempView("gql_strings")
+    try:
+        want = df.filter(F.col("s") == value).collect()
+        assert len(want) == 1
+        literal = translate(
+            spark,
+            f"query {{ gql_strings(where: {{s: {{eq: {json.dumps(value)}}}}}) {{ id s }} }}",
+        ).collect()
+        bound = translate(
+            spark,
+            "query Q($v: String!) { gql_strings(where: {s: {eq: $v}}) { id s } }",
+            variables={"v": value},
+        ).collect()
+        assert literal == bound == want
+    finally:
+        spark.catalog.dropTempView("gql_strings")
+
+
+def test_graphql_backtick_group_name_is_one_identifier(fixtures):
+    """A ``groupBy:`` name is a user string: a backtick in it is doubled,
+    so the whole name stays one (unknown) column and cannot close the
+    identifier to splice SQL."""
+    from pyspark.errors import AnalysisException
+
+    from karna_spark.frontends.graphql import to_sql, translate
+
+    q = 'query { part_aggregate(groupBy: ["p_brand`, p_size"]) { count } }'
+    assert "t0.`p_brand``, p_size`" in to_sql(q)[0]
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        translate(fixtures, q)
+
+
+def test_graphql_empty_in_list_matches_nothing(fixtures):
+    from karna_spark.frontends.graphql import to_sql, translate
+
+    q = "query { part(where: {p_size: {in_: []}}) { p_partkey } }"
+    assert "FALSE" in to_sql(q)[0]
+    assert translate(fixtures, q).count() == 0
 
 
 # ----------------------------------------------------------------------- NL

@@ -206,6 +206,44 @@ def test_errors_are_json(server):
     assert status == 400 and "foreign_keys" in body["error"]
 
 
+@pytest.mark.parametrize(
+    "query, error",
+    [
+        ("query { part(where: {OR: []}) { p_partkey } }",
+         "GraphQLError: OR takes a non-empty list"),
+        ("query { part(where: {NOT: [{p_size: {eq: 1}}]}) { p_partkey } }",
+         "GraphQLError: a filter must be an object"),
+        ("query { part(orderBy: {p_size: DESC}) { p_partkey } }",
+         "GraphQLError: orderBy takes a list"),
+        ("query { part(orderBy: [{p_size: SIDEWAYS}]) { p_partkey } }",
+         "GraphQLError: orderBy direction"),
+        ('query { part(limit: "abc") { p_partkey } }',
+         "GraphQLError: limit must be a non-negative integer"),
+        ("query { part(limit: -1) { p_partkey } }",
+         "GraphQLError: limit must be a non-negative integer"),
+        ("query { part(offset: 5) { p_partkey } }",
+         "GraphQLError: offset requires orderBy"),
+        ("query { part(where: {p_size: {eq: [1, 2]}}) { p_partkey } }",
+         "GraphQLError: filter values must be scalars"),
+        ("query { part(where: {p_size: {isNull: 1}}) { p_partkey } }",
+         "GraphQLError: isNull on 'p_size' takes a boolean"),
+        ("query { part(having: 1) { p_partkey } }",
+         "GraphQLError: part has no argument"),
+        ("query { part(where: {no_such_column: {eq: 1}}) { p_partkey } }",
+         "AnalysisException: [UNRESOLVED_COLUMN"),
+        ("query { part { p_partkey no_such_column } }",
+         "AnalysisException: [UNRESOLVED_COLUMN"),
+        ('query { part_aggregate(groupBy: ["p_brand`"]) { count } }',
+         "AnalysisException: [UNRESOLVED_COLUMN"),
+    ],
+)
+def test_malformed_graphql_is_400(server, query, error):
+    """A malformed GraphQL argument or an unknown column is the client's
+    fault: 400 naming the error, not 500 "engine fault"."""
+    status, body = _post(server, "/query", {"language": "graphql", "query": query})
+    assert status == 400 and body["error"].startswith(error), body
+
+
 def test_engine_fault_is_500(server, spark, tmp_path):
     """A failure that is not the request's fault — here a registered
     dataset whose file was deleted after registration — answers 500,

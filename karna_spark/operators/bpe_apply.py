@@ -66,7 +66,7 @@ def bpe_encode(
     Token COUNTING at 100 TB is therefore the same cost as reading
     the text once."""
     # drop empty fragments so whitespace-only text encodes to zero
-    # words, matching str.split() in the pure-Python twin
+    # words, matching split_words in the pure-Python twin
     words = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"),
         lambda w: w != F.lit(""),
@@ -92,18 +92,20 @@ def reference_bpe_encode(
     """Pure-Python twin of :func:`bpe_encode` for property tests:
     returns (n_words, n_tokens, encoded) for one document.
 
-    Scope note (applies to both sides): word splitting is ASCII
-    ``\\s+`` (Java and RE2 agree; Python's ``str.split()`` would also
-    split U+2028-class Unicode whitespace, so the twin uses the regex
-    form), and symbol splitting is per UTF-16 code unit in Spark —
-    identical to per-codepoint for the Basic Multilingual Plane, but
-    an astral character (emoji) splits into two surrogate symbols.
+    Scope note (applies to both sides): word splitting is Java's ASCII
+    ``\\s+`` (``[ \\t\\n\\x0b\\f\\r]+``). Python's ``str.split()`` and
+    ``re``'s ``\\s`` on a ``str`` would also split NBSP, U+001C-U+001F,
+    U+3000 and other Unicode whitespace, so the twin splits with
+    :func:`~karna_spark.operators.text.split_words`. Symbol splitting
+    is per UTF-16 code unit in Spark — identical to per-codepoint for
+    the Basic Multilingual Plane, but an astral character (emoji)
+    splits into two surrogate symbols.
     Corpora with astral text should pre-normalize or treat such words
     as opaque; the certification fixture and the property alphabet
     stay within the BMP."""
-    import re
+    from karna_spark.operators.text import split_words
 
-    words = [w for w in re.split(r"\s+", text.strip()) if w]
+    words = split_words(text)
     out_words = []
     n_tokens = 0
     for w in words:

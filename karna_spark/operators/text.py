@@ -1,10 +1,14 @@
 """Text-analysis operators for training-data pipelines (north-star
 "text analysis": language-ID, quality scoring, token counting, document
 fingerprinting). All pure column expressions — per-document work is a
-narrow map over the scan, no shuffle, no Python.
+narrow map over the scan, no shuffle, no Python — plus
+:func:`split_words`, the Python twin of :func:`words` that reference
+implementations split with.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,6 +34,18 @@ TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def words(text: Column) -> Column:
     return F.split(text, r"\s+")
+
+
+# Java's ``\s`` (what :func:`words` splits on) is ASCII whitespace only.
+# Python's ``str.split()`` and ``re``'s ``\s`` on a ``str`` also split
+# on NBSP, U+001C-U+001F, U+3000 and other Unicode spaces.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def split_words(text: str) -> list[str]:
+    """Pure-Python twin of :func:`words` with empty pieces dropped: the
+    words the engine's ``\\s+`` split yields, for reference tokenizers."""
+    return [w for w in _JAVA_WS.split(text) if w]
 
 
 def marker_hits(text: Column, markers: list[str]) -> Column:

@@ -17,34 +17,38 @@ pipeline should:
   certified F2/F26 recipe: one transcendental per DISTINCT piece, then
   integer math only, so cross-engine float noise cannot flip a hash).
 
-- **Viterbi** (encode half): per DISTINCT word — the zipf-bounded
-  frame, not the corpus — a 16-level unrolled DP computes the best
-  segmentation. dp[i] packs (total score, piece count) into ONE BIGINT
-  as ``128*score_e6 - pieces``: maximizing the packed value maximizes
-  score and, among ties, minimizes piece count, and the transition is
-  linear (``dp[j] + 128*s(piece) - 1``), so the whole DP is integer
-  adds and ``greatest()`` over ≤4 predecessors. Words are truncated to
-  16 chars (pieces ≤ 16 < 128 keeps the packing injective; the fixture
-  corpus maxes at 8). The vocab (bounded: 256 chars + top_multi) rides
-  the plan as one constant-folded map literal — a broadcast variable on
-  a real cluster.
+- **Viterbi** (encode half): :func:`segment` is one integer DP per
+  DISTINCT word — the zipf-bounded frame, not the corpus. dp[i] packs
+  (total score, piece count) into one integer as ``128*score_e6 -
+  pieces``: maximizing the packed value maximizes score and, among
+  ties, minimizes piece count, and the transition is linear
+  (``dp[j] + 128*s(piece) - 1``). Words are truncated to 16 chars
+  (pieces ≤ 16 < 128 keeps the packing injective; the fixture corpus
+  maxes at 8). It runs in a narrow ``mapInArrow`` map over the
+  distinct-word frame, with the collected piece→score dict (bounded:
+  the corpus's chars + top_multi) bound to the map body by
+  ``functools.partial``, as ``learn_bpe`` binds its arguments.
 
 Scale shape: vocab build is two aggregates over the distinct-word
-frame; encode is a map-side DP over distinct words followed by one
-hash join back to occurrences and the per-doc aggregate. Nothing is
-corpus-quadratic, no Python anywhere, and the corpus-scale pass never
-computes a transcendental. Reference surface: elliot14A/karna
-README.md:2 (the declared analytics verbs' tokenizer-adjacent text
-path); algorithm: Kudo 2018 (public), SentencePiece docs.
+frame; encode is the Arrow map over distinct words followed by one hash
+join back to occurrences and the per-doc aggregate. Nothing is
+corpus-quadratic, the words are independent (no single-partition step),
+and the corpus-scale pass never computes a transcendental. Reference
+surface: elliot14A/karna README.md:2 (the declared analytics verbs'
+tokenizer-adjacent text path); algorithm: Kudo 2018 (public),
+SentencePiece docs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+from collections import Counter
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from karna_spark import intermediates
-from karna_spark.operators.text import words
+from karna_spark.operators.text import split_words, words
 
 MAX_PIECE = 4
 MAX_WORD = 16
@@ -108,47 +112,161 @@ def unigram_vocab_scores(
     )
 
 
-def viterbi_word_frame(
-    occ: DataFrame, vocab: dict[str, int]
-) -> DataFrame:
-    """(w, n_pieces, score_e6): best unigram segmentation per distinct
-    word via the packed 16-level DP. ``vocab`` is the collected
-    piece→score map (bounded; constant-folded into the plan).
+# The argmax predecessor rides inside the DP value: each candidate is
+# packed as ((cand + _CHOICE_OFF) * 32 + j). Candidate differences are
+# ≥ 1, so the ×32 shift preserves their order exactly, and ties break to
+# the LARGER j (the shorter final piece), as in the DuckDB oracle.
+_CHOICE_OFF = 2 * 10**15
 
-    The map literal is hoisted into ONE column (``_vm``) instead of
-    being inlined at each of the 16 levels × ≤4 candidates: the
-    ~750-entry map is a ~1500-node expression tree, and every
-    ``withColumn`` EAGERLY re-analyzes the whole accumulated plan, so
-    64 inlined copies made Catalyst re-walk ~100k shared-subtree nodes
-    per level (measured r13: the DP's cost was driver-side analysis,
-    not execution). As a single attribute reference the analyzer
-    visits it once per pass; the optimizer still constant-folds it to
-    one map literal, so the executed plan is unchanged."""
-    m = F.map_from_arrays(
-        F.lit(list(vocab.keys())), F.lit([int(v) for v in vocab.values()])
-    )
-    df = occ.select("w").distinct().withColumn("_vm", m)
-    v: dict[int, Column] = {0: F.lit(0).cast("long")}
-    for i in range(1, MAX_WORD + 1):
-        cands = []
+SEGMENT_SCHEMA = (
+    "w string, n_pieces bigint, score_e6 bigint, pieces array<string>"
+)
+
+
+def _half_up(v: float) -> int:
+    """Round half away from zero, as Spark's and DuckDB's round() do."""
+    return int(math.copysign(math.floor(abs(v) + 0.5), v))
+
+
+def segment(w: str, score: dict[str, int]) -> tuple[int, int, list[str]]:
+    """Best segmentation of ``w`` under the piece→score map ``score``:
+    ``(n_pieces, score_e6, pieces)``.
+
+    The choice-packed DP: dp[i] is the best packed value of ``w[:i]``;
+    the candidate from j is ``dp[j] + 128*s(w[j:i]) - 1``, or
+    ``_SENTINEL`` when ``w[j:i]`` is not a piece. The final value
+    ``128*score_e6 - n_pieces`` unpacks to the two totals; the argmax
+    predecessors spell the pieces."""
+    n = len(w)
+    dp = [0] * (n + 1)
+    back = [0] * (n + 1)
+    for i in range(1, n + 1):
+        packed = []
         for j in range(max(0, i - MAX_PIECE), i):
-            s = F.element_at(
-                F.col("_vm"), F.col("w").substr(F.lit(j + 1), F.lit(i - j))
-            )
-            cands.append(
-                F.coalesce(v[j] + s * 128 - 1, F.lit(_SENTINEL))
-            )
-        best = F.greatest(*cands) if len(cands) > 1 else cands[0]
-        df = df.withColumn(
-            f"v{i}", F.when(F.length("w") >= i, best).otherwise(v[i - 1])
+            s = score.get(w[j:i])
+            cand = _SENTINEL if s is None else dp[j] + s * 128 - 1
+            packed.append((cand + _CHOICE_OFF) * 32 + j)
+        q, back[i] = divmod(max(packed), 32)
+        dp[i] = q - _CHOICE_OFF
+    pieces = []
+    i = n
+    while i > 0:
+        pieces.append(w[back[i] : i])
+        i = back[i]
+    pieces.reverse()
+    neg_score, n_pieces = divmod(-dp[n], 128)
+    return n_pieces, -neg_score, pieces
+
+
+def _segment_task(batches, score: dict[str, int]):
+    """``mapInArrow`` body: :func:`segment` of every word of the batch."""
+    import pyarrow as pa
+
+    for rb in batches:
+        segs = [segment(w, score) for w in rb.column(0).to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [
+                rb.column(0),
+                pa.array([g[0] for g in segs], pa.int64()),
+                pa.array([g[1] for g in segs], pa.int64()),
+                pa.array([g[2] for g in segs], pa.list_(pa.string())),
+            ],
+            names=["w", "n_pieces", "score_e6", "pieces"],
         )
-        v[i] = F.col(f"v{i}")
-    t = -v[MAX_WORD]
-    return df.select(
-        "w",
-        (t % 128).alias("n_pieces"),
-        (-((t - t % 128) / 128)).cast("long").alias("score_e6"),
+
+
+def segment_words(occ: DataFrame, score: dict[str, int]) -> DataFrame:
+    """(w, n_pieces, score_e6, pieces) for every distinct word of
+    ``occ``: one narrow Arrow map over the distinct-word frame."""
+    return occ.select("w").distinct().mapInArrow(
+        partial(_segment_task, score=score), SEGMENT_SCHEMA
     )
+
+
+def _doc_totals(
+    occ: DataFrame, score: dict[str, int], id_col: str, n_col: str, s_col: str
+) -> DataFrame:
+    """The corpus pass: occurrences ⋈ segmented distinct words → per-doc
+    piece count ``n_col`` and micro-nat score ``s_col``."""
+    wd = segment_words(occ, score).select("w", "n_pieces", "score_e6")
+    return (
+        occ.join(wd, "w")
+        .groupBy(id_col)
+        .agg(
+            F.sum("n_pieces").cast("long").alias(n_col),
+            F.sum("score_e6").cast("long").alias(s_col),
+        )
+    )
+
+
+def _seed_vocab(occ: DataFrame, top_multi: int) -> dict[str, int]:
+    """The collected piece→score map of :func:`unigram_vocab_scores`."""
+    rows = unigram_vocab_scores(occ, top_multi).collect()
+    return {r["piece"]: r["s"] for r in rows}
+
+
+def unigram_tokenize_docs(
+    docs: DataFrame, id_col: str, text_col: str, top_multi: int = TOP_MULTI
+) -> DataFrame:
+    """Per-doc unigram tokenization stats: ``(id_col, n_tokens,
+    score_e6)`` — total Viterbi piece count and total best-path log
+    probability in micro-nats. Two bounded driver jobs (vocab collect)
+    then one corpus pass + distinct-word join + per-doc aggregate."""
+    occ = _word_occurrences(docs, id_col, text_col)
+    vocab = _seed_vocab(occ, top_multi)
+    return _doc_totals(occ, vocab, id_col, "n_tokens", "score_e6")
+
+
+# ------------------------------------------------- hard-EM round
+# One Viterbi-EM (hard-EM) training round — the M-step of Kudo 2018
+# with the E-step's expectations replaced by the argmax segmentation
+# (the documented Viterbi-EM variant): re-count pieces along each
+# word's best path, re-score ln(count/total), PRUNE multi-char pieces
+# the paths never used (single chars keep a floor of 1 — the coverage
+# guarantee), and re-encode. Everything stays integer-exact; the argmax
+# path is the one :func:`segment` backtracks.
+
+
+def em_rescored_vocab(
+    occ: DataFrame, vocab1: dict[str, int]
+) -> dict[str, int]:
+    """M-step: piece usage counts along every word's argmax path
+    (weighted by word frequency) → pruned, re-scored vocab. Multi-char
+    pieces with zero path usage drop out; single chars floor at 1."""
+    wf = occ.groupBy("w").agg(F.count("*").alias("cnt"))
+    counts = (
+        segment_words(occ, vocab1)
+        .join(wf, "w")
+        .select(F.explode("pieces").alias("piece"), "cnt")
+        .groupBy("piece")
+        .agg(F.sum("cnt").cast("long").alias("c2"))
+        .collect()
+    )
+    c2 = {r["piece"]: r["c2"] for r in counts}
+    vocab2_counts: dict[str, int] = {}
+    for p in vocab1:
+        c = c2.get(p, 0)
+        if len(p) == 1:
+            vocab2_counts[p] = max(c, 1)
+        elif c >= 1:
+            vocab2_counts[p] = c
+    total = sum(vocab2_counts.values())
+    return {
+        p: _half_up(math.log(c / total) * 1000000)
+        for p, c in vocab2_counts.items()
+    }
+
+
+def unigram_em_tokenize_docs(
+    docs: DataFrame, id_col: str, text_col: str, top_multi: int = TOP_MULTI
+) -> DataFrame:
+    """Per-doc stats after ONE hard-EM round: seed vocab → argmax-path
+    counts → pruned re-scored vocab → re-encode. Two bounded driver
+    collects (seed vocab, path counts — both ≤ |vocab| rows); both
+    corpus passes are the distinct-word map + join shape."""
+    occ = _word_occurrences(docs, id_col, text_col)
+    vocab2 = em_rescored_vocab(occ, _seed_vocab(occ, top_multi))
+    return _doc_totals(occ, vocab2, id_col, "n_tokens_em", "score_em_e6")
 
 
 def reference_unigram_tokenize(
@@ -157,12 +275,9 @@ def reference_unigram_tokenize(
     """Pure-Python twin of :func:`unigram_tokenize_docs` for property
     tests: same vocab seed, same micro-nat quantization, same packed
     Viterbi. Returns {doc_id: (n_tokens, score_e6)}."""
-    import math
-    from collections import Counter
-
     occ: list[tuple[int, str]] = []
     for d, t in docs:
-        for w in t.strip().split():
+        for w in split_words(t):
             occ.append((d, w[:MAX_WORD]))
     if not occ:
         return {}
@@ -179,10 +294,8 @@ def reference_unigram_tokenize(
     )[:top_multi]
     vocab.update(dict(multi))
     total = sum(vocab.values())
-    def _half_up(v: float) -> int:  # engines round HALF_UP away from 0
-        return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
     score = {p: _half_up(math.log(c / total) * 1000000) for p, c in vocab.items()}
+
     def viterbi(w: str) -> tuple[int, int]:
         dp = [0] + [_SENTINEL] * len(w)
         for i in range(1, len(w) + 1):
@@ -203,194 +316,13 @@ def reference_unigram_tokenize(
     return out
 
 
-def unigram_tokenize_docs(
-    docs: DataFrame, id_col: str, text_col: str, top_multi: int = TOP_MULTI
-) -> DataFrame:
-    """Per-doc unigram tokenization stats: ``(id_col, n_tokens,
-    score_e6)`` — total Viterbi piece count and total best-path log
-    probability in micro-nats. Two bounded driver jobs (vocab collect)
-    then one corpus pass + distinct-word join + per-doc aggregate."""
-    occ = _word_occurrences(docs, id_col, text_col)
-    vocab_rows = unigram_vocab_scores(occ, top_multi).collect()
-    vocab = {r["piece"]: r["s"] for r in vocab_rows}
-    wd = viterbi_word_frame(occ, vocab)
-    return (
-        occ.join(wd, "w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_pieces").cast("long").alias("n_tokens"),
-            F.sum("score_e6").cast("long").alias("score_e6"),
-        )
-    )
-
-
-# ------------------------------------------------- hard-EM round
-# One Viterbi-EM (hard-EM) training round — the M-step of Kudo 2018
-# with the E-step's expectations replaced by the argmax segmentation
-# (the documented Viterbi-EM variant): re-count pieces along each
-# word's best path, re-score ln(count/total), PRUNE multi-char pieces
-# the paths never used (single chars keep a floor of 1 — the coverage
-# guarantee), and re-encode. Everything stays integer-exact: the
-# argmax choice is packed INTO the DP value as
-# ((cand + OFF) * 32 + j) — cand differences are ≥ 1 so the ×32 shift
-# preserves the score order exactly, and ties break to the LARGER j
-# (the shorter final piece) identically in Spark, DuckDB, and the
-# pure-Python reference.
-_CHOICE_OFF = 2 * 10**15
-
-
-def viterbi_choice_frame(occ: DataFrame, vocab: dict[str, int]) -> DataFrame:
-    """(w, v1..v16, b1..b16): the packed DP plus per-position argmax
-    predecessor, over distinct words. The vocab map literal rides as
-    ONE hoisted column — see :func:`viterbi_word_frame` (the analyzer
-    otherwise re-walks 64 inlined ~1500-node copies per eager
-    withColumns analysis)."""
-    m = F.map_from_arrays(
-        F.lit(list(vocab.keys())), F.lit([int(v) for v in vocab.values()])
-    )
-    df = occ.select("w").distinct().withColumn("_vm", m)
-    v: dict[int, Column] = {0: F.lit(0).cast("long")}
-    for i in range(1, MAX_WORD + 1):
-        cands = []
-        for j in range(max(0, i - MAX_PIECE), i):
-            s = F.element_at(
-                F.col("_vm"), F.col("w").substr(F.lit(j + 1), F.lit(i - j))
-            )
-            cand = F.coalesce(v[j] + s * 128 - 1, F.lit(_SENTINEL))
-            cands.append((cand + _CHOICE_OFF) * 32 + j)
-        packed = F.greatest(*cands) if len(cands) > 1 else cands[0]
-        # p{i} is materialized as its own column so b{i}/v{i} reference
-        # a cheap attribute, not a re-inlined copy of the greatest()
-        # tree — Catalyst's project collapsing otherwise duplicates the
-        # subtree per reference and the 16-level chain explodes
-        # exponentially (measured: analysis hangs).
-        df = df.withColumn(f"p{i}", packed)
-        p = F.col(f"p{i}")
-        # one batched analysis pass per level (withColumns), not one
-        # per column — the chain's cost is Catalyst passes, not rows
-        df = df.withColumns(
-            {
-                f"v{i}": F.when(
-                    F.length("w") >= i,
-                    ((p - p % 32) / 32).cast("long") - _CHOICE_OFF,
-                ).otherwise(v[i - 1]),
-                f"b{i}": F.when(
-                    F.length("w") >= i, (p % 32).cast("int")
-                ).otherwise(F.lit(0)),
-            }
-        )
-        v[i] = F.col(f"v{i}")
-    return df.drop("_vm", *[f"p{i}" for i in range(1, MAX_WORD + 1)])
-
-
-def path_pieces(choice_df: DataFrame) -> DataFrame:
-    """(w, pieces): each word's argmax segmentation, reconstructed by
-    walking the choice columns back from the word end — ≤ MAX_WORD
-    unrolled steps, each a 16-branch CASE on the current position."""
-    def b_at(pos: Column) -> Column:
-        out = F.lit(0)
-        for i in range(1, MAX_WORD + 1):
-            out = F.when(pos == i, F.col(f"b{i}")).otherwise(out)
-        return out.cast("int")
-
-    df = choice_df
-    pos: Column = F.length("w").cast("int")
-    piece_cols = []
-    for t in range(1, MAX_WORD + 1):
-        j = b_at(pos)
-        df = df.withColumns(
-            {
-                f"pc{t}": F.when(pos > 0, F.col("w").substr(j + 1, pos - j)),
-                f"pos{t}": F.when(pos > 0, j).otherwise(F.lit(0)).cast("int"),
-            }
-        )
-        piece_cols.append(F.col(f"pc{t}"))
-        pos = F.col(f"pos{t}")
-    return df.select(
-        "w",
-        F.filter(
-            F.array(*piece_cols), lambda x: x.isNotNull()
-        ).alias("pieces"),
-    )
-
-
-def em_rescored_vocab(
-    occ: DataFrame, vocab1: dict[str, int]
-) -> dict[str, int]:
-    """M-step: piece usage counts along every word's argmax path
-    (weighted by word frequency) → pruned, re-scored vocab. Multi-char
-    pieces with zero path usage drop out; single chars floor at 1."""
-    wf = occ.groupBy("w").agg(F.count("*").alias("cnt"))
-    # localCheckpoint truncates the 32-level DP+backtrack lineage
-    # before the join/explode below: otherwise optimizer project
-    # collapsing inlines each unrolled step into its consumers (every
-    # step references its predecessor ~17× inside the position CASE)
-    # and the expression tree grows exponentially — the same lineage
-    # cut the iterative connected-components operator uses. The frame
-    # is the zipf-bounded distinct-word set, not the corpus.
-    with intermediates.scope():
-        paths = intermediates.checkpoint(
-            path_pieces(viterbi_choice_frame(occ, vocab1)), eager=True
-        )
-        counts = (
-            paths.join(wf, "w")
-            .select(F.explode("pieces").alias("piece"), "cnt")
-            .groupBy("piece")
-            .agg(F.sum("cnt").cast("long").alias("c2"))
-            .collect()
-        )
-    c2 = {r["piece"]: r["c2"] for r in counts}
-    vocab2_counts: dict[str, int] = {}
-    for p in vocab1:
-        c = c2.get(p, 0)
-        if len(p) == 1:
-            vocab2_counts[p] = max(c, 1)
-        elif c >= 1:
-            vocab2_counts[p] = c
-    total = sum(vocab2_counts.values())
-    import math
-
-    def _half_up(v: float) -> int:
-        return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
-    return {
-        p: _half_up(math.log(c / total) * 1000000)
-        for p, c in vocab2_counts.items()
-    }
-
-
-def unigram_em_tokenize_docs(
-    docs: DataFrame, id_col: str, text_col: str, top_multi: int = TOP_MULTI
-) -> DataFrame:
-    """Per-doc stats after ONE hard-EM round: seed vocab → argmax-path
-    counts → pruned re-scored vocab → re-encode. Three bounded driver
-    collects (seed vocab, path counts — both ≤ |vocab| rows); both
-    corpus passes are the distinct-word DP + join shape."""
-    occ = _word_occurrences(docs, id_col, text_col)
-    v1_rows = unigram_vocab_scores(occ, top_multi).collect()
-    vocab1 = {r["piece"]: r["s"] for r in v1_rows}
-    vocab2 = em_rescored_vocab(occ, vocab1)
-    wd = viterbi_word_frame(occ, vocab2)
-    return (
-        occ.join(wd, "w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_pieces").cast("long").alias("n_tokens_em"),
-            F.sum("score_e6").cast("long").alias("score_em_e6"),
-        )
-    )
-
-
 def reference_unigram_em(
     docs: list[tuple[int, str]], top_multi: int = TOP_MULTI
 ) -> dict[int, tuple[int, int]]:
     """Pure-Python twin of :func:`unigram_em_tokenize_docs`."""
-    import math
-    from collections import Counter
-
     occ: list[tuple[int, str]] = []
     for d, t in docs:
-        for w in t.strip().split():
+        for w in split_words(t):
             occ.append((d, w[:MAX_WORD]))
     if not occ:
         return {}
@@ -407,10 +339,6 @@ def reference_unigram_em(
     )[:top_multi]
     vocab_counts.update(dict(multi))
     total = sum(vocab_counts.values())
-
-    def _half_up(v: float) -> int:
-        return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
     score1 = {
         p: _half_up(math.log(c / total) * 1000000)
         for p, c in vocab_counts.items()

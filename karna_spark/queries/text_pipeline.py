@@ -3167,14 +3167,14 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE encode (F36). Vocab = every single char + top-500 substrings
     (len ≤ 4) of the distinct-word frame by frequency, scores =
     micro-nat-quantized ln(count/total); encode = exact Viterbi
-    best-segmentation per DISTINCT word via a 16-level unrolled
-    integer DP whose value packs (score, piece count) into one BIGINT
+    best-segmentation per DISTINCT word by one integer DP in a narrow
+    Arrow map, its value packing (score, piece count) into one integer
     (128·score − pieces — max ⇒ best score, then fewest pieces), with
-    the vocab constant-folded into the plan as a map literal. The
-    corpus-scale pass is explode → distinct-word join → per-doc sum:
-    no Python, no transcendental outside the |vocab|-row frame. The
-    oracle replays the identical DP as a CTE chain, so the row
-    hash-certifies the full train+encode lifecycle."""
+    the collected vocab bound to the map body. The corpus-scale pass
+    is explode → distinct-word join → per-doc sum, with no
+    transcendental outside the |vocab|-row frame. The oracle replays
+    the same DP as an unrolled CTE chain, so the row hash-certifies
+    the full train+encode lifecycle."""
     from karna_spark.operators.unigram_tok import unigram_tokenize_docs
 
     docs = spread_scan(table(spark, sf_dir, "documents"))
@@ -3348,8 +3348,7 @@ def _unigram_em_oracle() -> str:
     position CASE), path-count aggregation, the prune/floor re-score,
     and the second plain DP — every CTE level MATERIALIZED so the
     engine cannot inline the unrolled chain into an exponential
-    expression (the same hazard the Spark side cuts with a
-    localCheckpoint)."""
+    expression."""
     from karna_spark.operators.unigram_tok import (
         _CHOICE_OFF,
         _SENTINEL,
@@ -3531,12 +3530,13 @@ def text_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F38 (train half): one hard-EM (Viterbi-EM) round of the unigram
     tokenizer — the documented SentencePiece training variant with the
     E-step's expectations replaced by argmax-path counts. Seed vocab →
-    choice-packed DP (the argmax predecessor rides INSIDE the packed
-    integer: ((cand+OFF)·32+j), exact because cand gaps ≥ 1) → unrolled
-    backtrack reconstructs each distinct word's best segmentation →
-    piece usage re-counts (weighted by word frequency) → PRUNE unused
-    multi-char pieces, floor single chars at 1 (coverage), re-score →
-    re-encode the corpus. Joins BPE merge-learning (F22), the quality
+    choice-packed DP per distinct word in a narrow Arrow map (the argmax
+    predecessor rides INSIDE the packed integer: ((cand+OFF)·32+j),
+    exact because cand gaps ≥ 1), whose backtrack yields the word's
+    best segmentation → piece usage re-counts (weighted by word
+    frequency) → PRUNE unused multi-char pieces, floor single chars at
+    1 (coverage), re-score → re-encode the corpus. Joins BPE
+    merge-learning (F22), the quality
     LR (U1), and k-means (F28) in the certified-iterative-trainer
     family. The oracle replays the whole round as MATERIALIZED CTE
     chains; per-doc round-2 token counts and micro-nat scores are

@@ -1408,6 +1408,36 @@ def test_learn_bpe_partitioning_invariant(spark):
     assert len(got) > 0
 
 
+def test_unigram_rows_independent_of_input_partitions(spark):
+    """The Viterbi is a narrow map over the distinct words, never one
+    task: both unigram entry points give the same per-doc rows, equal
+    to the pure-Python twins, at 1 and 4 input partitions."""
+    from karna_spark.operators.unigram_tok import (
+        reference_unigram_em,
+        reference_unigram_tokenize,
+        unigram_em_tokenize_docs,
+        unigram_tokenize_docs,
+    )
+    from karna_spark.queries.registry import table
+    from tests.conftest import SF_SMOKE
+
+    docs = table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    rows = [(r.doc_id, r.text) for r in docs.collect()]
+    for encode, reference in (
+        (unigram_tokenize_docs, reference_unigram_tokenize),
+        (unigram_em_tokenize_docs, reference_unigram_em),
+    ):
+        got = [
+            {
+                r[0]: (r[1], r[2])
+                for r in encode(docs.repartition(n), "doc_id", "text").collect()
+            }
+            for n in (1, 4)
+        ]
+        assert got[0] == got[1] == reference(rows)
+        assert len(got[0]) > 0
+
+
 def test_learn_bpe_empty_vocabulary(spark):
     from karna_spark.operators.bpe import learn_bpe
 

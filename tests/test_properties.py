@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -607,9 +607,11 @@ def test_ewma_fold_matches_python(spark, rows):
 # ------------------------------------------------- BPE apply (F36)
 # random ASCII words + random merge lists: the Spark transform/replace
 # chain must agree exactly with the pure-Python reference tokenizer
-# (same left-to-right non-overlapping per-rule semantics).
+# (same left-to-right non-overlapping per-rule semantics). NBSP, U+001C
+# and U+3000 are Unicode whitespace but not Java's \s: they stay inside
+# words on both sides.
 _BPE_WORD = st.text(
-    alphabet="abcdefghéß中", min_size=0, max_size=10
+    alphabet="abcdefghéß中\xa0\x1c\u3000", min_size=0, max_size=10
 )
 _BPE_MERGE_SYM = st.text(
     alphabet="abcdefghéß中", min_size=1, max_size=2
@@ -629,6 +631,7 @@ _BPE_MERGE_SYM = st.text(
         unique=True,
     ),
 )
+@example(docs=["ab\xa0ab", "a\x1cb\u3000ab"], merges=[("a", "b")])
 @settings(**SETTINGS)
 def test_bpe_encode_matches_reference(spark, docs, merges):
     from karna_spark.operators.bpe_apply import (
@@ -650,8 +653,11 @@ def test_bpe_encode_matches_reference(spark, docs, merges):
 # ------------------------------------------- unigram tokenizer (F38)
 # random words (unicode included): the Spark vocab-seed + packed
 # Viterbi DP must agree exactly with the pure-Python reference —
-# same truncation, same micro-nat quantization, same tie-breaks.
-_UNI_WORD = st.text(alphabet="abcdeéß中", min_size=1, max_size=20)
+# same truncation, same micro-nat quantization, same tie-breaks, same
+# ASCII-only word split (NBSP, U+001C and U+3000 stay inside words).
+_UNI_WORD = st.text(
+    alphabet="abcdeéß中\xa0\x1c\u3000", min_size=1, max_size=20
+)
 
 
 @given(
@@ -661,6 +667,7 @@ _UNI_WORD = st.text(alphabet="abcdeéß中", min_size=1, max_size=20)
         max_size=5,
     )
 )
+@example(docs=["ab\xa0cd ab"])
 @settings(**SETTINGS)
 def test_unigram_tokenize_matches_reference(spark, docs):
     from karna_spark.operators.unigram_tok import (
@@ -684,6 +691,7 @@ def test_unigram_tokenize_matches_reference(spark, docs):
         max_size=5,
     )
 )
+@example(docs=["ab\u3000cd ab\x1cab"])
 @settings(**SETTINGS)
 def test_unigram_em_round_matches_reference(spark, docs):
     """F38 train half: the hard-EM round (choice-packed DP → argmax
